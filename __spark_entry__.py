@@ -1431,12 +1431,10 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via the md5-portable hash (DuckDB recomputes
-    the identical per-word bits, so this row is fully oracle-checked; the
-    xxhash64 variant stays the faster scale default, pytest-pinned). Exact
-    copies must surface at hamming 0; drifted copies at small hamming."""
-    from ocr_spark.operators.dedup import simhash_md5_dup_pairs
-
+    """SimHash near-dup pairs on the md5 per-word hash (DuckDB recomputes
+    the identical bits, so this row is fully oracle-checked) — the same
+    operator the 500k scaling leg measures. Exact copies must surface at
+    hamming 0; drifted copies at small hamming."""
     docs = _docs_table(spark, sf_dir).filter(F.col("doc_id") < 100).select("doc_id", "text")
     near = docs.filter(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 400000).alias("doc_id"),
@@ -1448,10 +1446,9 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 blocks of 8 bits, PAIR-of-blocks candidate indexes (the ≥10⁹-doc
     # scale path: 2^16 buckets per index instead of 2^8): pigeonhole
     # guarantees full recall at hamming <= n_blocks-2 = 6, exactly the ask.
-    # The oracle's result set is {pairs at hamming <= 6} — candidate-scheme
-    # independent, so single-block and pair-index implementations both
-    # satisfy it; gating the pair-index path proves the scale design.
-    return simhash_md5_dup_pairs(un, max_hamming=6, n_blocks=8, multi_index=True).select(
+    # The oracle's result set is {pairs at hamming <= 6} — independent of
+    # the candidate scheme, so it checks recall as well as the hash.
+    return simhash_dup_pairs(un, max_hamming=6, n_blocks=8).select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
         "hamming",
@@ -3167,7 +3164,7 @@ def oracle_sql() -> dict[str, str]:
           from cnt group by doc_id
         )
         select d.doc_id,
-               coalesce(e.n, 0) as n_words,
+               cast(coalesce(e.n, 0) as bigint) as n_words,
                round(greatest(coalesce(ln(e.n) - e.s / e.n, 0.0), 0.0), 4) as entropy
         from documents d left join ent e using (doc_id)
     """
@@ -3194,7 +3191,7 @@ def oracle_sql() -> dict[str, str]:
         select d.doc_id,
                coalesce(a.text, '') as text,
                coalesce(a.n_chunks, 0) as n_chunks,
-               coalesce(a.n_kept, 0) as n_kept
+               cast(coalesce(a.n_kept, 0) as bigint) as n_kept
         from documents d left join agg a using (doc_id)
     """
     # ExactSubstr dedup: windows keyed by TEXT here (the Spark side keys on
@@ -3425,7 +3422,7 @@ def oracle_sql() -> dict[str, str]:
         select k.doc_id,
                coalesce(a.text, '') as text,
                coalesce(a.n_chunks, 0) as n_chunks,
-               coalesce(a.n_kept, 0) as n_kept
+               cast(coalesce(a.n_kept, 0) as bigint) as n_kept
         from kept k left join agg a using (doc_id)
     """
     sql["decontaminate"] = r"""

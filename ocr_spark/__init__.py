@@ -15,7 +15,7 @@ Layout:
                 vector math, text stats)
     operators/  DataFrame → DataFrame operators (extraction, structure,
                 embeddings, similarity, dedup, tags, scores, ann, media)
-    plans/      end-to-end pipelines (extract pipeline, salted heavy-doc path)
+    plans/      end-to-end pipelines (extract → questions/problems/embeddings)
     streaming/  incremental / foreachBatch wrappers
 """
 
@@ -29,7 +29,6 @@ _API = {
     "Catalog": "ocr_spark.storage",
     "run_stage": "ocr_spark.storage",
     "extract_docs": "ocr_spark.operators.extract",
-    "extract_docs_salted": "ocr_spark.operators.extract",
     "render_markdown": "ocr_spark.operators.extract",
     "extract_problems": "ocr_spark.operators.structure",
     "render_problems_markdown": "ocr_spark.operators.structure",

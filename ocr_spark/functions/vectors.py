@@ -56,27 +56,13 @@ def euclidean_distance(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def normalize(a: Column | str) -> Column:
-    """L2-normalize an array<float> column natively — float output.
-
-    PERFORMANCE FOOTGUN — prefer :func:`unit_vector` in any hot path: this
-    form references the norm inside a ``transform`` lambda, and Catalyst
-    re-inlines aliased expressions into HOF lambda bodies (no CSE there), so
-    the O(dim) norm is recomputed per ELEMENT — O(dim²) per row.
-    ``unit_vector`` computes the identical normalization in O(dim)/row.
-    Kept only for the float-typed output contract and as the documented
-    counter-example (tests pin that no operator path imports it)."""
-    n = l2_norm(a)
-    return F.transform(_c(a), lambda x: (x.cast("double") / n).cast("float"))
-
-
 def unit_vector(a: Column | str) -> Column:
     """L2-normalize with the norm evaluated ONCE per row, as array<double>.
 
-    ``normalize`` references the norm inside a ``transform`` lambda; Catalyst
-    re-inlines aliased expressions into HOF lambda bodies (no CSE there), so
-    that form recomputes the O(dim) norm per ELEMENT — O(dim²)/row. Here the
-    norm sits in ``array_repeat``'s argument — evaluated once, outside any
+    Referencing the norm inside a ``transform`` lambda would recompute the
+    O(dim) norm per ELEMENT — O(dim²)/row: Catalyst re-inlines aliased
+    expressions into HOF lambda bodies (no CSE there). Here the norm sits
+    in ``array_repeat``'s argument — evaluated once, outside any
     lambda — and the division is a ``zip_with`` over (vec, norm-array):
     O(dim)/row. Use below self-joins so per-pair work is a bare dot product
     (``cosine_similarity_unit``)."""

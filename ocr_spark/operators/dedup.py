@@ -3,13 +3,18 @@
 Beyond the reference's operator set (which only enforces key uniqueness,
 /root/reference/db/tags_schema.sql:37): exact, MinHash+LSH, SimHash and
 n-gram-Jaccard near-dup detection — the operations a 100 TB training-data
-pipeline needs. Everything is native column expressions (shingling, minhash
-signatures, banding and simhash are all ``transform``/``aggregate`` HOFs over
-``xxhash64`` — zero Python, so signature computation fuses into the scan).
+pipeline needs. Everything is native column expressions — zero Python.
+MinHash and SimHash signatures explode the words/shingles once per row and
+build per-doc minima/bit counters with map-side-combined aggregations (no
+expensive array referenced from a HOF lambda, where Catalyst has no CSE).
+MinHash hashes with ``xxhash64``; SimHash with md5, which DuckDB also
+computes, so the ``simhash_dups`` gate is fully oracle-checked.
 
-Scale design: candidate generation is always bucket-local (groupBy on a band
-hash / simhash prefix), never an O(n²) cross join; exact verification runs
-only inside candidate groups.
+Scale design: candidate generation is always bucket-local (join on a band
+hash / SimHash block-pair key), never an O(n²) cross join; exact
+verification runs only inside candidate groups, and cross-index duplicate
+pairs are dropped by per-row canonical-index filters, never a pair-stream
+shuffle.
 """
 
 from __future__ import annotations
@@ -93,29 +98,6 @@ def with_shingles(
     return w.withColumn(out_col, shingles).drop("__words")
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature: array of ``n_hashes`` minima of per-permutation
-    shingle hashes. Each permutation h is ``xxhash64(shingle, seed+h)``.
-
-    NB: the per-permutation salt must be bound via a real closure — a
-    two-parameter lambda (``lambda s, _h=h``) would be interpreted by
-    ``F.transform`` as an (element, index) lambda and silently receive the
-    array index instead of the salt.
-
-    PERFORMANCE WARNING: as a pure column expression this re-evaluates the
-    ``shingles`` argument once per permutation (Catalyst collapses projections
-    and re-inlines aliases, and codegen CSE cannot hoist out of lambda
-    bodies) — measured 30x slower than :func:`minhash_signatures` on real
-    text. Use it only where the shingle array is already a stored column;
-    the LSH pipeline uses the explode-based form below.
-    """
-
-    def _minhash(salt: int) -> Column:
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(salt))))
-
-    return F.array(*[_minhash(seed + h) for h in range(n_hashes)])
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -128,8 +110,10 @@ def minhash_signatures(
 
     Shingling runs ONCE per row; each shingle is hashed ``n_hashes`` times;
     per-permutation minima come from a map-side-combined ``min`` aggregation,
-    so the shuffle carries only ``n_hashes`` longs per document. Identical
-    output to :func:`minhash_signature`.
+    so the shuffle carries only ``n_hashes`` longs per document. (A
+    per-permutation ``array_min(transform(shingles, ...))`` column form
+    re-evaluates the shingle array once per permutation — no CSE in HOF
+    lambdas — and measured 30× slower.)
     """
     # explode_OUTER, deliberately: plain explode makes the optimizer infer a
     # `size(shingles) > 0` Filter and push it below the words projection,
@@ -518,85 +502,40 @@ def embedding_near_dup_ids(
     return pairs.select(F.col("id_b").alias(id_col)).distinct()
 
 
-def simhash64(col: Column | str, seed: int = 42) -> Column:
-    """64-bit SimHash of normalized text, fully native.
-
-    PERFORMANCE FOOTGUN — prefer :func:`simhash_signatures` in any corpus
-    path: Catalyst does no CSE inside HOF lambdas, so the ``xxhash64(w)``
-    referenced from the per-bit ``transform`` below is re-evaluated 64×
-    PER WORD (and HOF lambdas run interpreted, outside whole-stage
-    codegen) — measured ~60× slower than the exploded builder on a 120k-doc
-    corpus. This scalar form survives for single-value/debug use only.
-
-    Per word w: h = xxhash64(w, seed); bit j contributes +1 if set else −1 to
-    counter j; the final hash sets bit j when counter j > 0. Implemented as an
-    ``aggregate`` over a 64-length counter array. Column-valued shift amounts
-    go through ``call_function`` (the SQL ShiftLeft/ShiftRight expressions
-    accept arbitrary child expressions; only the typed wrapper is int-only).
-    """
-    words = F.split(normalized_text(col), " ")
-    bits = F.sequence(F.lit(0), F.lit(63))
-    counters = F.aggregate(
-        words,
-        F.transform(bits, lambda _: F.lit(0)),
-        lambda acc, w: F.zip_with(
-            acc,
-            F.transform(
-                bits,
-                lambda j: F.when(
-                    F.call_function(
-                        "shiftright", F.xxhash64(w, F.lit(seed)), j.cast("int")
-                    ).bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counters,
-            bits,
-            lambda c, j: F.when(
-                c > 0, F.call_function("shiftleft", F.lit(1).cast("long"), j.cast("int"))
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, sh) — the corpus-path SimHash builder: words EXPLODED, each
-    hashed ONCE (vs 64× inside :func:`simhash64`'s per-bit lambda — no CSE
-    in HOFs), 64 bit counters as map-side-combined conditional sums (the
-    shuffle carries 64 ints per doc), bits packed back into one long with
-    pure shift/mask — everything whole-stage-codegen'd. Bit-identical to
-    ``simhash64`` for non-null text; NULL text packs to 0 where the scalar
-    returns NULL (the :func:`simhash_bits_md5` convention)."""
+    """(id, sh:long) — 64-bit SimHash of normalized text. The per-word
+    64-bit hash is the first 16 hex chars of md5(word), a function Spark
+    and DuckDB evaluate identically, so the ``simhash_dups`` oracle
+    recomputes every bit.
+
+    Words are EXPLODED and each md5 parses ONCE into two 32-bit halves
+    (hex digits 9..16 are bits 0..31, digits 1..8 bits 32..63); the 64 bit
+    counters are map-side-combined conditional sums (the shuffle carries 64
+    ints per doc) and pack straight into one long with pure shift/mask —
+    no per-bit string parsing, no HOF lambda, no Python, no 64-int array.
+    NULL text packs to 0."""
     exploded = df.select(
         F.col(id_col).alias("id"),
         # outer: the optimizer's inferred size()>0 filter would re-evaluate
         # split per row (split of normalized text is never empty)
         F.explode_outer(F.split(normalized_text(text_col), " ")).alias("w"),
     )
-    hashed = exploded.select(
+    h = F.md5("w")
+    hexed = exploded.select(
         "id",
-        F.when(
-            F.col("w").isNotNull(), F.xxhash64("w", F.lit(seed))
-        ).alias("h"),
+        F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("__hi"),
+        F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("__lo"),
     )
-    counters = hashed.groupBy("id").agg(
+
+    def _bit(j: int) -> Column:
+        src = F.col("__lo") if j < 32 else F.col("__hi")
+        return F.shiftright(src, j % 32).bitwiseAND(F.lit(1))
+
+    counters = hexed.groupBy("id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"__c{j}")
+            F.sum(F.when(_bit(j) == 1, 1).otherwise(-1)).alias(f"__c{j}")
             for j in range(64)
         ]
     )
@@ -615,60 +554,6 @@ def simhash_signatures(
     )
 
 
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-    n_blocks: int = 4,
-) -> DataFrame:
-    """Hamming-style SimHash blocking: split the 64-bit hash into
-    ``n_blocks`` 16-bit blocks; near-dups (few differing bits) must share at
-    least one block → groupBy per block. Candidate pairs carry both hashes
-    for downstream Hamming verification. Cross-index duplicates are removed
-    by the canonical-index filter (:func:`_first_equal_block`) — a per-row
-    predicate, not a ``dropDuplicates`` exchange over the pair stream."""
-    base = simhash_signatures(df, text_col, id_col, seed)
-    width = 64 // n_blocks
-    blocks = base.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit((1 << width) - 1))
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("block", "block_val"),
-    )
-    a = blocks.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "block", "block_val")
-    b = blocks.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "block", "block_val")
-    return (
-        a.join(b, ["block", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.col("block")
-            == _first_equal_block(
-                F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
-            )
-        )
-        .select("id_a", "id_b", "sh_a", "sh_b")
-    )
-
-
-def _check_simhash_recall(max_hamming: int, n_blocks: int) -> None:
-    """Pigeonhole: a pair at hamming h shares ≥1 block only when
-    h < n_blocks. Asking for max_hamming ≥ n_blocks would SILENTLY miss
-    pairs whose differing bits spread across every block — refuse."""
-    if max_hamming >= n_blocks:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs n_blocks > max_hamming for "
-            f"guaranteed recall (got n_blocks={n_blocks}): pairs with one "
-            "differing bit per block would share no block and be missed"
-        )
-
-
 def _check_simhash_recall_multi(max_hamming: int, n_blocks: int) -> None:
     """Pair-of-blocks pigeonhole: h differing bits dirty at most h blocks,
     so ≥2 blocks stay clean — and some PAIR of clean blocks is shared —
@@ -682,36 +567,18 @@ def _check_simhash_recall_multi(max_hamming: int, n_blocks: int) -> None:
         )
 
 
-def _first_equal_block(xor64: Column, n_blocks: int, width: int) -> Column:
-    """Index of the FIRST equal block between two simhashes (least b whose
-    ``width``-bit slice of their xor is zero); NULL when no block is equal.
+def _first_equal_pair_idx(xor64: Column, n_blocks: int, width: int) -> Column:
+    """Least ``pidx = i*n_blocks + j`` over block pairs (i<j) with BOTH
+    blocks equal; NULL when none.
 
     Canonical-index dedup: a near-dup pair surfaces once per shared block
-    (index), so keeping it only where ``block == _first_equal_block(...)``
+    pair (index), so keeping it only where ``pidx == _first_equal_pair_idx``
     leaves exactly one copy — as a per-row, map-side filter. This replaces
     ``dropDuplicates([id_a, id_b])``, whose exchange shuffles the FULL
     candidate-pair stream (on a self-similar corpus, the largest dataset in
     the whole job: measured 135 s → 57 s on a 500k-doc corpus at 8 cores
     when removed). Every joined pair has its own index equal, so the least
     is non-NULL for real candidates and recall is untouched."""
-    mask = (1 << width) - 1
-    return F.least(
-        *[
-            F.when(
-                F.shiftright(xor64, b * width).bitwiseAND(F.lit(mask)) == 0,
-                F.lit(b),
-            )
-            for b in range(n_blocks)
-        ]
-    )
-
-
-def _first_equal_pair_idx(xor64: Column, n_blocks: int, width: int) -> Column:
-    """Least ``pidx = i*n_blocks + j`` over block pairs (i<j) with BOTH
-    blocks equal; NULL when none. The pair-of-blocks analogue of
-    :func:`_first_equal_block` — same canonical-index dedup, same shuffle
-    elimination, one surviving copy per pair across the C(n_blocks,2)
-    indexes."""
     mask = (1 << width) - 1
     eqs = [
         F.shiftright(xor64, b * width).bitwiseAND(F.lit(mask)) == 0
@@ -730,13 +597,11 @@ def _pair_index_candidates(
     base: DataFrame,
     n_blocks: int,
     width: int,
-    id_col: str = "id",
     payload_cols: tuple[str, ...] = (),
-    dedup: bool = True,
-    keep_index: bool = False,
 ) -> DataFrame:
-    """Multi-index SimHash blocking: candidate pairs share at least one
-    clean PAIR of blocks — C(n_blocks, 2) indexes, each keyed by the
+    """Multi-index SimHash blocking over ``base(id, block_0..block_{n-1},
+    *payload_cols)``: candidate pairs share at least one clean PAIR of
+    blocks — C(n_blocks, 2) indexes, each keyed by the
     concatenation of two block values (2·width bits).
 
     This is the ≥10⁹-doc scale fix for single-block bucketing: one 8-bit
@@ -748,23 +613,19 @@ def _pair_index_candidates(
 
     Shuffle shape: (id, payloads, pidx, pkey) rides the explode. Generate
     copies its child columns into every output row, so ``payload_cols``
-    must be NARROW scalars (the packed 64-bit hash halves: ≤16 bytes ×
-    C(n,2) copies per doc) — carrying them beats the alternative (two
-    id-keyed corpus-wide rejoins that each recompute the per-word hash
-    aggregation upstream: measured 3× full-scan duplication, zero
-    ReusedExchange). A WIDE payload (the 64-int bits array) must instead
-    rejoin on id after the pair join. Block values are materialized
-    columns, so the exploded array is cheap (no inferred-filter
-    re-substitution hazard).
+    must be NARROW scalars (the packed 8-byte hash × C(n,2) copies per
+    doc) — carrying them beats two id-keyed corpus-wide rejoins that each
+    recompute the per-word hash aggregation upstream (measured 3×
+    full-scan duplication, zero ReusedExchange). Block values are
+    materialized columns, so the exploded array is cheap (no
+    inferred-filter re-substitution hazard).
 
-    ``dedup=False`` returns raw per-index matches (a pair appears exactly
-    once per shared clean block-pair — each doc contributes one row per
-    index, so the per-index bucket join cannot repeat a pair) so callers
-    can apply cheap per-row filters: Hamming ≤ k on the carried payloads,
-    then the canonical-index filter (``pidx == _first_equal_pair_idx``,
-    pass ``keep_index=True`` to retain ``pidx``) which replaces the
-    ``dropDuplicates`` exchange entirely — no shuffle ever carries the
-    candidate-pair stream."""
+    Returns raw per-index matches with their ``pidx``: a pair appears
+    exactly once per shared clean block pair (each doc contributes one row
+    per index, so the per-index bucket join cannot repeat a pair). Callers
+    apply cheap per-row filters — Hamming ≤ k on the carried payloads, then
+    the canonical-index filter (:func:`_first_equal_pair_idx`) — instead of
+    a ``dropDuplicates`` exchange over the candidate-pair stream."""
     pairs = [(i, j) for i in range(n_blocks) for j in range(i + 1, n_blocks)]
     keys = F.array(
         *[
@@ -778,9 +639,7 @@ def _pair_index_candidates(
             for i, j in pairs
         ]
     )
-    ex = base.select(
-        F.col(id_col).alias("id"), *payload_cols, F.explode(keys).alias("k")
-    ).select(
+    ex = base.select("id", *payload_cols, F.explode(keys).alias("k")).select(
         "id", *payload_cols, F.col("k.pidx").alias("pidx"), F.col("k.pkey").alias("pkey")
     )
     a = ex.select(
@@ -797,13 +656,12 @@ def _pair_index_candidates(
     )
     out_cols = ["id_a", "id_b"] + [
         f"{p}_{s}" for p in payload_cols for s in ("a", "b")
-    ] + (["pidx"] if keep_index else [])
-    joined = (
+    ] + ["pidx"]
+    return (
         a.join(b, ["pidx", "pkey"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select(*out_cols)
     )
-    return joined.dropDuplicates(["id_a", "id_b"]) if dedup else joined
 
 
 def hamming64(a: Column | str, b: Column | str) -> Column:
@@ -818,198 +676,33 @@ def simhash_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    seed: int = 42,
-    n_blocks: int = 4,
-    multi_index: bool = False,
+    n_blocks: int = 8,
 ) -> DataFrame:
-    """SimHash near-dup pairs (xxhash64 scale default). ``multi_index=True``
-    switches candidate generation to the pair-of-blocks indexes
-    (:func:`_pair_index_candidates`) — same output set whenever both
-    schemes' recall guards hold, 2^(64/n_blocks)× more buckets per index."""
-    if multi_index:
-        _check_simhash_recall_multi(max_hamming, n_blocks)
-        width = 64 // n_blocks
-        base = simhash_signatures(df, text_col, id_col, seed)
-        for b in range(n_blocks):
-            base = base.withColumn(
-                f"block_{b}",
-                F.shiftright(F.col("sh"), b * width).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                ),
-            )
-        # carry the 8-byte hash through the explode (narrow payload — see
-        # _pair_index_candidates); Hamming verification and the
-        # canonical-index filter are both per-row, so NO shuffle ever
-        # carries the candidate-pair stream (the former dropDuplicates
-        # exchange dominated the job on self-similar corpora)
-        return (
-            _pair_index_candidates(
-                base, n_blocks, width, payload_cols=("sh",), dedup=False,
-                keep_index=True,
-            )
-            .withColumn("hamming", hamming64("sh_a", "sh_b"))
-            .filter(F.col("hamming") <= max_hamming)
-            .filter(
-                F.col("pidx")
-                == _first_equal_pair_idx(
-                    F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
-                )
-            )
-            .select("id_a", "id_b", "hamming")
+    """SimHash near-dup pairs (id_a < id_b, hamming ≤ ``max_hamming``) —
+    never all-pairs. Candidates share ≥1 PAIR of ``64/n_blocks``-bit blocks
+    (:func:`_pair_index_candidates`; recall guaranteed for hamming ≤
+    n_blocks−2, :func:`_check_simhash_recall_multi`). The 8-byte hash rides
+    the candidate explode, so Hamming verification and the canonical-index
+    filter are both per-row: NO shuffle ever carries the candidate-pair
+    stream (the former dropDuplicates exchange dominated the job on
+    self-similar corpora)."""
+    _check_simhash_recall_multi(max_hamming, n_blocks)
+    width = 64 // n_blocks
+    base = simhash_signatures(df, text_col, id_col)
+    for b in range(n_blocks):
+        base = base.withColumn(
+            f"block_{b}",
+            F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit((1 << width) - 1)),
         )
-    _check_simhash_recall(max_hamming, n_blocks)
     return (
-        simhash_candidates(df, text_col, id_col, seed, n_blocks)
+        _pair_index_candidates(base, n_blocks, width, payload_cols=("sh",))
         .withColumn("hamming", hamming64("sh_a", "sh_b"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_bits_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_blocks: int = 4,
-) -> DataFrame:
-    """(id, bits:array<int>[64], block_0..block_{n-1}:int) — the ORACLE-
-    PORTABLE SimHash: per-word 64-bit hash = first 16 hex chars of md5(word),
-    a function both Spark and DuckDB evaluate identically (unlike xxhash64,
-    which only Spark has — :func:`simhash_signatures` stays the faster
-    scale default).
-
-    Scale shape mirrors :func:`minhash_signatures`: words are EXPLODED, the
-    hash parses into two materialized 32-bit halves per word, and the 64
-    bit counters come from map-side-combined conditional sums (the shuffle
-    carries 64 ints per doc); bit tests are pure integer shift/mask on the
-    halves — no per-bit string parsing, no HOF-lambda re-evaluation, no
-    Python."""
-    width = 64 // n_blocks
-    # outer: avoids the optimizer's inferred size()>0 filter re-evaluating
-    # the split per row (split of normalized text is never empty)
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(F.split(normalized_text(text_col), " ")).alias("w"),
-    )
-    # the 64-bit value splits into two 32-bit halves parsed ONCE per word
-    # (r2 ran substring+conv per BIT — 64 string parses per occurrence; this
-    # is 2, with the per-bit tests pure integer shift/mask on the halves).
-    # hex digit k (1-based from the left) holds bits j with 16 - j//4 == k,
-    # so digits 9..16 are the LOW half (bits 0..31) and 1..8 the HIGH
-    # (bits 32..63) — same bit numbering as before, identical counters.
-    hexed = exploded.select(
-        "id",
-        F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("__hi"),
-        F.conv(F.substring(F.md5("w"), 9, 8), 16, 10).cast("long").alias("__lo"),
-    )
-
-    def _bit(j: int) -> Column:
-        src = F.col("__lo") if j < 32 else F.col("__hi")
-        return F.shiftright(src, j % 32).bitwiseAND(F.lit(1))
-
-    counters = hexed.groupBy("id").agg(
-        *[
-            F.sum(F.when(_bit(j) == 1, 1).otherwise(-1)).alias(f"__c{j}")
-            for j in range(64)
-        ]
-    )
-    bits = F.array(
-        *[F.when(F.col(f"__c{j}") > 0, 1).otherwise(0) for j in range(64)]
-    )
-    out = counters.select("id", bits.alias("bits"))
-    for b in range(n_blocks):
-        block_val = None
-        for i in range(width):
-            term = F.element_at(F.col("bits"), b * width + i + 1) * F.lit(1 << i)
-            block_val = term if block_val is None else block_val + term
-        out = out.withColumn(f"block_{b}", block_val)
-    return out
-
-
-def simhash_md5_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    multi_index: bool = False,
-) -> DataFrame:
-    """SimHash near-dup pairs with the md5-portable hash; Hamming verified
-    on the bit arrays. Never all-pairs.
-
-    ``multi_index=False``: candidates share ≥1 single block (pigeonhole:
-    recall guaranteed for hamming < n_blocks; one shuffle on
-    (block, block_val); 2^(64/n_blocks) buckets per index — only 256 at
-    n_blocks=8, a quadratic hazard at ≥10⁹ docs).
-    ``multi_index=True``: candidates share ≥1 PAIR of blocks
-    (:func:`_pair_index_candidates`; recall for hamming ≤ n_blocks−2;
-    2^(2·64/n_blocks) buckets per index — 65,536 at n_blocks=8). Same
-    output set whenever both recall guards hold.
-
-    Either way the 64 bits ride the candidate explode PACKED into two
-    longs (``bit_count(xor)`` Hamming) — carrying the 64-int bits array
-    through a Generate, or rejoining it on id afterwards, each measured
-    slower (the rejoin recomputes the per-word hash aggregation upstream:
-    3× full-scan duplication, zero ReusedExchange)."""
-    base = simhash_bits_md5(df, text_col, id_col, n_blocks)
-
-    # pack 32 bits starting at `start` into a long (element_at is 1-based)
-    def _pack(start: int) -> Column:
-        return sum(
-            F.element_at("bits", start + j + 1).cast("long")
-            * F.lit(1 << j).cast("long")
-            for j in range(32)
+        .filter(
+            F.col("pidx")
+            == _first_equal_pair_idx(
+                F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
+            )
         )
-
-    base = base.withColumn("__lo", _pack(0)).withColumn("__hi", _pack(32))
-    hamming = hamming64(F.col("__lo_a"), F.col("__lo_b")) + hamming64(
-        F.col("__hi_a"), F.col("__hi_b")
-    )
-    # full 64-bit xor reassembled from the halves (each half < 2^32, so the
-    # shift+or is exact) — feeds the canonical-index filters, which replace
-    # the dropDuplicates exchange with a per-row predicate (masking makes
-    # the arithmetic shiftright sign-extension irrelevant)
-    xor64 = F.shiftleft(
-        F.col("__hi_a").bitwiseXOR(F.col("__hi_b")), 32
-    ).bitwiseOR(F.col("__lo_a").bitwiseXOR(F.col("__lo_b")))
-    width = 64 // n_blocks
-    if multi_index:
-        _check_simhash_recall_multi(max_hamming, n_blocks)
-        cands = _pair_index_candidates(
-            base, n_blocks, width, payload_cols=("__lo", "__hi"), dedup=False,
-            keep_index=True,
-        ).filter(F.col("pidx") == _first_equal_pair_idx(xor64, n_blocks, width))
-    else:
-        _check_simhash_recall(max_hamming, n_blocks)
-        blocks = base.select(
-            "id",
-            "__lo",
-            "__hi",
-            F.posexplode(
-                F.array(*[F.col(f"block_{b}") for b in range(n_blocks)])
-            ).alias("block", "block_val"),
-        )
-        a = blocks.select(
-            F.col("id").alias("id_a"),
-            F.col("__lo").alias("__lo_a"),
-            F.col("__hi").alias("__hi_a"),
-            "block",
-            "block_val",
-        )
-        b = blocks.select(
-            F.col("id").alias("id_b"),
-            F.col("__lo").alias("__lo_b"),
-            F.col("__hi").alias("__hi_b"),
-            "block",
-            "block_val",
-        )
-        cands = (
-            a.join(b, ["block", "block_val"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(F.col("block") == _first_equal_block(xor64, n_blocks, width))
-        )
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

@@ -10,13 +10,8 @@ The primary implementation (:func:`extract_docs`) uses ONLY higher-order
 array functions (``transform`` / ``filter`` / ``flatten``) on the ``spans``
 column: a narrow, shuffle-free, Python-free projection that whole-stage
 codegen fuses into the scan. A 20k-span skew doc is just a big cell — no
-hot partition, no salting needed on this path.
-
-The salted exploded variant (:func:`extract_docs_salted`) exists for
-pipelines that must shuffle per-span (north_rule names salted repartitioning
-explicitly): it explodes spans with a salt bucket, processes
-``(doc_id, salt)`` groups, then reassembles per doc with an order-exact
-two-level sort. Tests assert both paths produce identical span sequences.
+hot partition, no salting needed on this path: a per-span shuffle costs far
+more than one heavy cell's regex time (BENCH/SCALING_RUN.md).
 
 Span semantics
 --------------
@@ -116,62 +111,6 @@ def extract_docs(docs: DataFrame, image_base_path: str = "images") -> DataFrame:
         ),
     )
     return docs.select("doc_id", redense.alias("spans"))
-
-
-def extract_docs_salted(
-    docs: DataFrame, image_base_path: str = "images", salt_buckets: int = 16,
-    chunk: int = 256,
-) -> DataFrame:
-    """Skew-safe exploded variant: explode → salted per-chunk processing →
-    order-exact reassembly (north_rule's salted-repartitioning path).
-
-    Spans are bucketed by ``floor(offset / chunk)`` so a 20k-span doc spreads
-    over ~80 tasks; reassembly is a two-level sort: ``sort_array`` inside each
-    chunk, then chunks ordered by chunk id, then ``flatten`` — giving exactly
-    the global ``offset`` order without a single-task global sort per doc.
-    """
-    ex = docs.select("doc_id", F.explode("spans").alias("s"))
-    ex = ex.withColumn("chunk_id", (F.col("s.offset") / F.lit(chunk)).cast("long"))
-    # salt only distributes rows of one doc across reducers; key stays exact
-    ex = ex.repartition(F.col("doc_id"), F.pmod(F.xxhash64("doc_id", "chunk_id"), F.lit(salt_buckets)))
-
-    doc_id = F.col("doc_id")
-    processed = ex.select(
-        "doc_id",
-        "chunk_id",
-        F.when(F.col("s.kind") == "media", F.array(F.col("s"))).otherwise(
-            _split_span(F.col("s"), doc_id, image_base_path)
-        ).alias("parts"),
-        F.col("s.offset").alias("orig_offset"),
-    )
-    # level 1: per (doc, chunk) — order parts by original offset
-    chunks = processed.groupBy("doc_id", "chunk_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("orig_offset", "parts"))),
-                lambda x: x["parts"],
-            )
-        ).alias("chunk_spans")
-    )
-    # level 2: per doc — order chunks by chunk_id, flatten, re-densify offsets
-    assembled = chunks.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_id", "chunk_spans"))),
-                lambda x: x["chunk_spans"],
-            )
-        ).alias("flat")
-    )
-    redense = F.transform(
-        F.col("flat"),
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return assembled.select("doc_id", redense.alias("spans"))
 
 
 def render_markdown(extracted: DataFrame) -> Column | DataFrame:

@@ -133,8 +133,8 @@ def portable_uniform(id_col: Column | str, seed: int = 0) -> Column:
     """Deterministic uniform in [0, 1) from (seed, id), portable to any
     engine with md5: first 8 hex chars of md5(seed || '|' || id) as an
     integer, divided by 16^8. DuckDB recomputes it digit-by-digit (strpos
-    over the hex alphabet) — same trick as the md5-portable SimHash oracle
-    (operators/dedup.simhash_md5_dup_pairs).
+    over the hex alphabet) — same trick as the SimHash oracle
+    (operators/dedup.simhash_signatures).
 
     32 bits of uniformity is plenty for mix rates; the value is exact in a
     double (< 2^53), so Spark and the oracle agree bit-for-bit."""

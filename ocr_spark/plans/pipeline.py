@@ -8,8 +8,7 @@ Stages (each an optional checkpoint via storage.run_stage):
                                   └─embed──────▶ embeddings
 
 All stage transforms are pure DataFrame functions, so the whole pipeline can
-also run UNCHECKPOINTED as one fused Catalyst plan (used by bench.py): the
-extraction stage is shuffle-free, problems adds one shuffle (doc_id), and
+also run UNCHECKPOINTED as one fused Catalyst plan: the extraction stage is shuffle-free, problems adds one shuffle (doc_id), and
 embeddings adds one Arrow-batched Python stage.
 """
 

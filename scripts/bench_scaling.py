@@ -105,11 +105,10 @@ JOBS = {{
         detect_regions(spark.read.parquet(corpus + "_tokens"),
                        column_width=400.0, gap_threshold=30.0)
     ),
-    # the gate's scale configuration: pair-of-blocks multi-index over the
-    # xxhash64 scale default (exploded simhash_signatures builder)
+    # the gate's operator: md5 per-word SimHash (exploded words, packed
+    # 64-bit hash) + pair-of-blocks candidate indexes
     "simhash": lambda: simhash_dup_pairs(
-        spark.read.parquet(corpus + "_text"),
-        max_hamming=3, n_blocks=8, multi_index=True
+        spark.read.parquet(corpus + "_text"), max_hamming=3, n_blocks=8
     ),
     # corpus-curation scale paths over the same rendered-text input:
     # chunk_dedup = the family's real corpus-wide shuffle (min-struct
@@ -205,11 +204,11 @@ JOBS = {{
     # (model-sized shuffles) + the broadcast-llr scoring join over the raw
     # pool (the classify joined shape), 2^16 buckets, unigram+bigram
     "dsir": lambda: _dsir_job(),
-    # connected components under a giant-DIAMETER component: a 50k-node
+    # connected components under a giant-DIAMETER component: a 200k-link
     # chain (worst case for any propagation scheme — min-label would need
-    # 50k rounds) + the gate's modular background pairs at 500k nodes.
-    # The alternating-star rounds bound is diameter-independent (~17
-    # rounds here); each round is two groupBy+join passes over a
+    # 200k rounds) + modular background pairs over 20M nodes (see
+    # _cc_skew_job). The alternating-star rounds bound is
+    # diameter-independent (~18 rounds here); each round is two groupBy+join passes over a
     # shrinking edge set, so the leg measures how the round-serialized
     # fixpoint loop scales N->4N (the per-round barrier is the risk,
     # not a hot key: every star pass is linear per node).
@@ -587,7 +586,7 @@ def main() -> None:
         "ann": "ANN top-k (random projection)",
         "boilerplate": "HTML boilerplate strip (W1)",
         "layout": "layout regions + reading order (W2)",
-        "simhash": "SimHash near-dup pairs (pair-of-blocks multi-index)",
+        "simhash": "SimHash near-dup pairs (md5 words, pair-of-blocks index)",
         "chunkdedup": "C4 chunk dedup (min-struct keeper + winners rebuild)",
         "repetition": "Gopher repetition stats (unioned token stream)",
         "decon": "eval-set decontamination (broadcast grams)",
@@ -603,7 +602,7 @@ def main() -> None:
         "dsir": "DSIR importance scoring (2-corpus fit + broadcast-llr join)",
         "substrdedup": "ExactSubstr dedup (dual-hash window keeper + rebuild)",
         "langid": "trained language ID (char-trigram NB, broadcast model)",
-        "ccskew": "connected components, 50k-diameter chain (alternating star)",
+        "ccskew": "connected components, 200k-link chain over 20M nodes (alternating star)",
     }
     extra_jobs = [j for j in jobs_run if j != "extract"]
     # _labels.get(j, j): an unlabeled job key must never KeyError AFTER the
@@ -654,11 +653,8 @@ Notes
   bandwidth; on a real multi-executor cluster the same plan shape scales
   linearly in executors as long as input splits >> total cores.
 - Skew handling: heavy docs (5k-20k spans) are single cells processed by
-  whole-stage codegen; at this size the narrow path beats the salted
-  exploded variant (`extract_docs_salted`, measured) because one cell's
-  regex time is far below shuffle cost. The salted path exists and is
-  equivalence-tested for when per-doc cell time dominates (million-span
-  docs).
+  whole-stage codegen; one cell's regex time is far below the cost of a
+  per-span shuffle, so there is no salted/exploded extraction path.
 """
     with open(os.path.join(REPO, "BENCH", "SCALING_RUN.md"), "w") as f:
         f.write(md)

@@ -21,7 +21,6 @@ from ocr_spark.operators.dedup import (
     jaccard_pairs,
     minhash_dedup,
     minhash_lsh_candidates,
-    simhash64,
     simhash_dup_pairs,
     word_shingles,
 )
@@ -79,78 +78,36 @@ def test_simhash_near_dup(spark, docs_df):
 
 
 def test_simhash_md5_variant_matches_python_oracle(spark, docs_df):
-    """The oracle-portable md5 SimHash must (a) agree with a pure-Python
-    reimplementation of the bit math, (b) behave like the xxhash64 variant
-    structurally: exact dup at hamming 0, near dup close, unrelated apart."""
+    """The md5 SimHash must agree with a pure-Python reimplementation of the
+    bit math, packed as a signed 64-bit long (test_simhash_near_dup checks
+    the pairs built from it)."""
     import hashlib
     import re as _re
 
-    from ocr_spark.operators.dedup import simhash_bits_md5, simhash_md5_dup_pairs
+    from ocr_spark.operators.dedup import simhash_signatures
 
-    def py_bits(text: str) -> list[int]:
+    def py_sh(text: str) -> int:
         words = _re.sub(r"\s+", " ", text.lower()).strip().split(" ")
         counters = [0] * 64
         for w in words:
-            h = hashlib.md5(w.encode()).hexdigest()[:16]
-            v = int(h, 16)
+            v = int(hashlib.md5(w.encode()).hexdigest()[:16], 16)
             for j in range(64):
                 counters[j] += 1 if (v >> j) & 1 else -1
-        return [1 if c > 0 else 0 for c in counters]
+        sh = sum(1 << j for j, c in enumerate(counters) if c > 0)
+        return sh - (1 << 64) if sh >= 1 << 63 else sh
 
-    got = {r.id: list(r.bits) for r in simhash_bits_md5(docs_df).collect()}
+    got = {r.id: r.sh for r in simhash_signatures(docs_df).collect()}
     for doc_id, text in DOCS:
-        assert got[doc_id] == py_bits(text), doc_id
-
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_md5_dup_pairs(docs_df, max_hamming=12, n_blocks=16).collect()
-    }
-    assert ("a1", "a2") in pairs and pairs[("a1", "a2")] == 0
-    assert ("a1", "a3") in pairs
-    assert ("b1", "b2") not in pairs
+        assert got[doc_id] == py_sh(text), doc_id
 
 
-def test_simhash_multi_index_matches_single_block(spark, docs_df):
-    """Pair-of-blocks candidates must yield EXACTLY the single-block result
-    set whenever both recall guards hold (the verified pairs are a pure
-    function of the hashes; only candidate pruning differs) — for both the
-    xxhash64 and md5 variants."""
-    from ocr_spark.operators.dedup import simhash_md5_dup_pairs
-
-    single = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_dup_pairs(docs_df, max_hamming=12, n_blocks=16).collect()
-    }
-    multi = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_dup_pairs(
-            docs_df, max_hamming=12, n_blocks=16, multi_index=True
-        ).collect()
-    }
-    assert single == multi and ("a1", "a2") in multi
-
-    single_md5 = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_md5_dup_pairs(docs_df, max_hamming=12, n_blocks=16).collect()
-    }
-    multi_md5 = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_md5_dup_pairs(
-            docs_df, max_hamming=12, n_blocks=16, multi_index=True
-        ).collect()
-    }
-    assert single_md5 == multi_md5 and ("a1", "a2") in multi_md5
-
-
-def test_simhash_multi_index_recall_guard(spark, docs_df):
+def test_simhash_pair_index_recall_guard(spark, docs_df):
     """h differing bits can dirty h blocks; fewer than 2 clean blocks ⇒ no
     shared pair is guaranteed — the guard must refuse, not silently miss."""
-    from ocr_spark.operators.dedup import simhash_md5_dup_pairs
-
     with pytest.raises(ValueError, match="pair-index recall"):
-        simhash_dup_pairs(docs_df, max_hamming=7, n_blocks=8, multi_index=True)
+        simhash_dup_pairs(docs_df, max_hamming=7, n_blocks=8)
     with pytest.raises(ValueError, match="pair-index recall"):
-        simhash_md5_dup_pairs(docs_df, max_hamming=15, n_blocks=16, multi_index=True)
+        simhash_dup_pairs(docs_df, max_hamming=15, n_blocks=16)
 
 
 def test_simhash_pair_index_occupancy_sublinear(spark):
@@ -165,7 +122,7 @@ def test_simhash_pair_index_occupancy_sublinear(spark):
     guarantee pinned here is the conservative 2× floor."""
     import os
 
-    from ocr_spark.operators.dedup import _pair_index_candidates, simhash_bits_md5
+    from ocr_spark.operators.dedup import _pair_index_candidates, simhash_signatures
 
     sf = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
@@ -178,7 +135,12 @@ def test_simhash_pair_index_occupancy_sublinear(spark):
     )
     n_docs = un.count()
     n_blocks, width = 8, 8
-    base = simhash_bits_md5(un, n_blocks=n_blocks)
+    base = simhash_signatures(un)
+    for b in range(n_blocks):
+        base = base.withColumn(
+            f"block_{b}",
+            F.shiftright("sh", b * width).bitwiseAND(F.lit((1 << width) - 1)),
+        )
 
     single_occ = (
         base.select(
@@ -214,8 +176,13 @@ def test_simhash_pair_index_occupancy_sublinear(spark):
     assert n_docs > 0
     assert 2 * pair_occ <= single_occ, (pair_occ, single_occ)
 
-    # candidate volume: pair-index candidates ⊆ never exceed single-block's
-    n_pair_cands = _pair_index_candidates(base, n_blocks, width).count()
+    # candidate volume: distinct pair-index candidates vs single-block's
+    n_pair_cands = (
+        _pair_index_candidates(base, n_blocks, width)
+        .select("id_a", "id_b")
+        .distinct()
+        .count()
+    )
     blocks = base.select(
         "id",
         F.posexplode(
@@ -268,11 +235,11 @@ def test_exploded_shingles_have_no_inferred_lambda_filter(spark, docs_df):
     full shingle expression into it with the split re-inlined inside the
     lambda — O(len²) per row, caught by jstack on the 47k-word corpus docs.
     explode_outer (arrays provably non-empty) generates no such filter."""
-    from ocr_spark.operators.dedup import minhash_signatures, simhash_bits_md5
+    from ocr_spark.operators.dedup import minhash_signatures, simhash_signatures
 
     for df in (
         minhash_signatures(docs_df, n_hashes=4),
-        simhash_bits_md5(docs_df),
+        simhash_signatures(docs_df),
     ):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         for line in plan.splitlines():
@@ -448,14 +415,10 @@ def test_simhash_canonical_index_emits_each_pair_once(spark, docs_df):
     """The canonical-index filter must leave EXACTLY one copy of every
     near-dup pair (the dropDuplicates it replaced guaranteed uniqueness;
     a filter bug would either duplicate pairs or drop them)."""
-    from ocr_spark.operators.dedup import simhash_dup_pairs, simhash_md5_dup_pairs
-
-    for fn, kw in [
-        (simhash_dup_pairs, {"max_hamming": 12, "n_blocks": 16}),
-        (simhash_dup_pairs, {"max_hamming": 12, "n_blocks": 16, "multi_index": True}),
-        (simhash_md5_dup_pairs, {"max_hamming": 12, "n_blocks": 16}),
-        (simhash_md5_dup_pairs, {"max_hamming": 12, "n_blocks": 16, "multi_index": True}),
-    ]:
-        pairs = [(r.id_a, r.id_b) for r in fn(docs_df, **kw).collect()]
-        assert len(pairs) == len(set(pairs)), (fn.__name__, kw)
-        assert pairs, (fn.__name__, kw)  # corpus has planted near-dups
+    for kw in (
+        {"max_hamming": 12, "n_blocks": 16},
+        {"max_hamming": 6, "n_blocks": 8},
+    ):
+        pairs = [(r.id_a, r.id_b) for r in simhash_dup_pairs(docs_df, **kw).collect()]
+        assert len(pairs) == len(set(pairs)), kw
+        assert pairs, kw  # corpus has planted near-dups

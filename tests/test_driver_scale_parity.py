@@ -35,8 +35,8 @@ def _emb(spark):
 # --------------------------------------------------------------------------
 # simhash_dups at full corpus scale: independent pure-Python SimHash oracle
 # --------------------------------------------------------------------------
-def _py_simhash64(text: str) -> int:
-    """Mirror of dedup.simhash_bits_md5: per-word 64-bit hash = first 16
+def _py_simhash(text: str) -> int:
+    """Mirror of dedup.simhash_signatures: per-word 64-bit hash = first 16
     hex chars of md5(word) (hi = digits 1-8, lo = digits 9-16); bit j reads
     (half >> (j % 32)) & 1; majority counter strictly > 0 sets the bit."""
     counters = [0] * 64
@@ -60,7 +60,7 @@ def test_simhash_dups_full_sf001_matches_python_oracle(spark):
     hamming<=6 set a brute-force Python SimHash computes — recall
     (pigeonhole at n_blocks-2) AND precision (no phantom pairs), with the
     hamming values exact."""
-    from ocr_spark.operators.dedup import simhash_md5_dup_pairs
+    from ocr_spark.operators.dedup import simhash_dup_pairs
 
     docs = _docs(spark).select("doc_id", "text")
     near = docs.filter(F.col("doc_id") % 4 == 0).select(
@@ -72,17 +72,13 @@ def test_simhash_dups_full_sf001_matches_python_oracle(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_md5_dup_pairs(
-            un, max_hamming=6, n_blocks=8, multi_index=True
-        ).collect()
+        for r in simhash_dup_pairs(un, max_hamming=6, n_blocks=8).collect()
     }
     # no duplicated pairs from the multi-index candidate streams
-    assert len(got) == simhash_md5_dup_pairs(
-        un, max_hamming=6, n_blocks=8, multi_index=True
-    ).count()
+    assert len(got) == simhash_dup_pairs(un, max_hamming=6, n_blocks=8).count()
 
     rows = un.collect()
-    sigs = {r["doc_id"]: _py_simhash64(r["text"]) for r in rows}
+    sigs = {r["doc_id"]: _py_simhash(r["text"]) for r in rows}
     ids = sorted(sigs)
     want = {}
     for i, a in enumerate(ids):

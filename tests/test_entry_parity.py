@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -42,6 +43,20 @@ def test_query_matches_oracle(spark, duck, name):
     spark_pdf = q(spark, SF_DIR).toPandas()
     duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
     assert_frames_match(name, spark_pdf, duck_pdf)
+
+
+@pytest.mark.parametrize(
+    "name, col",
+    [("token_entropy", "n_words"), ("chunk_dedup", "n_kept"),
+     ("curation_pipeline", "n_kept")],
+)
+def test_oracle_counts_are_integers(duck, name, col):
+    """DuckDB's sum() returns HUGEINT, which pandas renders as float64
+    (32.0 against Spark's 32). A compare that hashes each value's text
+    tells the two apart even though canon() folds 32.0 to 32, so the
+    oracle must cast."""
+    pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
+    assert pd.api.types.is_integer_dtype(pdf[col]), (name, col, pdf[col].dtype)
 
 
 def test_rows_only_queries(spark):

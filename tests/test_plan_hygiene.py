@@ -149,36 +149,6 @@ def test_allpairs_gate_routes_through_blocked_matmul(spark):
     assert "CartesianProduct" not in plan, plan[:1500]
 
 
-def test_no_operator_path_imports_the_normalize_footgun():
-    """functions.vectors.normalize recomputes the O(dim) norm per ELEMENT
-    (Catalyst re-inlines aliased exprs into HOF lambdas — no CSE there), so
-    it is O(dim²)/row; every operator path must use unit_vector instead.
-    Source-level pin so a future caller can't silently pick the slow form."""
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parents[1] / "ocr_spark"
-    # capture the whole import body — parenthesized multi-line form included
-    # (the style black produces), which a single-line [^\n]* scan missed —
-    # then look for the name inside it
-    imp = re.compile(
-        r"from ocr_spark\.functions\.vectors import\s*(\([^)]*\)|[^\n]*)"
-    )
-    name = re.compile(r"(?<![\w.])normalize\b")
-
-    def _uses_footgun(src: str) -> bool:
-        if re.search(r"vectors\.normalize\b", src):
-            return True
-        return any(name.search(m.group(1)) for m in imp.finditer(src))
-
-    offenders = [
-        str(p)
-        for p in root.rglob("*.py")
-        if p.name != "vectors.py" and _uses_footgun(p.read_text())
-    ]
-    assert not offenders, f"O(dim²) normalize used outside vectors.py: {offenders}"
-
-
 def test_media_meta_is_python_free(spark):
     """The metadata-only media query must stay on the native byte-stat path:
     no Arrow/Python stage may ship multi-KB blobs out of the JVM (the r1
@@ -219,22 +189,21 @@ def test_simhash_pair_stream_never_shuffles(spark):
     dropDuplicates([id_a, id_b]): that distinct's exchange shuffles the
     full candidate-pair stream, the largest dataset in the job on a
     self-similar corpus (measured 135 s -> ~105 s at 8 cores on 500k docs
-    when eliminated). No aggregate or exchange may key on the pair ids, in
-    either hash variant."""
+    when eliminated). No aggregate or exchange may key on the pair ids,
+    neither in the gate nor in the operator at the scaling leg's settings."""
     from ocr_spark.operators.dedup import simhash_dup_pairs
 
-    plan = _plan(spark, "simhash_dups")  # md5-portable multi-index gate
+    plan = _plan(spark, "simhash_dups")
     assert "HashAggregate(keys=[id_a" not in plan, plan[:2000]
     assert "hashpartitioning(id_a" not in plan, plan[:2000]
 
     rows = [(i, f"some words repeated {i % 7} across documents {i % 3}")
             for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for multi in (False, True):
-        df = simhash_dup_pairs(docs, max_hamming=3, n_blocks=8, multi_index=multi)
-        p = df._jdf.queryExecution().executedPlan().toString()
-        assert "HashAggregate(keys=[id_a" not in p, p[:2000]
-        assert "hashpartitioning(id_a" not in p, p[:2000]
+    df = simhash_dup_pairs(docs, max_hamming=3, n_blocks=8)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate(keys=[id_a" not in p, p[:2000]
+    assert "hashpartitioning(id_a" not in p, p[:2000]
 
 
 def test_ann_candidate_stream_never_distincts(spark):
