@@ -38,7 +38,6 @@ _API = {
     "top_k_per_query": "ocr_spark.operators.similarity",
     "ann_topk_per_query": "ocr_spark.operators.similarity",
     "ivf_topk_per_query": "ocr_spark.operators.similarity",
-    "all_pairs_similarity": "ocr_spark.operators.similarity",
     "all_pairs_similarity_blocked": "ocr_spark.operators.similarity",
     "exact_dedup": "ocr_spark.operators.dedup",
     "minhash_dedup": "ocr_spark.operators.dedup",

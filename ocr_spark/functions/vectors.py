@@ -37,11 +37,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_similarity_unit(a: Column | str, b: Column | str) -> Column:
-    """Fast path when both sides are unit-normalized (our embedding contract)."""
-    return dot(a, b)
-
-
 def euclidean_distance(a: Column | str, b: Column | str) -> Column:
     """(/root/reference/src/embedding_analyzer.py:89-91)"""
     return F.sqrt(
@@ -64,8 +59,7 @@ def unit_vector(a: Column | str) -> Column:
     expressions into HOF lambda bodies (no CSE there). Here the norm sits
     in ``array_repeat``'s argument — evaluated once, outside any
     lambda — and the division is a ``zip_with`` over (vec, norm-array):
-    O(dim)/row. Use below self-joins so per-pair work is a bare dot product
-    (``cosine_similarity_unit``)."""
+    O(dim)/row. Use below self-joins so per-pair work is a bare ``dot``."""
     c = _c(a)
     return F.zip_with(
         c,

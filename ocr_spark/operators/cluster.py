@@ -196,9 +196,8 @@ def semdedup(
         .agg(F.min("__id_b").alias("dup_witness"))
     )
     if big is not None:
-        id_type = embeddings.schema[id_col].dataType.simpleString()
         partials = _oversize_cell_witnesses(
-            big, threshold, id_col, vec_col, max_cell_size, id_type
+            big, threshold, id_col, vec_col, max_cell_size
         )
         # a doc's cell is entirely small or entirely big, so the union only
         # re-minimizes the big path's per-block-pair partial witnesses; the
@@ -221,7 +220,6 @@ def _oversize_cell_witnesses(
     id_col: str,
     vec_col: str,
     block_target: int,
-    id_type: str,
 ) -> DataFrame:
     """Partial duplicate witnesses for rows of OVERSIZED cells — the
     giant-cell half of :func:`semdedup`.
@@ -281,10 +279,11 @@ def _oversize_cell_witnesses(
         F.col("__k.bj").alias("__bj"),
     )
 
-    out_schema = f"{id_col} {id_type}, dup_witness {id_type}"
+    id_ddl = big.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_ddl}, dup_witness {id_ddl}"
     id_dtype = (
         "int64"
-        if id_type in ("long", "int", "bigint", "smallint", "tinyint")
+        if id_ddl in ("long", "int", "bigint", "smallint", "tinyint")
         else "object"
     )
 

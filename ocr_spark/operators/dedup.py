@@ -342,8 +342,6 @@ def dup_clusters(
     nodes: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iter: int = 20,
-    allow_partial: bool = False,
-    method: str = "star",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over duplicate pairs → (id, cluster), where
@@ -351,32 +349,21 @@ def dup_clusters(
     matters: A≈B and B≈C must share one cluster even when A and C are not a
     candidate pair themselves.
 
-    Two methods, property-tested equal (tests/test_dedup_textstats.py):
+    Alternating large-star/small-star (Kiveris et al. 2014): rounds are
+    bounded O(log² n) in component size, INDEPENDENT of graph diameter, so
+    a pathological 10⁶-link chain at 100× scale converges in ~a dozen
+    rounds instead of the 10⁶ that min-label propagation would need. Each
+    round is two groupBy+join passes over the (shrinking) edge set and a
+    localCheckpoint (flat plans); the driver-side loop is a convergence
+    CHECK (one bounded action per round), not a data path. ``nodes``
+    (optional) adds isolated ids as singleton clusters. ``stats`` (optional
+    dict) receives ``{"rounds": n}`` for diagnostics.
 
-    - ``"star"`` (default): alternating large-star/small-star (Kiveris et
-      al. 2014) — rounds bounded O(log² n) in component size, INDEPENDENT
-      of graph diameter, so a pathological 10⁶-link chain at 100× scale
-      converges in ~a dozen rounds instead of 10⁶. Each round is two
-      groupBy+join passes over the (shrinking) edge set.
-    - ``"propagation"``: min-label propagation (the Pregel/GraphX shape as
-      DataFrame joins) — one join+agg per round but O(diameter) rounds;
-      cheaper per round on the shallow 2–4-hop clusters dedup typically
-      produces.
-
-    Both localCheckpoint per round (flat plans); the driver-side loop is a
-    convergence CHECK (one bounded action per round), not a data path.
-    ``nodes`` (optional) adds isolated ids as singleton clusters. ``stats``
-    (optional dict) receives ``{"rounds": n, "method": ...}`` for
-    diagnostics.
-
-    If the method has not converged after ``max_iter`` rounds the result
-    would be silently split; this RAISES instead unless
-    ``allow_partial=True``.
+    If the edge set has not reached its fixpoint after ``max_iter`` rounds
+    the result would be silently split, so this RAISES instead.
     """
     if max_iter < 1:
         raise ValueError("dup_clusters needs max_iter >= 1")
-    if method not in ("star", "propagation"):
-        raise ValueError(f"unknown method {method!r}")
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
@@ -387,62 +374,21 @@ def dup_clusters(
         members = members.unionByName(
             nodes.select(F.col(id_col).alias("id"))
         ).distinct()
-
-    if method == "star":
-        canon = edges.filter(F.col("src") > F.col("dst")).select(
-            F.col("src").alias("u"), F.col("dst").alias("v")
-        )
-        mapping, rounds, converged = _star_components(canon, max_iter)
-        if stats is not None:
-            stats.update(rounds=rounds, method=method)
-        if not converged and not allow_partial:
-            raise RuntimeError(
-                f"dup_clusters did not converge within max_iter={max_iter} "
-                "rounds — raise max_iter or pass allow_partial=True"
-            )
-        return members.join(mapping, "id", "left").select(
-            F.col("id").alias(id_col),
-            F.coalesce("label", "id").alias("cluster"),
-        )
-
-    labels = members.select("id", F.col("id").alias("label")).localCheckpoint()
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        if not allow_partial:
-            raise RuntimeError(
-                f"dup_clusters did not converge within max_iter={max_iter} "
-                f"rounds ({changed} labels still changing) — raise max_iter "
-                "(graph diameter bound) or pass allow_partial=True"
-            )
+    canon = edges.filter(F.col("src") > F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    )
+    mapping, rounds, converged = _star_components(canon, max_iter)
     if stats is not None:
-        stats.update(rounds=rounds, method=method)
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster"))
+        stats.update(rounds=rounds)
+    if not converged:
+        raise RuntimeError(
+            f"dup_clusters did not converge within max_iter={max_iter} rounds"
+            " — raise max_iter"
+        )
+    return members.join(mapping, "id", "left").select(
+        F.col("id").alias(id_col),
+        F.coalesce("label", "id").alias("cluster"),
+    )
 
 
 def minhash_dedup_clustered(

@@ -230,10 +230,9 @@ def pack_sequences(
     # bomb the docstring warns about.  Numeric ids keep the documented
     # growth-stable doc_id % n_shards layout; string ids shard by xxhash64
     # (deterministic, uniform) instead of erroring.
-    id_type = docs.schema[id_col].dataType
     shard_src = (
         F.col(id_col)
-        if isinstance(id_type, NumericType)
+        if isinstance(docs.schema[id_col].dataType, NumericType)
         else F.xxhash64(F.col(id_col))
     )
     shard = F.pmod(shard_src, F.lit(n_shards)).cast("int")

@@ -12,9 +12,11 @@ Scale notes
   heap + driver merge — no global sort shuffle).
 * query-batch top-k: small query side is broadcast; per-query ranking uses a
   window over the query id, which shuffles once on query_id.
-* all-pairs at 10^12 scale is infeasible brute-force; :func:`lsh_bucket_pairs`
-  gives the banded-LSH pruning path (candidate pairs only from shared
-  buckets), with exact cosine re-scoring inside buckets.
+* exact all-pairs (J2) is :func:`all_pairs_similarity_blocked`: one BLAS
+  matmul per hash-block pair, never a per-pair expression cross join. At
+  10^12 pairs brute force is infeasible; :func:`lsh_bucket_pairs` gives the
+  banded-LSH pruning path (candidate pairs only from shared buckets), with
+  exact cosine re-scoring inside buckets.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import pandas as pd  # module-level: pandas-UDF type hints resolve from here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.vectors import cosine_similarity, cosine_similarity_unit
+from ocr_spark.functions.vectors import cosine_similarity
 
 
 def top_k_similar(
@@ -34,13 +36,11 @@ def top_k_similar(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     exclude_id: str | None = None,
-    unit: bool = False,
 ) -> DataFrame:
     """O1: top-k by cosine to one query vector (defaults k=10, threshold=0.8
     per /root/reference/src/db_utils.py:261)."""
     q = F.array(*[F.lit(float(x)) for x in query_vector])
-    sim = cosine_similarity_unit(vec_col, q) if unit else cosine_similarity(vec_col, q)
-    out = embeddings.withColumn("similarity", sim)
+    out = embeddings.withColumn("similarity", cosine_similarity(vec_col, q))
     if exclude_id is not None:
         out = out.filter(F.col(id_col) != F.lit(exclude_id))
     return (
@@ -76,41 +76,6 @@ def top_k_per_query(
         .filter(F.col("similarity") >= F.lit(threshold))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def all_pairs_similarity(
-    embeddings: DataFrame,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    keep_symmetric: bool = False,
-) -> DataFrame:
-    """J2: all-pairs cosine ≥ threshold (reference's e1.id != e2.id self-join,
-    /root/reference/README.md:261-270). Brute-force — correctness baseline;
-    use :func:`lsh_bucket_pairs` at scale.
-
-    Each side is L2-normalized below the join via
-    :func:`~ocr_spark.functions.vectors.unit_vector` — the norm is evaluated
-    once per ROW (zip_with against an array_repeat of the scalar, never
-    inside a HOF lambda where Catalyst would re-inline it per element) — so
-    per-pair work is a bare dot product instead of dot + two norms
-    (measured ~5x faster than naive ``cosine_similarity`` on raw vectors)."""
-    from ocr_spark.functions.vectors import unit_vector
-
-    a = embeddings.select(
-        F.col(id_col).alias("id_a"), unit_vector(vec_col).alias("vec_a")
-    )
-    b = embeddings.select(
-        F.col(id_col).alias("id_b"), unit_vector(vec_col).alias("vec_b")
-    )
-    cond = (F.col("id_a") != F.col("id_b")) if keep_symmetric else (F.col("id_a") < F.col("id_b"))
-    return (
-        a.crossJoin(b)
-        .filter(cond)
-        .withColumn("similarity", cosine_similarity_unit("vec_a", "vec_b"))
-        .filter(F.col("similarity") >= F.lit(threshold))
-        .select("id_a", "id_b", "similarity")
     )
 
 
@@ -367,10 +332,9 @@ def ivf_centroid_pick(
     idiom as mixing.pack_sequences' shard derivation)."""
     from pyspark.sql.types import NumericType
 
-    id_type = embeddings.schema[id_col].dataType
     id_num = (
         F.col(id_col).cast("long")
-        if isinstance(id_type, NumericType)
+        if isinstance(embeddings.schema[id_col].dataType, NumericType)
         # bounded to 2^31 so the LCG multiply cannot overflow a long
         else F.pmod(F.xxhash64(F.col(id_col)), F.lit(2**31))
     )
@@ -517,18 +481,14 @@ def ivf_topk_per_query(
         {"cell": i, "cvec": r["cvec"]} for i, r in enumerate(cent_rows)
     ]
     spark = embeddings.sparkSession
-
-    def _with_cells(df: DataFrame, vec: Column, n: int, rows) -> DataFrame:
-        return with_best_cells(spark, df, vec, n, rows)
-
     for _ in range(refine_iters):
         cent_rows = lloyd_iteration(
             spark, embeddings, cent_rows, vec_col=vec_col
         )
 
-    assigned = _with_cells(embeddings, F.col(vec_col), 1, cent_rows).withColumn(
-        "cell", F.element_at("__cells", 1)
-    ).drop("__cells")
+    assigned = with_best_cells(
+        spark, embeddings, F.col(vec_col), 1, cent_rows
+    ).withColumn("cell", F.element_at("__cells", 1)).drop("__cells")
     # explode_outer, NOT explode: plain explode makes the optimizer infer a
     # size(__cells)>0 filter and push it below the projection, re-substituting
     # the full _best_cells centroid-scoring expression (the O(n_cells x dim)
@@ -536,8 +496,8 @@ def ivf_topk_per_query(
     # inferred-filter pitfall pinned in tests/test_plan_hygiene.py. __cells is
     # provably non-empty (slice of the sorted non-empty centroid array), so
     # the outer form is semantics-identical.
-    probed = _with_cells(
-        queries, F.col(query_vec_col), n_probe, cent_rows
+    probed = with_best_cells(
+        spark, queries, F.col(query_vec_col), n_probe, cent_rows
     ).withColumn("cell", F.explode_outer("__cells")).drop("__cells")
     cand = assigned.join(probed, "cell").filter(
         F.col(id_col) != F.col(query_id_col)
@@ -607,7 +567,6 @@ def all_pairs_similarity_blocked(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     n_blocks: int = 4,
-    id_type: str = "long",
 ) -> DataFrame:
     """Block-partitioned brute-force all-pairs cosine — the scale design.
 
@@ -615,10 +574,11 @@ def all_pairs_similarity_blocked(
     block-pair it participates in (factor ≤ n_blocks), then one
     ``applyInPandas`` per block-pair computes the full cosine submatrix with
     a single numpy/BLAS matmul and emits only pairs ≥ threshold. Same
-    O(n²) math as :func:`all_pairs_similarity` but ~100x less per-pair
+    O(n²) math as a per-pair expression cross join but ~100x less per-pair
     overhead (matmul vs per-pair expression eval), and each task's working
     set is two blocks — size n/n_blocks to fit executor memory at any corpus
-    size. Output pairs are oriented min(id) < max(id).
+    size. Output pairs are oriented min(id) < max(id); the id type is read
+    from the schema, so string ids work as well as numeric ones.
     """
     e = embeddings.select(
         F.col(id_col).alias("id"),
@@ -642,7 +602,8 @@ def all_pairs_similarity_blocked(
         ).alias("k"),
     ).filter((F.col("k.bi") == F.col("blk")) | (F.col("k.bj") == F.col("blk")))
 
-    out_schema = f"id_a {id_type}, id_b {id_type}, similarity double"
+    id_ddl = embeddings.schema[id_col].dataType.simpleString()
+    out_schema = f"id_a {id_ddl}, id_b {id_ddl}, similarity double"
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -677,7 +638,6 @@ def most_least_similar_pair(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     n_blocks: int = 4,
-    id_type: str = "long",
 ) -> DataFrame:
     """A7: argmax/argmin similarity pair
     (/root/reference/src/embedding_analyzer.py:245-259).
@@ -689,8 +649,7 @@ def most_least_similar_pair(
     final agg is a map-side-combining max_by/min_by: the only full-table
     traffic is one row per partition into the driver-side merge."""
     pairs = all_pairs_similarity_blocked(
-        embeddings, threshold=-2.0, id_col=id_col, vec_col=vec_col,
-        n_blocks=n_blocks, id_type=id_type,
+        embeddings, threshold=-2.0, id_col=id_col, vec_col=vec_col, n_blocks=n_blocks
     )
     # deterministic tiebreak (duplicate vectors tie at similarity 1.0):
     # among equal-similarity pairs take the smallest (id_a, id_b). The max

@@ -77,28 +77,27 @@ def run_pipeline_checkpointed(
     year: int = 2024,
     n_partitions: int = 8,
     run_id: str | None = None,
-    granular: bool = False,
 ) -> dict[str, DataFrame]:
     """Checkpointed pipeline: every stage materializes to the catalog with a
     per-partition manifest; re-running after a crash resumes from the first
     incomplete partition of the first incomplete stage (F1/F2 semantics)."""
     extracted = run_stage(
         catalog, "extracted", docs, extract_docs,
-        n_partitions=n_partitions, run_id=run_id, lineage="docs", granular=granular,
+        n_partitions=n_partitions, run_id=run_id, lineage="docs",
     )
     questions = run_stage(
         catalog, "questions", extracted,
         lambda df: questions_from_extracted(df, year=year),
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted", granular=granular,
+        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
     )
     problems = run_stage(
         catalog, "problems", extracted, extract_problems,
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted", granular=granular,
+        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
     )
     embeddings = run_stage(
         catalog, "embeddings", extracted,
         lambda df: embeddings_from_extracted(df, dim=dim),
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted", granular=granular,
+        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
     )
     return {
         "extracted": extracted,

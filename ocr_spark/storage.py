@@ -287,129 +287,76 @@ def run_stage(
     run_id: str | None = None,
     lineage: str | None = None,
     error_col: str | None = None,
-    fail_after_partitions: int | None = None,
-    granular: bool = True,
 ) -> DataFrame:
     """Run one checkpointed pipeline stage, resumable per partition.
 
     * input rows are assigned a deterministic ``__pid`` bucket;
     * buckets already ``completed`` in the manifest (same stage+lineage) are
       skipped entirely — a re-run after a crash is a no-op for them;
-    * ``granular=True``: each pending bucket is transformed and written
-      independently (output dir ``{stage}/__pid={p}``), then its manifest row
-      is appended — the write is atomic per bucket via staging-dir rename.
-      Finest resume granularity; one Spark job per bucket.
-    * ``granular=False`` (throughput mode): ALL pending buckets run in ONE
-      Spark job (dynamic partition overwrite on ``__pid``); manifest rows land
-      after the job commits. A crash mid-job redoes all pending buckets but
-      stays idempotent — completed buckets from previous runs are untouched.
-      Requires ``transform`` to preserve ``key_col`` so ``__pid`` can be
-      recomputed on the output.
+    * ALL pending buckets run in ONE Spark job that writes
+      ``{stage}/__pid=p`` by dynamic partition overwrite; their manifest
+      rows land after the job commits. A crash before the manifest lands
+      redoes every pending bucket on the next run, overwriting whatever it
+      wrote, so the output stays duplicate-free; buckets completed by
+      earlier runs are untouched. ``transform`` must keep ``key_col`` so
+      ``__pid`` can be recomputed on its output.
     * when ``error_col`` is set, rows with a non-null error value are split to
       ``{stage}_errors`` and counted in the manifest instead of failing the
       stage (per-item error isolation, F3).
 
-    ``fail_after_partitions`` is a test hook: raise after N buckets to
-    simulate a mid-run crash (granular mode only).
-
-    Returns the full stage output (read back from the table).
+    Returns the full stage output, read back once from the table directory
+    with the transform's schema (so an empty stage reads back as zero rows;
+    empty buckets have no directory).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     lineage = lineage or stage + ":input"
     done = catalog.completed_partitions(stage, lineage)
-    bucketed = input_df.withColumn("__pid", partition_id_col(key_col, n_partitions))
     pending = [p for p in range(n_partitions) if p not in done]
+    pid = partition_id_col(key_col, n_partitions)
+    sub = input_df.withColumn("__pid", pid).filter(F.col("__pid").isin(pending))
+    out = transform(sub.drop("__pid"))
+    if error_col is not None:
+        bad = out.filter(F.col(error_col).isNotNull())
+        out = out.filter(F.col(error_col).isNull()).drop(error_col)
+    out = out.withColumn("__pid", pid)
 
     table_dir = catalog.path(stage)
     os.makedirs(table_dir, exist_ok=True)
 
-    if not granular and pending:
-        sub = bucketed.filter(F.col("__pid").isin(pending)).drop("__pid")
-        in_counts = {
-            r["__pid"]: r["count"]
-            for r in bucketed.filter(F.col("__pid").isin(pending))
-            .groupBy("__pid").count().collect()
-        }
-        out = transform(sub)
+    def read_table() -> DataFrame:
+        return catalog.spark.read.schema(out.schema).parquet(table_dir)
+
+    if pending:
+        in_counts = _counts_by_pid(sub)
+        err_counts = {}
         if error_col is not None:
-            bad = out.filter(F.col(error_col).isNotNull())
-            err_counts = {
-                r["__pid"]: r["count"]
-                for r in bad.withColumn("__pid", partition_id_col(key_col, n_partitions))
-                .groupBy("__pid").count().collect()
-            }
+            err_counts = _counts_by_pid(bad.withColumn("__pid", pid))
             if err_counts:
                 bad.write.mode("append").parquet(catalog.path(stage + "_errors"))
-            out = out.filter(F.col(error_col).isNull()).drop(error_col)
-        else:
-            err_counts = {}
-        out = out.withColumn("__pid", partition_id_col(key_col, n_partitions))
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__pid")
             .parquet(table_dir)
         )
-        out_counts = {
-            r["__pid"]: r["count"]
-            for r in catalog.spark.read.parquet(table_dir)
-            .filter(F.col("__pid").isin(pending)).groupBy("__pid").count().collect()
-        }
+        out_counts = _counts_by_pid(read_table().filter(F.col("__pid").isin(pending)))
         catalog.append_manifest(
             [
                 {
                     "stage": stage,
-                    "partition_id": pid,
+                    "partition_id": p,
                     "status": "completed",
-                    "rows_in": in_counts.get(pid, 0),
-                    "rows_out": out_counts.get(pid, 0),
-                    "errors": err_counts.get(pid, 0),
+                    "rows_in": in_counts.get(p, 0),
+                    "rows_out": out_counts.get(p, 0),
+                    "errors": err_counts.get(p, 0),
                     "lineage": lineage,
                     "run_id": run_id,
                 }
-                for pid in pending
+                for p in pending
             ]
         )
-        return catalog.spark.read.parquet(table_dir).drop("__pid")
+    return read_table().drop("__pid")
 
-    processed = 0
-    for pid in pending:
-        if fail_after_partitions is not None and processed >= fail_after_partitions:
-            raise RuntimeError(f"simulated crash after {processed} partitions")
-        part_in = bucketed.filter(F.col("__pid") == pid).drop("__pid")
-        rows_in = part_in.count()
-        out = transform(part_in)
-        if error_col is not None:
-            bad = out.filter(F.col(error_col).isNotNull())
-            good = out.filter(F.col(error_col).isNull()).drop(error_col)
-            n_err = bad.count()
-            if n_err:
-                bad.write.mode("append").parquet(catalog.path(stage + "_errors"))
-            out = good
-        else:
-            n_err = 0
-        part_dir = os.path.join(table_dir, f"__pid={pid}")
-        staging = part_dir + ".__staging__" + run_id
-        out.write.mode("overwrite").parquet(staging)
-        rows_out = catalog.spark.read.parquet(staging).count()
-        shutil.rmtree(part_dir, ignore_errors=True)
-        os.rename(staging, part_dir)
-        catalog.append_manifest(
-            [
-                {
-                    "stage": stage,
-                    "partition_id": pid,
-                    "status": "completed",
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "errors": n_err,
-                    "lineage": lineage,
-                    "run_id": run_id,
-                }
-            ]
-        )
-        processed += 1
 
-    return catalog.spark.read.option("basePath", table_dir).parquet(
-        *[os.path.join(table_dir, f"__pid={p}") for p in range(n_partitions)]
-    ).drop("__pid")
+def _counts_by_pid(df: DataFrame) -> dict[int, int]:
+    return {r["__pid"]: r["count"] for r in df.groupBy("__pid").count().collect()}

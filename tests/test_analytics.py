@@ -17,7 +17,6 @@ from ocr_spark.operators.scores import (
     weighted_scores,
 )
 from ocr_spark.operators.similarity import (
-    all_pairs_similarity,
     lsh_bucket_pairs,
     top_k_per_query,
     top_k_similar,
@@ -97,9 +96,14 @@ def test_all_pairs_vs_lsh_recall(spark):
         c = centers[i % 4]
         rows.append((f"v{i:03d}", _unit(c + RNG.normal(0, 0.02, 16)).astype(np.float32).tolist()))
     df = spark.createDataFrame(rows, "doc_id string, embedding array<float>")
+    # exact pairs by numpy brute force (ids ascend with the row index)
+    m = np.array([v for _, v in rows], dtype=np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
     exact = {
-        (r.id_a, r.id_b)
-        for r in all_pairs_similarity(df, threshold=0.98).collect()
+        (rows[i][0], rows[j][0])
+        for i, j in zip(*np.triu_indices(len(rows), 1))
+        if sims[i, j] >= 0.98
     }
     approx = {
         (r.id_a, r.id_b)

@@ -267,7 +267,7 @@ def test_semdedup_oversize_kernel_emits_partials_not_pairs(spark):
     assigned = semdedup_assign(emb, 1, id_col="doc_id", vec_col="embedding")
     big = assigned.withColumn("__cn", F.lit(n))
     partials = _oversize_cell_witnesses(
-        big, 0.99, "doc_id", "embedding", block_target=8, id_type="long"
+        big, 0.99, "doc_id", "embedding", block_target=8
     )
     rows_out = partials.collect()
     # s = ceil(40/8) = 5 blocks; each non-min doc appears once per block

@@ -250,8 +250,7 @@ def test_exploded_shingles_have_no_inferred_lambda_filter(spark, docs_df):
 
 def test_dup_clusters_transitive_chain(spark):
     """A≈B and B≈C (A,C never a pair) must share one cluster; isolated
-    nodes become singletons; star + chain shapes both converge — under
-    BOTH methods (alternating star and min-label propagation)."""
+    nodes become singletons; star + chain shapes both converge."""
     from ocr_spark.operators.dedup import dup_clusters
 
     pairs = spark.createDataFrame(
@@ -260,36 +259,30 @@ def test_dup_clusters_transitive_chain(spark):
     nodes = spark.createDataFrame([(i,) for i in [2, 9, 4, 30, 50, 51, 52, 77]],
                                   "doc_id long")
     want = {2: 2, 9: 2, 4: 2, 30: 2, 50: 50, 51: 50, 52: 50, 77: 77}
-    for method in ("star", "propagation"):
-        got = {r.doc_id: r.cluster
-               for r in dup_clusters(pairs, nodes=nodes, method=method).collect()}
-        assert got == want, method
+    got = {r.doc_id: r.cluster for r in dup_clusters(pairs, nodes=nodes).collect()}
+    assert got == want
 
 
 def test_dup_clusters_raises_on_non_convergence(spark):
-    """A chain longer than max_iter PROPAGATION rounds must raise (not
-    silently split); allow_partial=True opts into the partial labels."""
+    """An edge set still changing after max_iter rounds must raise, not
+    silently split the component."""
     from ocr_spark.operators.dedup import dup_clusters
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(chain, max_iter=3, method="propagation")
-    partial = dup_clusters(chain, max_iter=3, allow_partial=True,
-                           method="propagation")
-    assert partial.count() == 13
+        dup_clusters(chain, max_iter=1)
     # converged run resolves the whole chain to min id 0
-    full = dup_clusters(chain, max_iter=15, method="propagation")
+    full = dup_clusters(chain, max_iter=15)
     assert {r.cluster for r in full.collect()} == {0}
 
 
 def test_dup_clusters_star_bounds_rounds_on_long_chains(spark):
-    """The alternating large-star/small-star method converges in O(log²)
-    rounds regardless of graph DIAMETER: a 1000-link chain — which needs
-    ~1000 min-label-propagation rounds — must resolve to one cluster well
-    inside the default max_iter=20, while propagation at the same budget
-    provably cannot (it raises)."""
+    """Alternating large-star/small-star converges in O(log²) rounds
+    regardless of graph DIAMETER: a 1000-link chain — which needs ~1000
+    min-label-propagation rounds — must resolve to one cluster well inside
+    the default max_iter=20."""
     from ocr_spark.operators.dedup import dup_clusters
 
     chain = spark.createDataFrame(
@@ -297,17 +290,35 @@ def test_dup_clusters_star_bounds_rounds_on_long_chains(spark):
     )
     stats: dict = {}
     out = dup_clusters(chain, max_iter=20, stats=stats)
-    assert stats["method"] == "star" and stats["rounds"] <= 15
+    assert stats["rounds"] <= 15
     assert {r.cluster for r in out.collect()} == {0}
     assert out.count() == 1001
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(chain, max_iter=20, method="propagation")
 
 
-def test_dup_clusters_methods_agree_on_random_graphs(spark):
-    """Property check: star and propagation produce IDENTICAL (id, cluster)
-    maps on a seeded random mix of chains, stars, cliques, and isolated
-    nodes (the shapes the q_dedup_clusters planted edges stress)."""
+def _union_find_clusters(edges, nodes):
+    """{id: smallest id of its component} by union-find."""
+    parent = {n: n for n in nodes}
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_dup_clusters_matches_union_find_on_random_graphs(spark):
+    """Property check: the (id, cluster) map equals a union-find oracle on
+    a seeded random mix of chains, stars, cliques, and isolated nodes (the
+    shapes the q_dedup_clusters planted edges stress)."""
     import random
 
     from ocr_spark.operators.dedup import dup_clusters
@@ -319,17 +330,12 @@ def test_dup_clusters_methods_agree_on_random_graphs(spark):
               for b in range(a + 1, 205)]                    # clique
     edges += [(rng.randrange(300, 340), rng.randrange(300, 340))
               for _ in range(25)]                            # random (w/ self loops)
+    isolated = list(range(400, 410))
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(400, 410)], "doc_id long"
-    )
-    star = {(r.doc_id, r.cluster)
-            for r in dup_clusters(pairs, nodes=nodes, max_iter=40,
-                                  method="star").collect()}
-    prop = {(r.doc_id, r.cluster)
-            for r in dup_clusters(pairs, nodes=nodes, max_iter=40,
-                                  method="propagation").collect()}
-    assert star == prop and len(star) > 0
+    nodes = spark.createDataFrame([(i,) for i in isolated], "doc_id long")
+    got = {r.doc_id: r.cluster
+           for r in dup_clusters(pairs, nodes=nodes, max_iter=40).collect()}
+    assert got == _union_find_clusters(edges, isolated)
 
 
 def test_minhash_dedup_clustered_keeps_one_per_component(spark):

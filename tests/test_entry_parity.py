@@ -59,6 +59,17 @@ def test_oracle_counts_are_integers(duck, name, col):
     assert pd.api.types.is_integer_dtype(pdf[col]), (name, col, pdf[col].dtype)
 
 
+def test_oracle_sql_interpolates_the_fold_tables():
+    """The case-fold tables live once, in uniconst: the oracle SQL builds
+    its translate() calls from them instead of carrying pasted copies."""
+    from ocr_spark.functions.uniconst import FOLD_FROM, FOLD_TO
+
+    with open(entry_mod.__file__, encoding="utf-8") as f:
+        src = f.read()
+    assert FOLD_FROM not in src and FOLD_TO not in src
+    assert any(FOLD_FROM in q for q in entry_mod.oracle_sql().values())
+
+
 def test_rows_only_queries(spark):
     for name in set(entry_mod.queries()) - set(ORACLE_KEYS):
         df = entry_mod.queries()[name](spark, SF_DIR)

@@ -332,24 +332,51 @@ def test_ivf_blas_assignment_matches_native(spark):
     assert native == blas
 
 
-def test_blocked_allpairs_matches_expression_path(spark):
-    from ocr_spark.operators.similarity import (
-        all_pairs_similarity,
-        all_pairs_similarity_blocked,
-    )
+def _numpy_pairs(emb, threshold):
+    """{(id_a, id_b): cosine} over id_a < id_b with cosine >= threshold, by
+    numpy brute force."""
+    rows = sorted(emb.select("doc_id", "embedding").collect())
+    m = np.array([r.embedding for r in rows], dtype=np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
+    return {
+        (rows[i].doc_id, rows[j].doc_id): sims[i, j]
+        for i, j in zip(*np.triu_indices(len(rows), 1))
+        if sims[i, j] >= threshold
+    }
+
+
+def test_blocked_allpairs_matches_numpy_brute_force(spark):
+    from ocr_spark.operators.similarity import all_pairs_similarity_blocked
 
     emb = _emb_df(spark, n=60, dim=8, seed=11)
-    expr = {
-        (r.id_a, r.id_b): r.similarity
-        for r in all_pairs_similarity(emb, threshold=0.3).collect()
-    }
+    want = _numpy_pairs(emb, 0.3)
     blocked = {
         (r.id_a, r.id_b): r.similarity
         for r in all_pairs_similarity_blocked(emb, threshold=0.3, n_blocks=3).collect()
     }
-    assert set(expr) == set(blocked)
-    for k in expr:
-        assert abs(expr[k] - blocked[k]) < 1e-9
+    assert set(want) == set(blocked)
+    for k in want:
+        assert abs(want[k] - blocked[k]) < 1e-9
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_embedding_near_dup_ids_matches_numpy(spark, ids):
+    """Exact-path near-dup ids: every id within 0.95 cosine of a LOWER id,
+    for numeric and string ids alike (the blocked kernel takes its output
+    id type from the input schema)."""
+    from ocr_spark.operators.dedup import embedding_near_dup_ids
+
+    rng = np.random.RandomState(5)
+    base = rng.normal(0, 1, (30, 8))
+    vecs = np.vstack([base, base[:10] + rng.normal(0, 0.01, (10, 8))])
+    key = (lambda i: i) if ids == "long" else (lambda i: f"d{i:03d}")
+    emb = spark.createDataFrame(
+        [(key(i), v.tolist()) for i, v in enumerate(vecs)], ["doc_id", "embedding"]
+    )
+    want = {b for _, b in _numpy_pairs(emb, 0.95)}
+    got = {r.doc_id for r in embedding_near_dup_ids(emb, threshold=0.95).collect()}
+    assert len(want) >= 10 and got == want
 
 
 def test_extreme_pair_tiebreak_is_deterministic_for_string_ids(spark):
@@ -363,7 +390,7 @@ def test_extreme_pair_tiebreak_is_deterministic_for_string_ids(spark):
     anti = [-1.0, -2.0, -3.0, -4.0]
     rows = [(f"doc_{i:02d}", vec) for i in range(4)] + [("doc_99", anti)]
     emb = spark.createDataFrame(rows, ["doc_id", "embedding"])
-    out = most_least_similar_pair(emb, n_blocks=2, id_type="string").collect()[0]
+    out = most_least_similar_pair(emb, n_blocks=2).collect()[0]
     assert (out.most_similar.id_a, out.most_similar.id_b) == ("doc_00", "doc_01")
     assert abs(out.max_similarity - 1.0) < 1e-12
     assert abs(out.min_similarity - (-1.0)) < 1e-12

@@ -21,6 +21,15 @@ def _plan(spark, name: str) -> str:
     )
 
 
+def test_public_api_names_resolve():
+    """Every name ``ocr_spark`` exports must resolve through its lazy import
+    map: deleting an operator without its ``_API`` entry fails here."""
+    import ocr_spark
+
+    for name in ocr_spark.__all__:
+        assert getattr(ocr_spark, name) is not None, name
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _plan(spark, "q1_pricing_summary")
     assert "LessThanOrEqual(l_shipdate" in plan  # PushedFilters
@@ -120,25 +129,6 @@ def test_north_rule_ops_have_no_single_partition_exchange(spark):
     for name in ("html_boilerplate", "layout_regions", "reading_order", "pdf_pages"):
         plan = _plan(spark, name)
         assert "Exchange SinglePartition" not in plan, f"{name}:\n{plan[:1500]}"
-
-
-def test_allpairs_norms_stay_below_the_join(spark):
-    """Pre-normalization must survive optimization: exactly one SQRT per
-    side, both BELOW the join — none in the pair-level filter (which would
-    mean O(n²) norm recomputation). Pinned on the expression-path operator
-    directly (the allpairs gate itself now runs the blocked-matmul path)."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.operators.similarity import all_pairs_similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumnRenamed(
-        "vec_id", "doc_id"
-    )
-    df = all_pairs_similarity(emb, threshold=0.25)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    join_pos = plan.find("Join")
-    assert plan.count("SQRT") == 2, plan[:1200]
-    assert plan[:join_pos].count("SQRT") == 0  # nothing pair-level
 
 
 def test_allpairs_gate_routes_through_blocked_matmul(spark):

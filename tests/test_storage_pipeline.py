@@ -1,5 +1,5 @@
-"""M4 tests: merge upsert idempotency, crash-resume via manifest, error
-split, batch vs granular stage equivalence, end-to-end pipeline."""
+"""M4 tests: merge upsert idempotency, crash-resume via manifest, empty
+buckets and empty input, error split, end-to-end pipeline."""
 
 from __future__ import annotations
 
@@ -35,17 +35,24 @@ def test_merge_upsert_idempotent(spark, catalog):
     ]
 
 
-def test_run_stage_resume_after_crash(spark, catalog):
+def test_run_stage_resume_after_crash(spark, catalog, monkeypatch):
     docs = corpus.generate_docs(spark, 80, seed=21, heavy_pct=0.0)
-    # crash after 2 of 4 partitions
+    # crash after the data commit, before the manifest lands: the worst
+    # point for the one-job path (every bucket written, none recorded)
+    append = Catalog.append_manifest
+    crashed = []
+
+    def crash_once(self, rows):
+        if not crashed:
+            crashed.append(rows)
+            raise RuntimeError("simulated crash")
+        return append(self, rows)
+
+    monkeypatch.setattr(Catalog, "append_manifest", crash_once)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_stage(
-            catalog, "extracted", docs, extract_docs,
-            n_partitions=4, lineage="docs", fail_after_partitions=2,
-        )
-    m = catalog.manifest()
-    assert m.count() == 2  # two completed partitions checkpointed
-    # resume: only pending partitions run; result is complete, no dups
+        run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
+    assert catalog.manifest().count() == 0
+    # resume: every bucket is pending again and is overwritten, not appended
     out = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
     assert out.count() == 80
     assert out.select("doc_id").distinct().count() == 80
@@ -56,15 +63,27 @@ def test_run_stage_resume_after_crash(spark, catalog):
     assert spans_of(out2) == spans_of(extract_docs(docs))
 
 
-def test_run_stage_batch_equals_granular(spark, catalog, tmp_path):
-    docs = corpus.generate_docs(spark, 60, seed=33, heavy_pct=0.0)
-    cat2 = Catalog(spark, str(tmp_path / "w2"))
-    g = run_stage(catalog, "ext", docs, extract_docs, n_partitions=4, lineage="docs", granular=True)
-    b = run_stage(cat2, "ext", docs, extract_docs, n_partitions=4, lineage="docs", granular=False)
-    assert spans_of(g) == spans_of(b)
-    mg = {(r.partition_id, r.rows_in, r.rows_out, r.errors) for r in catalog.manifest().collect()}
-    mb = {(r.partition_id, r.rows_in, r.rows_out, r.errors) for r in cat2.manifest().collect()}
-    assert mg == mb
+def test_checkpointed_rerun_with_empty_buckets(spark, catalog):
+    """3 docs over 16 buckets leave most bucket directories unwritten; the
+    no-op re-run of the checkpointed pipeline must still read every stage
+    back."""
+    docs = corpus.generate_docs(spark, 3, seed=5, heavy_pct=0.0)
+    run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=16)
+    again = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=16)
+    assert catalog.manifest().count() == 4 * 16
+    assert {name: df.count() for name, df in again.items()} == {
+        "extracted": 3, "questions": 3, "problems": 3, "embeddings": 3
+    }
+    assert spans_of(again["extracted"]) == spans_of(extract_docs(docs))
+
+
+def test_checkpointed_empty_input(spark, catalog):
+    docs = spark.createDataFrame([], DOC_SCHEMA)
+    for _ in range(2):  # first run, then the no-op re-run
+        out = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=4)
+        assert all(df.count() == 0 for df in out.values())
+        assert catalog.manifest().count() == 4 * 4
+    assert out["extracted"].schema.simpleString() == extract_docs(docs).schema.simpleString()
 
 
 def test_error_split(spark, catalog):
@@ -79,7 +98,7 @@ def test_error_split(spark, catalog):
 
     out = run_stage(
         catalog, "checked", df, transform, n_partitions=2, lineage="raw",
-        error_col="error", granular=False,
+        error_col="error",
     )
     assert sorted(r.doc_id for r in out.collect()) == ["a", "c"]
     errs = catalog.read("checked_errors")
@@ -93,7 +112,7 @@ def test_error_split(spark, catalog):
 def test_pipeline_end_to_end(spark, catalog):
     docs = corpus.generate_docs(spark, 40, seed=9, heavy_pct=0.0)
     lazy = run_pipeline(docs, dim=32)
-    ck = run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=3, granular=False)
+    ck = run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=3)
     # checkpointed output == lazy output, stage by stage
     assert spans_of(ck["extracted"]) == spans_of(lazy["extracted"])
     lq = {r.question_id: (r.year, r.content) for r in lazy["questions"].collect()}
