@@ -688,11 +688,11 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.cluster import semdedup
 
     emb = _emb_table(spark, sf_dir).withColumnRenamed("vec_id", "doc_id")
-    # materialize=True (localCheckpoint) is value-identical and runs the
-    # broadcast assignment once instead of once per plan branch (the gate
-    # plan has five: both join sides, the verdict join, the cell-size
-    # count, and the giant-cell split) — measured 6.4 -> ~3 s at sf0.1
-    out = semdedup(emb, n_cells=8, threshold=0.4, n_iter=0, materialize=True)
+    # semdedup localCheckpoints its assignments, so the broadcast
+    # assignment runs once instead of once per plan branch (the gate plan
+    # has five: both join sides, the verdict join, the cell-size count,
+    # and the giant-cell split) — measured 6.4 -> ~3 s at sf0.1
+    out = semdedup(emb, n_cells=8, threshold=0.4, n_iter=0)
     return out.select("doc_id", "cell", "keep").orderBy("doc_id")
 
 
@@ -884,23 +884,25 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift an interpolated cut, and with degenerate docs tied exactly at
     the boundary a whole cluster flips bucket (caught by the fuzz section
     of the adversarial corpus). Doc at a threshold goes to the lower
-    bucket. The percentile/percentile_approx compute paths stay
-    pytest-covered (no SQL twin by design)."""
+    bucket. The percentile_approx compute path stays pytest-covered (no
+    SQL twin by design)."""
     from ocr_spark.operators.curation import perplexity_buckets
 
     scored = _lm_scored(spark, sf_dir).withColumn(
         "cross_entropy", F.round("cross_entropy", 4)
     )
     n = scored.count()
-    cuts = []
-    for k in ((n + 2) // 3, (2 * n + 2) // 3):  # integer ceil(n/3), ceil(2n/3)
-        row = (
-            scored.orderBy("cross_entropy", "doc_id")
-            .limit(int(k))
-            .agg(F.max("cross_entropy").alias("t"))
-            .collect()[0]
-        )
-        cuts.append(float(row["t"]))
+    cuts = [0.0, 0.0]  # an empty upstream has no order statistic to cut at
+    if n:
+        cuts = [
+            float(
+                scored.orderBy("cross_entropy", "doc_id")
+                .limit(int(k))
+                .agg(F.max("cross_entropy").alias("t"))
+                .collect()[0]["t"]
+            )
+            for k in ((n + 2) // 3, (2 * n + 2) // 3)  # ceil(n/3), ceil(2n/3)
+        ]
     out = perplexity_buckets(scored, thresholds=tuple(cuts))
     return out.select(
         "doc_id", "n_words", "cross_entropy", "bucket"
@@ -2166,9 +2168,8 @@ def oracle_sql() -> dict[str, str]:
         from documents d left join scored s using (doc_id)
         order by d.doc_id
     """
-    # CCNet head/middle/tail: the lm_quality scoring CTEs + exact tertile
-    # thresholds (quantile_cont == Spark's exact percentile, type-7
-    # interpolation on the same double ce values)
+    # CCNet head/middle/tail: the lm_quality scoring CTEs + discrete
+    # order-statistic tertile thresholds (see q_perplexity_buckets)
     sql["perplexity_buckets"] = r"""
         with words as (
           select doc_id,

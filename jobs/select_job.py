@@ -20,9 +20,10 @@ rejects with the evidence columns (per-item isolation, F3 style).
     1. optional ``blocklist_filter`` — UT1-style domain blocklist over the
        crawl URL (subdomain-inclusive); blocked docs go to
        ``select_blocked`` with their canonical host;
-    2. ``classifier_filter``-shape quality gate — hashed linear classifier
-       scores every survivor (row-local, zero shuffles); sub-threshold
-       docs go to ``select_lowquality`` with their score;
+    2. quality gate — ``classifier_score`` (hashed linear classifier)
+       scores every survivor (row-local, zero shuffles) and one filter
+       splits on ``--quality-threshold``; sub-threshold docs go to
+       ``select_lowquality`` with their score;
     3. DSIR — fit the target-vs-raw hashed-ngram log-ratio model
        (arXiv:2302.03169) on the survivors, score them, then select:
        ``--select-k > 0`` draws exactly k docs by Gumbel-top-k

@@ -18,9 +18,11 @@ Scale design — two equivalent paths, equivalence-tested:
 * :func:`classifier_score` (default): the weight vector rides in as ONE
   literal array column; scoring is a row-local fold — zero shuffles, whole
   plan inside whole-stage codegen. Right for models up to ~64k buckets
-  (the literal array is serialized once per task). The md5 bucket hash is
-  engine-portable, so the DuckDB oracle mirrors it digit-by-digit (same
-  trick as mixing.portable_uniform).
+  (the literal array is serialized once per task). A quality gate is this
+  score plus one ``score >= threshold`` filter, which callers write inline
+  (jobs/select_job.py). The md5 bucket hash is engine-portable, so the
+  DuckDB oracle mirrors it digit-by-digit (same trick as
+  mixing.portable_uniform).
 * :func:`classifier_score_joined`: for million-bucket models where a plan
   literal is unreasonable — repartition the RAW docs by id (pinned;
   HashPartitioning(id) satisfies the downstream groupBy, so the exploded
@@ -45,7 +47,6 @@ __all__ = [
     "make_seeded_weights",
     "classifier_score",
     "classifier_score_joined",
-    "classifier_filter",
 ]
 
 
@@ -90,9 +91,9 @@ def classifier_score(
     n_buckets = len(weights)
     if n_buckets < 1:
         raise ValueError("classifier needs at least one weight bucket")
-    # ONE array literal (a single Literal node / py4j call), not
-    # F.array(*[F.lit(w) ...]) — which would build n_buckets expression
-    # nodes and stall plan construction for 64k-bucket models
+    # F.lit(list) is array(*[lit(w) ...]) on pyspark 4: one py4j call per
+    # bucket, ~10 s of plan construction for 64k buckets (ROADMAP.md
+    # holds the one-literal build that removes it)
     warr = F.lit([float(w) for w in weights])
     with_words = docs.withColumn("__words", words_column(text_col))
     # fold input is the materialized column; the lambda body touches only
@@ -156,17 +157,3 @@ def classifier_score_joined(
     ).drop("__wsum")
     return pinned.join(scored, id_col)
 
-
-def classifier_filter(
-    docs: DataFrame,
-    weights: list[float],
-    threshold: float = 0.5,
-    bias: float = 0.0,
-    text_col: str = "text",
-    seed: int = 0,
-) -> DataFrame:
-    """Keep documents scoring at or above ``threshold`` — the corpus gate.
-    Row-local end to end (the literal-array scorer + one filter)."""
-    return classifier_score(
-        docs, weights, bias=bias, text_col=text_col, seed=seed
-    ).filter(F.col("score") >= F.lit(float(threshold)))

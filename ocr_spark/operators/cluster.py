@@ -124,8 +124,7 @@ def semdedup(
     vec_col: str = "embedding",
     seed: int = 0,
     blas: bool = False,
-    materialize: bool = False,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
 ) -> DataFrame:
     """SemDeDup keep/drop marking: adds ``cell`` and ``keep``.
 
@@ -152,33 +151,26 @@ def semdedup(
     witness semantics; the kernel's float64 matmul can differ from the
     native fold in the last ulp on exactly-at-threshold pairs, so
     oracle-gated runs should keep cells under the limit (they do — the
-    gate runs 500 docs / 8 cells). ``None`` disables the defense (pure
-    self-join plan). The kernel's output schema types ``id_col`` from the
-    input schema — never a hardcoded long (string page ids are the
-    production norm; a declared-long schema would make the union coerce
-    and runtime-crash on them, the test_plan_hygiene.py:92 lesson).
+    gate runs 500 docs / 8 cells). The kernel's output schema types
+    ``id_col`` from the input schema — never a hardcoded long (string page
+    ids are the production norm; a declared-long schema would make the
+    union coerce and runtime-crash on them, the test_plan_hygiene.py:92
+    lesson).
 
-    ``assigned`` feeds THREE plan branches (both join sides + the verdict
-    join) plus the cell-size count when ``max_cell_size`` is set;
-    ``materialize=True`` localCheckpoints the assignments so the
-    k-means assignment runs once instead of three-to-five times — the
-    production setting (same reason the jobs checkpoint their fan-out
-    frames). Default False keeps the plan pure for the oracle gate."""
+    ``assigned`` feeds up to five plan branches (the cell-size count, both
+    join sides, the giant-cell kernel and the verdict join), so it is
+    localCheckpointed and the k-means assignment runs once (same reason
+    the jobs checkpoint their fan-out frames)."""
+    if max_cell_size < 2:
+        raise ValueError("max_cell_size must be >= 2")
     assigned = semdedup_assign(
         embeddings, n_cells, n_iter=n_iter, id_col=id_col,
         vec_col=vec_col, seed=seed, blas=blas,
-    )
-    if materialize:
-        assigned = assigned.localCheckpoint()
-    if max_cell_size is None:
-        small, big = assigned, None
-    else:
-        if max_cell_size < 2:
-            raise ValueError("max_cell_size must be >= 2 (or None)")
-        sizes = assigned.groupBy("cell").agg(F.count("*").alias("__cn"))
-        tagged = assigned.join(F.broadcast(sizes), "cell")
-        small = tagged.filter(F.col("__cn") <= max_cell_size)
-        big = tagged.filter(F.col("__cn") > max_cell_size)
+    ).localCheckpoint()
+    sizes = assigned.groupBy("cell").agg(F.count("*").alias("__cn"))
+    tagged = assigned.join(F.broadcast(sizes), "cell")
+    small = tagged.filter(F.col("__cn") <= max_cell_size)
+    big = tagged.filter(F.col("__cn") > max_cell_size)
     left = small.select(
         F.col("cell"), F.col(id_col).alias("__id_a"), F.col(vec_col).alias("__va")
     )
@@ -195,18 +187,17 @@ def semdedup(
         .groupBy(F.col("__id_a").alias(id_col))
         .agg(F.min("__id_b").alias("dup_witness"))
     )
-    if big is not None:
-        partials = _oversize_cell_witnesses(
-            big, threshold, id_col, vec_col, max_cell_size
-        )
-        # a doc's cell is entirely small or entirely big, so the union only
-        # re-minimizes the big path's per-block-pair partial witnesses; the
-        # input is witness rows (≤ one per doc per block-pair), never pairs
-        witnesses = (
-            witnesses.unionByName(partials)
-            .groupBy(id_col)
-            .agg(F.min("dup_witness").alias("dup_witness"))
-        )
+    partials = _oversize_cell_witnesses(
+        big, threshold, id_col, vec_col, max_cell_size
+    )
+    # a doc's cell is entirely small or entirely big, so the union only
+    # re-minimizes the big path's per-block-pair partial witnesses; the
+    # input is witness rows (≤ one per doc per block-pair), never pairs
+    witnesses = (
+        witnesses.unionByName(partials)
+        .groupBy(id_col)
+        .agg(F.min("dup_witness").alias("dup_witness"))
+    )
     return (
         assigned.join(witnesses, id_col, "left")
         .withColumn("keep", F.col("dup_witness").isNull())

@@ -47,7 +47,6 @@ __all__ = [
     "gopher_quality",
     "token_entropy",
     "top_ngrams",
-    "top_ngrams_hashed",
     "dedup_lines",
     "unigram_lm",
     "lm_cross_entropy",
@@ -473,7 +472,6 @@ def perplexity_buckets(
     scored: DataFrame,
     thresholds: tuple[float, ...] | None = None,
     fractions: tuple[float, ...] = (1.0 / 3, 2.0 / 3),
-    exact: bool = False,
     accuracy: int = 10000,
     score_col: str = "cross_entropy",
     labels: tuple[str, ...] = ("head", "middle", "tail"),
@@ -491,11 +489,10 @@ def perplexity_buckets(
     * ``thresholds`` explicit (len = len(labels)-1): the 10^12-row path —
       calibrate once (offline, or from a sample) and the labeling is a pure
       row-local expression, zero extra passes;
-    * ``exact=False`` (default compute path): one ``percentile_approx``
-      pass — t-digest sketch, bounded executor memory at any corpus size;
-    * ``exact=True``: Spark's exact ``percentile`` — buffers every value in
-      the aggregation, so bounded corpora only; it is the oracle-mirrorable
-      form (DuckDB ``quantile_cont``, same type-7 interpolation).
+    * otherwise one ``percentile_approx`` pass over ``fractions`` — a
+      bounded-memory sketch at any corpus size; on corpora smaller than
+      ``accuracy`` it returns the discrete order statistic (the
+      ceil(n·f)-th smallest value).
 
     The computed thresholds are a len(fractions) scalar collect — bounded
     by contract, never data-sized."""
@@ -503,11 +500,7 @@ def perplexity_buckets(
         cuts = [float(t) for t in thresholds]
     else:
         pcts = F.lit([float(f) for f in fractions])
-        agg = (
-            F.percentile(score_col, pcts)
-            if exact
-            else F.percentile_approx(score_col, pcts, F.lit(accuracy))
-        )
+        agg = F.percentile_approx(score_col, pcts, F.lit(accuracy))
         got = scored.agg(agg.alias("t")).collect()[0]["t"]
         if got is None:
             # percentile over zero rows (or an all-null score column) is
@@ -576,62 +569,6 @@ def dedup_lines(
             ).alias("text"),
         )
         .select(F.col("_id").alias(id_col), "text", "n_lines", "n_kept")
-    )
-
-
-def top_ngrams_hashed(
-    docs: DataFrame,
-    n: int = 3,
-    k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
-    """Two-pass scale variant of :func:`top_ngrams` for corpora where the
-    count shuffle dominates: pass 1 counts 64-bit gram HASHES (the shuffle
-    carries 8-byte keys instead of ~25-byte gram strings — a ~3x shuffle-
-    volume cut on high-entropy corpora where most grams are distinct and
-    map-side combine can't collapse them), TakeOrdered picks the k winning
-    hashes; pass 2 re-scans, keeps only grams whose hash won (a k-literal
-    isin — k is bounded), and recounts those EXACTLY by text.
-
-    Measured at 500k docs / local[8]: pass-1 shuffle 46.6 MB vs the exact
-    variant's 112.6 MB (2.4x cut), wall 35.4 s vs 18.7 s — the sandbox is
-    compute-bound, so the second scan costs more than the shuffle saves
-    HERE. Use this variant when the count exchange is the bottleneck
-    (wide clusters, slow interconnect, gram cardinality >> combiner
-    effectiveness); use :func:`top_ngrams` when scan/CPU dominates.
-
-    Same output contract as top_ngrams — (gram, n_occurrences), count-desc
-    then gram-asc — with two documented deviations: (1) a 64-bit collision
-    merges two grams' counts in pass 1 (P ≈ d²/2⁶⁵); the colliding texts
-    all reach pass 2 and are recounted EXACTLY, so output counts are never
-    corrupted, but the inflated merged hash can displace the true k-th
-    hash from the winner set — membership can lose a true winner to the
-    collision pair; (2) when the k-th place is tied, pass 1 breaks the
-    tie by hash, not gram, so WHICH tied gram wins can differ from the
-    exact variant (pytest pins equality where counts are untied).
-    """
-    words = words_column(text_col)
-    grams = docs.select(words.alias("__w")).select(
-        F.posexplode_outer(_ngrams(F.col("__w"), n)).alias("_p", "gram")
-    ).filter(F.col("gram").isNotNull())
-
-    winners = (
-        grams.groupBy(F.xxhash64("gram").alias("__h"))
-        .agg(F.count("*").alias("__c"))
-        .orderBy(F.col("__c").desc(), F.col("__h"))
-        .limit(k)
-    )
-    # k rows — driver-side by design (bounded by the function contract)
-    win_hashes = [r["__h"] for r in winners.collect()]
-    if not win_hashes:
-        return grams.select("gram", F.lit(0).cast("long").alias("n_occurrences")).limit(0)
-
-    return (
-        grams.filter(F.xxhash64("gram").isin(win_hashes))
-        .groupBy("gram")
-        .agg(F.count("*").alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), F.col("gram"))
-        .limit(k)
     )
 
 
@@ -744,7 +681,6 @@ def exact_substring_dedup(
     min_words: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    keep_first: bool = True,
 ) -> DataFrame:
     """ExactSubstr dedup (Lee et al. 2021, "Deduplicating Training Data
     Makes Language Models Better", arXiv:2107.06499 §4.1): remove every
@@ -754,14 +690,13 @@ def exact_substring_dedup(
     maximal removed spans, so a 200-word boilerplate block shared by two
     docs disappears wholesale even though no chunk boundary aligns.
 
-    ``keep_first=True`` (default) spares the lexicographically first
-    occurrence ``min(struct(doc, pos))`` of each duplicated window (the
-    corpus keeps one copy of everything); ``False`` removes all
-    occurrences (the paper tool's default — repeated text is presumed
-    boilerplate). Returns ``(id_col, text_col, n_words, n_removed,
-    n_dup_spans)`` with every input doc exactly once; an untouched doc
-    keeps its ORIGINAL text byte-for-byte (only rebuilt docs are re-joined
-    with single spaces, the family's convention).
+    The lexicographically first occurrence ``min(struct(doc, pos))`` of
+    each duplicated window is spared, so the corpus keeps one copy of
+    everything (the paper tool instead removes all occurrences). Returns
+    ``(id_col, text_col, n_words, n_removed, n_dup_spans)`` with every
+    input doc exactly once; an untouched doc keeps its ORIGINAL text
+    byte-for-byte (only rebuilt docs are re-joined with single spaces, the
+    family's convention).
 
     Scale (the suffix-array of the paper is a single-machine design; this
     is the shuffle-native equivalent):
@@ -822,11 +757,9 @@ def exact_substring_dedup(
         .agg(F.count("*").alias("__c"), F.min(F.struct("_id", "pos")).alias("w"))
         .filter(F.col("__c") >= 2)
     )
-    matched = stream.join(winners, ["h1", "h2"])
-    if keep_first:
-        matched = matched.filter(
-            ~((F.col("_id") == F.col("w._id")) & (F.col("pos") == F.col("w.pos")))
-        )
+    matched = stream.join(winners, ["h1", "h2"]).filter(
+        ~((F.col("_id") == F.col("w._id")) & (F.col("pos") == F.col("w.pos")))
+    )
     starts = matched.groupBy("_id").agg(
         F.array_sort(F.collect_list("pos")).alias("starts")
     )

@@ -5,8 +5,11 @@ The reference loads images from disk, resizes/recompresses them under a
 25,000-byte cap with a JPEG quality loop (80→20 step −10,
 /root/reference/src/gemini_image_analyzer.py:536-576), and feeds bytes to
 embedding APIs (:578-667). Here media are opaque ``binary`` columns with
-typed metadata; all transforms are Arrow-batched pandas UDFs over the bytes
-(never per-row Python loops in the plan).
+typed metadata. Transforms that produce bytes (decode, resize) are
+Arrow-batched pandas UDFs over the bytes (never per-row Python loops in the
+plan); metadata-only consumers use the native twins
+:func:`decode_meta_native`/:func:`resize_meta_native`, which never cross
+the Arrow boundary.
 
 Image decoding libraries (PIL et al.) are NOT in this container, so the
 pixel-level math is STUBBED behind a clearly-marked deterministic fake
@@ -142,12 +145,12 @@ def make_decode_udf(decode_fn=None):
 
 _QUALITY_STEPS = tuple(range(80, 19, -10))  # 80,70,...,20 — reference loop
 _MAX_BYTES = 25_000  # reference cap (src/gemini_image_analyzer.py:539)
-# The quality-loop semantics exist in THREE forms sharing these constants:
-# make_resize_meta_udf (stats UDF), make_media_meta_udf (fused Python-side
-# consumer path), resize_meta_native (JVM closed form, the metadata-only
-# scale path). tests/test_media_ann_sampling.py::
-# test_native_meta_equals_udf_paths pins all of them equal on boundary
-# inputs, so a semantic change to either constant fails loudly.
+# The quality-loop semantics exist in TWO forms sharing these constants:
+# make_resize_udf (the blob-producing Python loop) and resize_meta_native
+# (JVM closed form, the metadata-only scale path). tests/
+# test_media_ann_sampling.py::test_native_meta_equals_udf_paths pins them
+# equal on boundary inputs, so a semantic change to either constant fails
+# loudly.
 
 
 def _fake_recompress(b: bytes, quality: int) -> bytes:
@@ -193,93 +196,6 @@ def make_resize_udf(recompress_fn=None):
     return resize_image_if_needed
 
 
-def make_resize_meta_udf():
-    """Stats-only variant of :func:`make_resize_udf`: identical quality-loop
-    semantics but returns only (n_bytes, quality, resized) — use when the
-    resized blob itself isn't consumed downstream, so the Arrow return path
-    carries 12 bytes per row instead of the full recompressed image."""
-
-    @pandas_udf("struct<n_bytes:int,quality:int,resized:boolean>")
-    def resize_meta(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            if b is None:
-                rows.append((None, None, None))
-                continue
-            n = len(bytes(b))
-            if n <= _MAX_BYTES:
-                rows.append((n, 100, False))
-                continue
-            q_used, out_n = _QUALITY_STEPS[-1], n
-            for q in _QUALITY_STEPS:
-                out_n = int(n * q / 100)
-                q_used = q
-                if out_n <= _MAX_BYTES:
-                    break
-            rows.append((out_n, q_used, True))
-        return pd.DataFrame(rows, columns=["n_bytes", "quality", "resized"])
-
-    return resize_meta
-
-
-def make_media_meta_udf():
-    """FUSED decode + resize-stats in ONE Arrow pass.
-
-    The separate decode/resize UDFs each ship the full blob JVM→Python; for
-    metadata-only consumers that doubles Arrow traffic on multi-KB blobs
-    (measured 52% of the r1 bench). This fusion halves it, and the inner
-    math is numpy-vectorized over the batch (no per-byte Python; the only
-    per-row work is len() and a 16-byte slice sum)."""
-
-    @pandas_udf(
-        "struct<width:int,height:int,format:string,n_bytes:int,"
-        "final_bytes:int,quality:int,resized:boolean>"
-    )
-    def media_meta(blobs: pd.Series) -> pd.DataFrame:
-        vals = [bytes(b) if b is not None else None for b in blobs]
-        n = np.array([len(b) if b is not None else -1 for b in vals], dtype=np.int64)
-        head = np.array(
-            [sum(b[:16]) if b is not None else 0 for b in vals], dtype=np.int64
-        )
-        fmt = np.array(
-            [
-                None
-                if b is None
-                else ("png" if b.startswith(_PNG_MAGIC) else "jpeg" if b.startswith(_JPEG_MAGIC) else "fake-bin")
-                for b in vals
-            ],
-            dtype=object,
-        )
-        resized = n > _MAX_BYTES
-        # closed form of the reference's descending quality loop: the first
-        # (= largest) step whose truncated size fits, else the 20% floor
-        quality = np.full(len(n), 100, dtype=np.int64)
-        final = n.copy()
-        quality[resized] = _QUALITY_STEPS[-1]
-        for q in _QUALITY_STEPS[::-1]:  # ascending: last write wins = max q
-            ok = resized & (n * q // 100 <= _MAX_BYTES)
-            quality[ok] = q
-        final[resized] = n[resized] * quality[resized] // 100
-        out = pd.DataFrame(
-            {
-                "width": 1 + n % 600,
-                "height": 1 + head % 600,
-                "format": fmt,
-                "n_bytes": n,
-                "final_bytes": final,
-                "quality": quality,
-                "resized": resized,
-            }
-        )
-        null_mask = n < 0
-        if null_mask.any():
-            out = out.astype(object)
-            out.loc[null_mask, :] = None
-        return out
-
-    return media_meta
-
-
 def decode_meta_native(data: Column | str) -> Column:
     """JVM-side twin of :func:`make_decode_udf`'s stub decode — zero Python.
 
@@ -311,10 +227,11 @@ def decode_meta_native(data: Column | str) -> Column:
 
 
 def resize_meta_native(n_bytes: Column | str) -> Column:
-    """JVM-side twin of :func:`make_resize_meta_udf`: the descending quality
-    loop is closed-form in the byte count alone (quality = largest step whose
-    truncated size fits the 25 KB cap, else 20), so the T11 control flow
-    needs no Python at all when the recompressed blob isn't consumed."""
+    """JVM-side twin of :func:`make_resize_udf`'s (n_bytes, quality,
+    resized) fields: the descending quality loop is closed-form in the byte
+    count alone (quality = largest step whose truncated size fits the 25 KB
+    cap, else 20), so the T11 control flow needs no Python at all when the
+    recompressed blob isn't consumed."""
     n = (F.col(n_bytes) if isinstance(n_bytes, str) else n_bytes).cast("long")
     steps = F.array(*[F.lit(q) for q in _QUALITY_STEPS])  # descending
     fitting = F.filter(steps, lambda q: F.floor(n * q / 100) <= F.lit(_MAX_BYTES))

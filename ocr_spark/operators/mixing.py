@@ -61,7 +61,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_overlaps: int = 1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Flag training documents sharing word n-grams with an eval benchmark.
 
@@ -84,12 +83,8 @@ def decontaminate(
     few bytes) instead of a count_distinct whose (doc, gram) pre-distinct
     shuffled the full matched gram text (~600 MB at 500k docs, measured).
 
-    ``broadcast_benchmark`` (default True) forces the broadcast: eval
-    suites are typically 10^6..10^7 distinct grams, far under the build
-    ceiling. Pass False when the benchmark side is itself corpus-sized
-    (e.g. cross-corpus overlap audits) — the gram join becomes a plain
-    shuffled equi-join; every other stage is unchanged, and the training
-    gram stream pays one extra exchange on ``gram``.
+    The benchmark side is always broadcast: eval suites are typically
+    10^6..10^7 distinct grams, far under the build ceiling.
     """
     # portable fold, not engine lower(): gram text is a value-exact gate
     # surface and the engines' case tables drift (uniconst contract)
@@ -110,9 +105,8 @@ def decontaminate(
         id_col, F.explode_outer(F.array_distinct(_ngrams(F.col("__w"), n))).alias("gram")
     ).filter(F.col("gram").isNotNull())
 
-    bench_side = F.broadcast(bench_grams) if broadcast_benchmark else bench_grams
     matched = (
-        doc_grams.join(bench_side, "gram")
+        doc_grams.join(F.broadcast(bench_grams), "gram")
         .groupBy(id_col)
         .agg(F.count("*").cast("long").alias("n_contaminated"))
     )

@@ -22,13 +22,12 @@ Scale notes:
   hash-threshold sample: one map-side-combined count per domain, joined
   back (same-key exchange reuse), then a ROW-LOCAL keep decision from the
   portable md5 uniform — every hot domain keeps ``cap`` docs in
-  expectation, deterministically in (seed, id). ``exact=True`` opts into
-  the window for corpora whose largest domain is known-small.
+  expectation, deterministically in (seed, id).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.mixing import portable_uniform
@@ -145,20 +144,15 @@ def domain_cap(
     url_col: str = "url",
     id_col: str = "doc_id",
     seed: int = 0,
-    exact: bool = False,
 ) -> DataFrame:
     """Cap each domain's document count at ``cap``.
 
-    Default (scale path): domains at or under the cap keep everything;
+    Domains at or under the cap keep everything;
     over-cap domains keep each doc with probability ``cap / n_docs``,
     decided by the row-local portable md5 uniform — ``cap`` survivors in
     EXPECTATION per hot domain, deterministic in ``(seed, id)``, no
     value-keyed window anywhere (a 10⁹-doc domain stays spread across
     tasks). Adds ``domain`` and ``domain_docs``.
-
-    ``exact=True``: precise cap via ``row_number`` ordered by the same
-    uniform — correct on any corpus but serializes each domain into one
-    window task; only for corpora whose hottest domain is bounded.
     """
     if cap < 1:
         raise ValueError("domain_cap needs cap >= 1")
@@ -167,15 +161,6 @@ def domain_cap(
     )
     counts = with_dom.groupBy("domain").agg(F.count("*").alias("domain_docs"))
     joined = with_dom.join(counts, "domain")
-    if exact:
-        w = Window.partitionBy("domain").orderBy(
-            portable_uniform(id_col, seed), F.col(id_col)
-        )
-        return (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= cap)
-            .drop("__rn")
-        )
     keep = (F.col("domain_docs") <= cap) | (
         portable_uniform(id_col, seed)
         < F.lit(float(cap)) / F.col("domain_docs")

@@ -301,8 +301,10 @@ def run_stage(
       earlier runs are untouched. ``transform`` must keep ``key_col`` so
       ``__pid`` can be recomputed on its output.
     * when ``error_col`` is set, rows with a non-null error value are split to
-      ``{stage}_errors`` and counted in the manifest instead of failing the
-      stage (per-item error isolation, F3).
+      ``{stage}_errors`` (``__pid``-partitioned and overwritten per bucket
+      like the stage table, so a redone bucket never duplicates its error
+      rows) and counted in the manifest instead of failing the stage
+      (per-item error isolation, F3).
 
     Returns the full stage output, read back once from the table directory
     with the transform's schema (so an empty stage reads back as zero rows;
@@ -330,15 +332,11 @@ def run_stage(
         in_counts = _counts_by_pid(sub)
         err_counts = {}
         if error_col is not None:
-            err_counts = _counts_by_pid(bad.withColumn("__pid", pid))
+            bad = bad.withColumn("__pid", pid)
+            err_counts = _counts_by_pid(bad)
             if err_counts:
-                bad.write.mode("append").parquet(catalog.path(stage + "_errors"))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__pid")
-            .parquet(table_dir)
-        )
+                _overwrite_buckets(bad, catalog.path(stage + "_errors"))
+        _overwrite_buckets(out, table_dir)
         out_counts = _counts_by_pid(read_table().filter(F.col("__pid").isin(pending)))
         catalog.append_manifest(
             [
@@ -356,6 +354,18 @@ def run_stage(
             ]
         )
     return read_table().drop("__pid")
+
+
+def _overwrite_buckets(df: DataFrame, path: str) -> None:
+    """Write ``df`` as ``path/__pid=p`` directories, replacing only the
+    buckets it holds (dynamic partition overwrite), so a redone bucket never
+    duplicates its earlier rows."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__pid")
+        .parquet(path)
+    )
 
 
 def _counts_by_pid(df: DataFrame) -> dict[int, int]:

@@ -144,10 +144,12 @@ def main() -> None:
     jn_class = java_class(r"\p{N}", bodies["RE2_ONLY_DIGIT_BODY"],
                           bodies["JAVA_ONLY_DIGIT_BODY"])
 
-    # ---- verify: composed Java classes == RE2 tables, on EVERY diff
-    # codepoint plus a broad sweep ----
+    # ---- verify: composed Java classes == RE2 tables and the translate
+    # fold == both engines' lower(), on EVERY diff codepoint and EVERY fold
+    # pair plus a broad sweep ----
     probe = sorted(
         set(re2_only_l + java_only_l + re2_only_n + java_only_n)
+        | {ord(c) for c in fold_from}
         | set(range(0x0, 0x3000))
         | set(cps[::211])
     )

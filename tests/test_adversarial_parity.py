@@ -199,3 +199,20 @@ def test_gate_survives_adversarial_corpus(spark, adv_duck, adv_dir, name):
     spark_pdf = q(spark, adv_dir).toPandas()
     duck_pdf = adv_duck.execute(entry_mod.oracle_sql()[name]).df()
     assert_frames_match(name, spark_pdf, duck_pdf)
+
+
+def test_perplexity_gate_on_empty_corpus(spark, tmp_path):
+    """An empty upstream has no order statistic to cut at: the gate returns
+    the empty labelled frame, as its oracle does, instead of crashing."""
+    base = pq.read_table(os.path.join(SRC_DIR, "documents.parquet"))
+    pq.write_table(base.slice(0, 0), tmp_path / "documents.parquet")
+    got = entry_mod.queries()["perplexity_buckets"](spark, str(tmp_path)).toPandas()
+    assert list(got.columns) == ["doc_id", "n_words", "cross_entropy", "bucket"]
+    assert len(got) == 0
+    con = duckdb.connect()
+    con.execute(
+        "create view documents as select * from "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    assert len(con.execute(entry_mod.oracle_sql()["perplexity_buckets"]).df()) == 0
+    con.close()

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.classify import (
-    classifier_filter,
     classifier_score,
     classifier_score_joined,
     make_seeded_weights,
@@ -96,17 +95,6 @@ def test_classifier_literal_path_has_no_exchange(spark, docs_df):
         .toString()
     )
     assert "Exchange" not in plan  # row-local end to end
-
-
-def test_classifier_filter_threshold(spark, docs_df):
-    w = make_seeded_weights(16, seed=9)
-    scored = classifier_score(docs_df, w, bias=0.5, seed=2).collect()
-    kept = {r["doc_id"] for r in scored if r["score"] >= 0.6}
-    got = {
-        r["doc_id"]
-        for r in classifier_filter(docs_df, w, threshold=0.6, bias=0.5, seed=2).collect()
-    }
-    assert got == kept
 
 
 def test_classifier_rejects_empty_model(spark, docs_df):
@@ -220,20 +208,14 @@ def test_semdedup_subblocked_giant_cells_match_selfjoin(spark):
     keeping the min-id witness semantics)."""
     emb, _ = _toy_embeddings(spark, n=90, k=3)
     kw = dict(n_cells=3, threshold=0.999, n_iter=2)
-    plain = {
-        r["doc_id"]: r["keep"]
-        for r in semdedup(emb, max_cell_size=None, **kw).collect()
-    }
+    # the default (4096) leaves these tiny cells on the self-join path
+    plain = {r["doc_id"]: r["keep"] for r in semdedup(emb, **kw).collect()}
     # every cell holds 30 docs > max_cell_size=4 -> all work in the kernel
     blocked = {
         r["doc_id"]: r["keep"]
         for r in semdedup(emb, max_cell_size=4, **kw).collect()
     }
     assert blocked == plain
-    # the default (4096) leaves these tiny cells on the self-join path and
-    # must also agree
-    default = {r["doc_id"]: r["keep"] for r in semdedup(emb, **kw).collect()}
-    assert default == plain
 
 
 def test_semdedup_subblocked_string_ids(spark):

@@ -424,34 +424,43 @@ def test_perplexity_buckets_explicit_thresholds_row_local(spark):
     assert "Exchange" not in plan  # explicit thresholds: pure row-local
 
 
+def _py_order_stat_buckets(rows, fractions=(1.0 / 3, 2.0 / 3),
+                           labels=("head", "middle", "tail")):
+    """Reference: each cut is the ceil(n*f)-th smallest score (the discrete
+    order statistic the perplexity gate uses); a doc at a cut goes to the
+    lower bucket."""
+    vals = sorted(v for _, v in rows)
+    cuts = [vals[max(math.ceil(len(vals) * f), 1) - 1] for f in fractions]
+    return {
+        d: next((lab for lab, c in zip(labels, cuts) if v <= c), labels[-1])
+        for d, v in rows
+    }
+
+
 def test_perplexity_buckets_exact_tertiles(spark):
     from ocr_spark.operators.curation import perplexity_buckets
 
-    scored = spark.createDataFrame(
-        [(i, float(i)) for i in range(1, 10)],
-        "doc_id int, cross_entropy double",
-    )
+    rows = [(i, float(i)) for i in range(1, 10)]
+    scored = spark.createDataFrame(rows, "doc_id int, cross_entropy double")
     got = {r["doc_id"]: r["bucket"]
-           for r in perplexity_buckets(scored, exact=True).collect()}
-    # 1..9: type-7 tertiles at (n-1)*1/3 -> 3.6666.., (n-1)*2/3 -> 6.333..
+           for r in perplexity_buckets(scored).collect()}
+    # 1..9: the 3rd and 6th smallest values are the cuts
     want = {i: ("head" if i <= 3 else "middle" if i <= 6 else "tail")
             for i in range(1, 10)}
-    assert got == want
+    assert got == want == _py_order_stat_buckets(rows)
 
 
 def test_perplexity_buckets_approx_default_matches_exact_here(spark):
     from ocr_spark.operators.curation import perplexity_buckets
 
+    rows = [(i, float(i % 37)) for i in range(300)]
     scored = spark.createDataFrame(
-        [(i, float(i % 37)) for i in range(300)],
-        "doc_id int, cross_entropy double",
+        rows, "doc_id int, cross_entropy double"
     ).localCheckpoint()
-    exact = {r["doc_id"]: r["bucket"]
-             for r in perplexity_buckets(scored, exact=True).collect()}
     approx = {r["doc_id"]: r["bucket"]
               for r in perplexity_buckets(scored).collect()}
-    # t-digest at default accuracy is exact on 37 distinct values
-    assert approx == exact
+    # the sketch at default accuracy is exact on 300 values
+    assert approx == _py_order_stat_buckets(rows)
 
 
 def test_perplexity_buckets_empty_corpus_raises_value_error(spark):
@@ -463,15 +472,14 @@ def test_perplexity_buckets_empty_corpus_raises_value_error(spark):
     from ocr_spark.operators.curation import perplexity_buckets
 
     empty = spark.createDataFrame([], "doc_id int, cross_entropy double")
-    for kw in ({"exact": True}, {}):
-        with _pytest.raises(ValueError, match="empty corpus"):
-            perplexity_buckets(empty, **kw)
+    with _pytest.raises(ValueError, match="empty corpus"):
+        perplexity_buckets(empty)
     # all-null scores are the same degenerate case
     nulls = spark.createDataFrame(
         [(1, None), (2, None)], "doc_id int, cross_entropy double"
     )
     with _pytest.raises(ValueError, match="empty corpus"):
-        perplexity_buckets(nulls, exact=True)
+        perplexity_buckets(nulls)
     assert perplexity_buckets(empty, thresholds=(1.0, 2.0)).count() == 0
 
 
@@ -492,7 +500,7 @@ def test_perplexity_buckets_validation(spark):
 # ---------------------------------------------------------------------------
 # ExactSubstr dedup (Lee et al. 2021)
 # ---------------------------------------------------------------------------
-def _py_exact_substr(rows, k, keep_first=True):
+def _py_exact_substr(rows, k):
     """Reference implementation: window text keyed directly (no hashing)."""
     words = {d: (t or "").split() for d, t in rows}
     occs = {}
@@ -505,7 +513,7 @@ def _py_exact_substr(rows, k, keep_first=True):
             continue
         keeper = min(posns)
         for d, p in posns:
-            if keep_first and (d, p) == keeper:
+            if (d, p) == keeper:
                 continue
             removed[d].update(range(p, p + k))
     out = {}
@@ -553,19 +561,19 @@ def test_exact_substring_dedup_matches_python_oracle(spark):
     assert got[3] == (rows[2][1], 7, 0, 0)
 
 
-def test_exact_substring_dedup_remove_all(spark):
+def test_exact_substring_dedup_keeps_first_occurrence(spark):
     from ocr_spark.operators.curation import exact_substring_dedup
 
     rows = [(1, "a b c d tail one"), (2, "a b c d tail two")]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
     got = {
         r["doc_id"]: (r["text"], r["n_removed"])
-        for r in exact_substring_dedup(docs, min_words=4, keep_first=False).collect()
+        for r in exact_substring_dedup(docs, min_words=4).collect()
     }
-    want = _py_exact_substr(rows, 4, keep_first=False)
+    want = _py_exact_substr(rows, 4)
     assert got == {d: (t, nr) for d, (t, _, nr, _) in want.items()}
-    # BOTH occurrences of the shared 5-word prefix are gone
-    assert got[1][0] == "one" and got[2][0] == "two"
+    # the shared 5-word prefix survives only in the first doc
+    assert got[1] == (rows[0][1], 0) and got[2][0] == "two"
 
 
 def test_exact_substring_dedup_overlap_merges_to_one_span(spark):

@@ -105,13 +105,13 @@ def test_sample_frames_fanout_and_stride(spark):
 
 
 def test_native_meta_equals_udf_paths(spark):
-    """decode_meta_native / resize_meta_native / make_media_meta_udf must all
-    agree with the original two-UDF path on arbitrary byte patterns (incl.
-    magic prefixes, 16-byte boundary, cap boundary, empty, null)."""
+    """decode_meta_native / resize_meta_native must agree with the two-UDF
+    path (make_decode_udf + make_resize_udf's n_bytes/quality/resized) on
+    arbitrary byte patterns (incl. magic prefixes, 16-byte boundary, cap
+    boundary, empty, null)."""
     from ocr_spark.operators.media import (
         decode_meta_native,
-        make_media_meta_udf,
-        make_resize_meta_udf,
+        make_resize_udf,
         resize_meta_native,
     )
 
@@ -132,7 +132,7 @@ def test_native_meta_equals_udf_paths(spark):
     df = _blob_df(spark, blobs)
     udf_rows = (
         df.withColumn("m", make_decode_udf()("data"))
-        .withColumn("r", make_resize_meta_udf()("data"))
+        .withColumn("r", make_resize_udf()("data"))
         .select("i", "m.*", F.col("r.n_bytes").alias("final_bytes"),
                 "r.quality", "r.resized")
         .orderBy("i")
@@ -146,20 +146,13 @@ def test_native_meta_equals_udf_paths(spark):
         .orderBy("i")
         .collect()
     )
-    fused_rows = (
-        df.withColumn("f", make_media_meta_udf()("data"))
-        .select("i", "f.width", "f.height", "f.format", "f.n_bytes",
-                "f.final_bytes", "f.quality", "f.resized")
-        .orderBy("i")
-        .collect()
-    )
-    for u, n, f in zip(udf_rows, nat_rows, fused_rows):
+    assert len(udf_rows) == len(nat_rows) == len(blobs)
+    for u, n in zip(udf_rows, nat_rows):
         if u.n_bytes is None:
             # native expressions are total functions of the bytes; only the
-            # null ROW contract differs (fused/UDF emit all-null structs)
-            assert f.n_bytes is None
+            # null ROW contract differs (the UDFs emit all-null structs)
             continue
-        assert tuple(u) == tuple(n) == tuple(f), (u, n, f)
+        assert tuple(u) == tuple(n), (u, n)
 
 
 def test_real_decode_gate():

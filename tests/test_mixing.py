@@ -34,23 +34,6 @@ def test_decontaminate_flags_overlapping_grams(spark):
     assert out[5]["n_contaminated"] == 2 and not out[5]["keep"]
 
 
-def test_decontaminate_shuffle_join_fallback_matches_broadcast(spark):
-    """broadcast_benchmark=False (corpus-sized benchmark side) gives the
-    identical answer through a shuffled gram join."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    bench = _docs(spark, [(100, "the quick brown fox jumps")])
-    train = _docs(spark, [(1, "a quick brown fox here"), (2, "clean text entirely")])
-    a = sorted(map(tuple, decontaminate(train, bench, n=3).collect()))
-    fb = decontaminate(train, bench, n=3, broadcast_benchmark=False)
-    b = sorted(map(tuple, fb.collect()))
-    assert a == b
-    plan = fb._jdf.queryExecution().executedPlan().toString()
-    # no forced broadcast on the gram join (AQE may still convert at runtime
-    # when stats allow — the point is the hint is gone)
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan[:2000]
-
-
 def test_decontaminate_min_overlaps_and_distinct_counting(spark):
     bench = _docs(spark, [(100, "the quick brown fox jumps")])
     # the matching gram repeats, but distinct-gram counting sees ONE overlap
@@ -167,40 +150,6 @@ def test_top_ngrams_counts_and_ties(spark):
     ]
     plan = top_ngrams(docs, n=3, k=3)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan[:1500]  # never a global sort
-
-
-def test_top_ngrams_hashed_matches_exact_on_untied_counts(spark):
-    """The two-pass hashed variant equals the exact one wherever counts are
-    untied, and its pass-1 shuffle partitions on the 64-bit hash, not the
-    gram string."""
-    from ocr_spark.operators.curation import top_ngrams, top_ngrams_hashed
-
-    # 3-word docs only: no intra-doc bridging grams, so counts are untied
-    docs = _docs(spark, [
-        (1, "a b c"), (2, "a b c"), (3, "a b c"),   # "a b c" x3
-        (4, "d e f"), (5, "d e f"),                 # "d e f" x2
-        (6, "g h i"),
-        (7, ""),
-    ])
-    exact = [(r["gram"], r["n_occurrences"]) for r in top_ngrams(docs, n=3, k=2).collect()]
-    hashed = [(r["gram"], r["n_occurrences"]) for r in top_ngrams_hashed(docs, n=3, k=2).collect()]
-    assert exact == hashed == [("a b c", 3), ("d e f", 2)]
-    # empty corpus: zero rows, stable schema
-    empty = top_ngrams_hashed(_docs(spark, [(1, "")]), n=3, k=5)
-    assert empty.count() == 0 and empty.columns == ["gram", "n_occurrences"]
-    # larger corpus with a strictly-untied count ladder: gram family g
-    # appears exactly g+1 times (210 docs, counts 1..20 all distinct), so
-    # hashed and exact must agree on membership, counts AND order
-    rows, did = [], 0
-    for g in range(20):
-        for _ in range(g + 1):
-            rows.append((did, f"w{g} x{g} y{g}"))
-            did += 1
-    big = spark.createDataFrame(rows, "doc_id long, text string")
-    e = [(r["gram"], r["n_occurrences"]) for r in top_ngrams(big, n=3, k=8).collect()]
-    h = [(r["gram"], r["n_occurrences"]) for r in top_ngrams_hashed(big, n=3, k=8).collect()]
-    assert e == h
-    assert e[0] == ("w19 x19 y19", 20) and len(e) == 8
 
 
 def test_mix_job_end_to_end(spark, tmp_path, monkeypatch):

@@ -86,27 +86,50 @@ def test_checkpointed_empty_input(spark, catalog):
     assert out["extracted"].schema.simpleString() == extract_docs(docs).schema.simpleString()
 
 
-def test_error_split(spark, catalog):
+def test_error_split(spark, catalog, monkeypatch):
     df = spark.createDataFrame(
-        [("a", 1), ("b", -1), ("c", 2), ("d", -2)], "doc_id string, v int"
+        [(f"d{i:02d}", -i if i % 10 == 0 else i) for i in range(1, 41)],
+        "doc_id string, v int",
     )
+    negative = sorted(f"d{i:02d}" for i in range(10, 41, 10))
 
     def transform(d):
         return d.withColumn(
             "error", F.when(F.col("v") < 0, F.lit("negative value")).otherwise(F.lit(None).cast("string"))
         )
 
-    out = run_stage(
-        catalog, "checked", df, transform, n_partitions=2, lineage="raw",
-        error_col="error",
+    def run():
+        return run_stage(
+            catalog, "checked", df, transform, n_partitions=4, lineage="raw",
+            error_col="error",
+        )
+
+    # crash after the data and error writes, before the manifest lands: the
+    # rerun redoes every bucket and must not duplicate its error rows
+    append = Catalog.append_manifest
+    crashed = []
+
+    def crash_once(self, rows):
+        if not crashed:
+            crashed.append(rows)
+            raise RuntimeError("simulated crash")
+        return append(self, rows)
+
+    monkeypatch.setattr(Catalog, "append_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run()
+    out = run()
+    assert sorted(r.doc_id for r in out.collect()) == sorted(
+        r.doc_id for r in df.collect() if r.doc_id not in negative
     )
-    assert sorted(r.doc_id for r in out.collect()) == ["a", "c"]
-    errs = catalog.read("checked_errors")
-    assert sorted(r.doc_id for r in errs.collect()) == ["b", "d"]
+    errs = catalog.read("checked_errors").drop("__pid")
+    assert errs.columns == ["doc_id", "v", "error"]
+    assert sorted(r.doc_id for r in errs.collect()) == negative
     m = catalog.manifest()
-    assert m.agg(F.sum("errors")).collect()[0][0] == 2
-    assert m.agg(F.sum("rows_in")).collect()[0][0] == 4
-    assert m.agg(F.sum("rows_out")).collect()[0][0] == 2
+    assert m.count() == 4
+    assert m.agg(F.sum("errors")).collect()[0][0] == 4
+    assert m.agg(F.sum("rows_in")).collect()[0][0] == 40
+    assert m.agg(F.sum("rows_out")).collect()[0][0] == 36
 
 
 def test_pipeline_end_to_end(spark, catalog):

@@ -111,23 +111,6 @@ def test_domain_cap_hash_threshold_matches_python(spark):
     # carried metadata
     one = out.filter(F.col("doc_id") == 1000).collect()[0]
     assert one["domain"] == "cold.com" and one["domain_docs"] == 3
-
-
-def test_domain_cap_exact_window(spark):
-    rows = [(i, "http://hot.com/" + str(i)) for i in range(50)]
-    rows += [(900, "http://cold.com/a")]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = domain_cap(df, cap=5, seed=1, exact=True).collect()
-    by_dom = {}
-    for r in out:
-        by_dom.setdefault(r["domain"], []).append(r["doc_id"])
-    assert len(by_dom["hot.com"]) == 5 and by_dom["cold.com"] == [900]
-    # deterministic: same seed, same survivors
-    again = sorted(
-        r["doc_id"]
-        for r in domain_cap(df, cap=5, seed=1, exact=True).collect()
-    )
-    assert again == sorted(r["doc_id"] for r in out)
     with pytest.raises(ValueError, match="cap"):
         domain_cap(df, cap=0)
 
@@ -141,11 +124,6 @@ def test_domain_cap_scale_path_has_no_window(spark):
     )
     plan = domain_cap(df, cap=2)._jdf.queryExecution().optimizedPlan().toString()
     assert "Window" not in plan
-    exact_plan = (
-        domain_cap(df, cap=2, exact=True)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "Window" in exact_plan
 
 
 # ------------------------------------------------------------- blocklist
