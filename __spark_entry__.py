@@ -5,12 +5,19 @@
 SURVEY.md §2; ``oracle_sql()`` gives the DuckDB-equivalent SQL for every
 SQL-expressible query.
 
-Cross-engine parity notes:
+Cross-engine parity notes — each gate contract is stated once:
 * Oracle regex chains are GENERATED from the same pattern tables the Spark
-  operators use (ocr_spark.functions.textnorm) by a Java→RE2 translator, so
-  Spark and DuckDB literally share one source of truth. RE2 lacks lookahead,
-  so the one lookahead rule (choice normalization) is emulated with a
-  verified two-rule rewrite.
+  operators use (ocr_spark.functions.textnorm, curation.PII_PATTERNS) by a
+  Java→RE2 translator, so Spark and DuckDB literally share one source of
+  truth. RE2 lacks lookahead, so the one lookahead rule (choice
+  normalization) is emulated with a verified two-rule rewrite.
+* Synthesized gate inputs are written once as SQL (``_*_SQL``), embedded by
+  the oracle and evaluated by Spark with F.expr / selectExpr / spark.sql —
+  except where the dialects disagree (Spark rejects ``//`` and ``cast(x as
+  varchar)``, reads ``trim(a, b)`` as trim(trimStr, str), and types
+  ``floor(x / 2)`` bigint where DuckDB returns a double).
+* Operator constants (fold tables, whitespace classes, web/boilerplate
+  regexes) are interpolated into the oracle SQL, never pasted as literals.
 * Float aggregates are rounded (2–4 dp) on both sides before hashing.
 * Every LIMIT/top-k query carries a deterministic tiebreak column.
 """
@@ -20,6 +27,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from string import ascii_lowercase, ascii_uppercase
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,6 +44,8 @@ from ocr_spark.functions.textnorm import (
     insert_image_tags,
 )
 from ocr_spark.functions.textstats import (
+    NON_WS_RUN,
+    WS_CHARS,
     WS_CLASS,
     bpe_token_count,
     detect_language,
@@ -45,6 +55,8 @@ from ocr_spark.functions.textstats import (
 from ocr_spark.functions.textstats import doc_fingerprint, rolling_fingerprints
 from ocr_spark.functions.textnorm import extract_json_block, mime_type
 from ocr_spark.functions.uniconst import FOLD_FROM, FOLD_TO
+from ocr_spark.operators.boilerplate import _ANCHOR_RE, _TAG_RE, BLOCK_TAG_RE
+from ocr_spark.operators.curation import PII_PATTERNS
 from ocr_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
@@ -62,8 +74,9 @@ from ocr_spark.operators.scores import (
     weighted_scores,
 )
 from ocr_spark.operators.similarity import top_k_per_query, top_k_similar
-from ocr_spark.operators.structure import extract_problems
+from ocr_spark.operators.structure import CHOICE_RE, extract_problems
 from ocr_spark.operators.tags import questions_by_multiple_tags
+from ocr_spark.operators.web import _SCHEME_RE, TRACKING_PARAM_RE
 from ocr_spark.plans.pipeline import run_pipeline
 from ocr_spark.schema import SPAN_STRUCT
 
@@ -95,10 +108,9 @@ def _re2_pattern(pat: str) -> str:
     """Strip the Unicode flag (RE2 classes are ASCII; oracle inputs are ASCII
     for \\w/\\d-bearing patterns, so semantics agree) and align whitespace
     EXPLICITLY: neither engine's ``\\s`` shorthand is trusted on the
-    value-exact comparison surface, so every ``\\s`` becomes the literal
-    class ``[ \\t\\n\\x0b\\f\\r]`` (`` \\t\\n\\x0b\\f\\r`` inside an existing
-    class) and a bare ``\\S`` becomes ``[^ \\t\\n\\x0b\\f\\r]`` — same
-    convention as the hand-written oracle SQL and textstats.WS_CLASS."""
+    value-exact comparison surface, so every ``\\s`` becomes the shared
+    class textstats.WS_CLASS (its characters WS_CHARS inside an existing
+    class) and a bare ``\\S`` becomes its complement."""
     pat = pat.replace("(?mU)", "(?m)").replace("(?U)", "")
     out: list[str] = []
     i, in_class = 0, False
@@ -107,9 +119,9 @@ def _re2_pattern(pat: str) -> str:
         if ch == "\\" and i + 1 < len(pat):
             nxt = pat[i + 1]
             if nxt == "s":
-                out.append(" \\t\\n\\x0b\\f\\r" if in_class else "[ \\t\\n\\x0b\\f\\r]")
+                out.append(WS_CHARS if in_class else WS_CLASS)
             elif nxt == "S" and not in_class:
-                out.append("[^ \\t\\n\\x0b\\f\\r]")
+                out.append("[^" + WS_CHARS + "]")
             else:
                 out.append(ch + nxt)
             i += 2
@@ -137,6 +149,22 @@ def _normalized_text_sql(expr: str) -> str:
         f"trim(regexp_replace(translate({expr}, {_FOLD_SQL_ARGS}), "
         f"'{WS_CLASS}+', ' ', 'g'), ' ')"
     )
+
+
+def _words_sql(expr: str) -> str:
+    """SQL twin of curation.words_column: the maximal non-whitespace runs."""
+    return f"regexp_extract_all({expr}, '{NON_WS_RUN}')"
+
+
+def _pii_chain_sql(expr: str) -> str:
+    """SQL twin of curation.redact_pii, generated from PII_PATTERNS."""
+    out = expr
+    for _, pat, repl in PII_PATTERNS:
+        out = (
+            f"regexp_replace({out},\n                 "
+            f"{_sql_quote(pat)}, {_sql_quote(repl)}, 'g')"
+        )
+    return out
 
 
 def _math_chain_sql(expr: str) -> str:
@@ -188,29 +216,13 @@ def _figure_chain_sql(expr: str, base_expr: str, image_base: str = "images") -> 
 
 
 # ---------------------------------------------------------------------------
-# shared synthesized inputs (must match between Spark and SQL exactly)
+# shared synthesized inputs: written once in SQL, evaluated by both engines
+# (Spark through F.expr / spark.sql, DuckDB inside the oracle)
 # ---------------------------------------------------------------------------
-_MATH_SUFFIX_SPARK = lambda: F.concat(  # noqa: E731
-    F.col("text"),
-    F.lit(" sqrt test √"), (F.col("doc_id") % 97).cast("string"),
-    F.lit(" frac "), (F.col("doc_id") % 50).cast("string"),
-    F.lit("/"), ((F.col("doc_id") % 9) + 1).cast("string"),
-    F.lit(" pow x^"), (F.col("doc_id") % 9).cast("string"),
-    F.lit(" sub a_"), (F.col("doc_id") % 7).cast("string"),
-    F.lit(" sin(x) cos(2t) tan(z) [数式:E=mc^2] ∫x dx α β γ θ π ∞"),
-)
-
 _MATH_SUFFIX_SQL = (
     "coalesce(text, '') || ' sqrt test √' || (doc_id % 97) || ' frac ' || (doc_id % 50) || '/' "
     "|| ((doc_id % 9) + 1) || ' pow x^' || (doc_id % 9) || ' sub a_' || (doc_id % 7) "
     "|| ' sin(x) cos(2t) tan(z) [数式:E=mc^2] ∫x dx α β γ θ π ∞'"
-)
-
-_LAYOUT_TEXT_SPARK = lambda: F.concat(  # noqa: E731
-    (F.col("doc_id") % 5).cast("string"), F.lit("． Heading line\n"),
-    ((F.col("doc_id") + 1) % 4).cast("string"), F.lit("、choice no space digit\n"),
-    F.lit("2.  3 backtrack case\n3.4 no match\n• bullet one\n・ bullet two\n\n\n\n\n"),
-    F.col("text"),
 )
 
 _LAYOUT_TEXT_SQL = (
@@ -220,26 +232,10 @@ _LAYOUT_TEXT_SQL = (
     "chr(10) || chr(10) || chr(10) || chr(10) || chr(10) || coalesce(text, '')"
 )
 
-_FIG_TEXT_SPARK = lambda: F.concat(  # noqa: E731
-    F.lit("see [図"), ((F.col("doc_id") % 4) + 1).cast("string"),
-    F.lit("] and [表"), ((F.col("doc_id") % 3) + 1).cast("string"),
-    F.lit("] mid "), F.col("text"),
-    F.lit(" then [Fig."), ((F.col("doc_id") % 5) + 1).cast("string"),
-    F.lit("] end [Table"), ((F.col("doc_id") % 2) + 1).cast("string"), F.lit("]"),
-)
-
 _FIG_TEXT_SQL = (
     "'see [図' || ((doc_id % 4) + 1) || '] and [表' || ((doc_id % 3) + 1) || '] mid ' "
     "|| coalesce(text, '') || ' then [Fig.' || ((doc_id % 5) + 1) || '] end [Table' || "
     "((doc_id % 2) + 1) || ']'"
-)
-
-_HTML_SPARK = lambda: F.concat(  # noqa: E731
-    F.lit('<nav><a href="#">Home</a> <a href="#">About</a> <a href="#">Contact</a></nav><h1>'),
-    F.col("source"), F.lit(" document "), F.col("doc_id").cast("string"),
-    F.lit(" heading line</h1><p>"), F.col("text"),
-    F.lit('</p><p>tiny</p><div>More <a href="#">link one</a> <a href="#">link two</a> txt</div>'
-          '<footer><a href="#">Privacy</a> | <a href="#">Terms</a></footer>'),
 )
 
 _HTML_SQL = (
@@ -249,27 +245,58 @@ _HTML_SQL = (
     "<footer><a href=\"#\">Privacy</a> | <a href=\"#\">Terms</a></footer>'"
 )
 
-# word-level span synthesis shared by reconstruction / numbering / grammar
-# queries: kind is a pure function of (word, position).
-_SPAN_KIND_SQL = (
-    "case when pos % 13 = 1 then 'heading' "
-    "when pos % 13 in (5, 6) then 'choice' "
-    "when word = 'table' then 'media' "
-    "when pos % 11 = 3 then 'table' else 'text' end"
+# ASCII-only case variant: engine upper() tables drift on exotic cased
+# codepoints (the uniconst lesson, upper side)
+_ASCII_UPPER_SQL = (
+    f"translate(coalesce(text, ''), '{ascii_lowercase}', '{ascii_uppercase}')"
 )
 
-# same classifier over the RAW (pre-NUL-strip) word — the extraction
-# pipeline decides kind before extract_docs sanitizes non-media span text
-_SPAN_KIND_RAW_SQL = _SPAN_KIND_SQL.replace("word = 'table'", "raw_word = 'table'")
+_LANG_TEXT_SQL = """case when doc_id % 7 = 0
+                      then 'この回路の合成抵抗を求めよ。電圧と電流の関係を示せ。'
+                      else coalesce(text, '') end"""
+
+_JSON_TEXT_SQL = """'intro ' || substring(coalesce(text, ''), 1, 20) || ' ```json' || chr(10) ||
+                 '{"k": ' || doc_id || '}' || chr(10) || '``` outro'"""
+
+_MIME_EXT_SQL = """case when doc_id % 4 = 0 then 'png'
+                      when doc_id % 4 = 1 then 'JPG'
+                      when doc_id % 4 = 2 then 'webp' else 'txt' end"""
+_MIME_NAME_SQL = "source || '_' || doc_id || '.' || ext"
+
+_SUBSTR_TEXT_SQL = """case when doc_id % 3 = 0
+                      then 'subscribe to our newsletter for daily updates today '
+                           || coalesce(text, '')
+                      else text end"""
+
+_LANGID_LANG_SQL = """case when doc_id % 3 = 0 then 'aa'
+                      when doc_id % 3 = 1 then 'bb'
+                      else 'cc' end"""
+_LANGID_TEXT_SQL = """case when doc_id % 3 = 0 then coalesce(text, '')
+                            when doc_id % 3 = 1
+                              then translate(coalesce(text, ''), 'etaoins', 'XXXXXXX')
+                            else translate(coalesce(text, ''), 'rhldcum', 'QQQQQQQ') end"""
+
+# the synthesized tables the score gates join; {orders} is the orders table
+# (a DataFrame argument of spark.sql on the Spark side)
+_DERIVED_ANSWERS_SQL = (
+    "select 'u' || (o_custkey % 37) as user_id, 'Q' || (o_orderkey % 200) as question_id, "
+    "o_orderstatus = 'F' as status, 'EXAM' as exam_type, o_orderdate as created_at from {orders}"
+)
+_DERIVED_META_SQL = (
+    "select 'Q' || i as question_id, "
+    "case when i % 3 = 0 then 'LOW' when i % 3 = 1 then 'MID' else 'HIGH' end as difficulty, "
+    "i % 2 = 0 as is_mandatory, 'EXAM' as exam_type from range(200) t(i)"
+)
 
 
-def _span_kind_spark(word: F.Column, pos: F.Column) -> F.Column:
+def _span_kind_sql(word: str) -> str:
+    """Word-level span kind, a pure function of (word, pos): shared by the
+    reconstruction / numbering / grammar gates and their oracles."""
     return (
-        F.when(pos % 13 == 1, "heading")
-        .when((pos % 13).isin(5, 6), "choice")
-        .when(word == "table", "media")
-        .when(pos % 11 == 3, "table")
-        .otherwise("text")
+        "case when pos % 13 = 1 then 'heading' "
+        "when pos % 13 in (5, 6) then 'choice' "
+        f"when {word} = 'table' then 'media' "
+        "when pos % 11 = 3 then 'table' else 'text' end"
     )
 
 
@@ -306,13 +333,14 @@ def _spans_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize the input_hint spans shape deterministically from the
     driver's documents table (word-level spans, kind from (word, pos))."""
     w = _words_with_pos(docs)
+    kind = F.expr(_span_kind_sql("word"))
     spans = w.select(
         "doc_id",
         F.struct(
-            _span_kind_spark(F.col("word"), F.col("pos")).alias("kind"),
+            kind.alias("kind"),
             F.col("word").alias("text"),
             F.when(
-                _span_kind_spark(F.col("word"), F.col("pos")) == "media",
+                kind == "media",
                 F.concat(F.lit("img://"), F.col("doc_id").cast("string"), F.lit("/"), F.col("pos").cast("string")),
             ).alias("media_ref"),
             (F.col("pos") - 1).cast("int").alias("offset"),
@@ -332,7 +360,7 @@ def _spans_from_documents(docs: DataFrame) -> DataFrame:
 def q_t4_math_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
     return docs.select(
-        "doc_id", apply_math_patterns(_MATH_SUFFIX_SPARK()).alias("rewritten")
+        "doc_id", apply_math_patterns(F.expr(_MATH_SUFFIX_SQL)).alias("rewritten")
     )
 
 
@@ -340,13 +368,13 @@ def q_t5_figure_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
     base = F.concat(F.lit("doc_"), F.col("doc_id").cast("string"))
     return docs.select(
-        "doc_id", insert_image_tags(_FIG_TEXT_SPARK(), base).alias("tagged")
+        "doc_id", insert_image_tags(F.expr(_FIG_TEXT_SQL), base).alias("tagged")
     )
 
 
 def q_t6_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
-    return docs.select("doc_id", format_layout(_LAYOUT_TEXT_SPARK()).alias("formatted"))
+    return docs.select("doc_id", format_layout(F.expr(_LAYOUT_TEXT_SQL)).alias("formatted"))
 
 
 def q_t13_question_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,7 +409,7 @@ def q_figure_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7: media spans numbered 1..N per doc in document order."""
     docs = _docs_table(spark, sf_dir)
     w = _words_with_pos(docs)
-    media = w.filter(_span_kind_spark(F.col("word"), F.col("pos")) == "media")
+    media = w.filter(F.expr(_span_kind_sql("word")) == "media")
     win = Window.partitionBy("doc_id").orderBy("pos")
     return media.select(
         "doc_id", "pos", F.row_number().over(win).alias("fig_no")
@@ -406,16 +434,8 @@ def q_problems_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir).select("doc_id", "text", "source")
-    copies = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(
-            F.lit("  "),
-            # ASCII-only case variant: engine upper() tables drift on
-            # exotic cased codepoints (the uniconst lesson, upper side)
-            F.translate("text", "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"),
-            F.lit("  "),
-        ).alias("text"),
-        F.col("source"),
+    copies = docs.filter(F.col("doc_id") % 10 == 0).selectExpr(
+        "doc_id + 100000 as doc_id", f"'  ' || {_ASCII_UPPER_SQL} || '  ' as text", "source"
     )
     unioned = docs.unionByName(copies)
     return exact_dedup(unioned).select("doc_id", "source")
@@ -472,10 +492,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lang_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
-    text2 = F.when(
-        F.col("doc_id") % 7 == 0, F.lit("この回路の合成抵抗を求めよ。電圧と電流の関係を示せ。")
-    ).otherwise(F.col("text"))
-    return docs.select("doc_id", detect_language(text2).alias("lang"))
+    return docs.select("doc_id", detect_language(F.expr(_LANG_TEXT_SQL)).alias("lang"))
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -918,15 +935,7 @@ def q_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (untouched docs keep their original text byte-for-byte)."""
     from ocr_spark.operators.curation import exact_substring_dedup
 
-    bp = "subscribe to our newsletter for daily updates today"
-    docs = _docs_table(spark, sf_dir).select("doc_id", "text")
-    planted = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.lit(bp + " "), F.coalesce("text", F.lit(""))),
-        ).otherwise(F.col("text")),
-    )
+    planted = _docs_table(spark, sf_dir).selectExpr("doc_id", f"{_SUBSTR_TEXT_SQL} as text")
     out = exact_substring_dedup(planted, min_words=5)
     return out.select(
         "doc_id",
@@ -987,17 +996,8 @@ def _langid_inputs(spark: SparkSession, sf_dir: str):
     engine; the earlier 'cc' = reverse() diverged on combining marks
     (DuckDB reverses GRAPHEMES, Spark reverses codepoints)."""
     d = F.col("doc_id")
-    t0 = F.coalesce("text", F.lit(""))
-    lang = (
-        F.when(d % 3 == 0, "aa").when(d % 3 == 1, "bb").otherwise("cc")
-    )
-    text = (
-        F.when(d % 3 == 0, t0)
-        .when(d % 3 == 1, F.translate(t0, "etaoins", "XXXXXXX"))
-        .otherwise(F.translate(t0, "rhldcum", "QQQQQQQ"))
-    )
-    docs = _docs_table(spark, sf_dir).select(
-        "doc_id", lang.alias("lang"), text.alias("text")
+    docs = _docs_table(spark, sf_dir).selectExpr(
+        "doc_id", f"{_LANGID_LANG_SQL} as lang", f"{_LANGID_TEXT_SQL} as text"
     )
     fit = docs.filter(d % 5 == 0).select("lang", "text")
     score = docs.filter(d % 5 != 0).select("doc_id", "text")
@@ -1190,34 +1190,13 @@ def q_parts_multi_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _derived_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _tpch(spark, sf_dir, "orders")
-    return orders.select(
-        F.concat(F.lit("u"), (F.col("o_custkey") % 37).cast("string")).alias("user_id"),
-        F.concat(F.lit("Q"), (F.col("o_orderkey") % 200).cast("string")).alias("question_id"),
-        (F.col("o_orderstatus") == "F").alias("status"),
-        F.lit("EXAM").alias("exam_type"),
-        F.col("o_orderdate").alias("created_at"),
-    )
+    # a DataFrame argument, not a temp view: one session may read several
+    # sf dirs, and a named view would be shared between them
+    return spark.sql(_DERIVED_ANSWERS_SQL, orders=_tpch(spark, sf_dir, "orders"))
 
 
 def _derived_meta(spark: SparkSession) -> DataFrame:
-    return spark.range(200).select(
-        F.concat(F.lit("Q"), F.col("id").cast("string")).alias("question_id"),
-        F.when(F.col("id") % 3 == 0, "LOW").when(F.col("id") % 3 == 1, "MID").otherwise("HIGH").alias("difficulty"),
-        (F.col("id") % 2 == 0).alias("is_mandatory"),
-        F.lit("EXAM").alias("exam_type"),
-    )
-
-
-_DERIVED_ANSWERS_SQL = (
-    "select 'u' || (o_custkey % 37) as user_id, 'Q' || (o_orderkey % 200) as question_id, "
-    "o_orderstatus = 'F' as status, 'EXAM' as exam_type, o_orderdate as created_at from orders"
-)
-_DERIVED_META_SQL = (
-    "select 'Q' || i as question_id, "
-    "case when i % 3 = 0 then 'LOW' when i % 3 = 1 then 'MID' else 'HIGH' end as difficulty, "
-    "i % 2 = 0 as is_mandatory, 'EXAM' as exam_type from range(200) t(i)"
-)
+    return spark.sql(_DERIVED_META_SQL)
 
 
 def q_weighted_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,12 +1331,7 @@ def q_head_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T9: fenced-JSON block extraction (/root/reference/src/generate_embedding.py:187-193)."""
     docs = _docs_table(spark, sf_dir)
-    t2 = F.concat(
-        F.lit("intro "), F.substring("text", 1, 20),
-        F.lit(' ```json\n{"k": '), F.col("doc_id").cast("string"),
-        F.lit("}\n``` outro"),
-    )
-    return docs.select("doc_id", extract_json_block(t2).alias("block"))
+    return docs.select("doc_id", extract_json_block(F.expr(_JSON_TEXT_SQL)).alias("block"))
 
 
 def q_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,14 +1344,8 @@ def q_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_base64_mime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T12: base64 encode + extension MIME sniff + byte checksum
     (/root/reference/src/ocr_engine.py:190-198, src/ocr_to_markdown.py:95-123)."""
-    docs = _docs_table(spark, sf_dir)
-    ext = (
-        F.when(F.col("doc_id") % 4 == 0, "png")
-        .when(F.col("doc_id") % 4 == 1, "JPG")
-        .when(F.col("doc_id") % 4 == 2, "webp")
-        .otherwise("txt")
-    )
-    fname = F.concat(F.col("source"), F.lit("_"), F.col("doc_id").cast("string"), F.lit("."), ext)
+    docs = _docs_table(spark, sf_dir).selectExpr("*", f"{_MIME_EXT_SQL} as ext")
+    fname = F.expr(_MIME_NAME_SQL)
     checksum = F.aggregate(
         F.transform(F.split(F.substring("text", 1, 16), ""), lambda c: F.ascii(c)),
         F.lit(0),
@@ -1409,9 +1377,8 @@ def q_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized text. Oracle checks text-equality pairs — identical text <=>
     identical xxhash64 fingerprint (collision-free at this scale)."""
     docs = _docs_table(spark, sf_dir).select("doc_id", "text")
-    copies = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(F.lit("  "), F.translate("text", "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ")).alias("text"),
+    copies = docs.filter(F.col("doc_id") % 7 == 0).selectExpr(
+        "doc_id + 200000 as doc_id", f"'  ' || {_ASCII_UPPER_SQL} as text"
     )
     un = docs.unionByName(copies)
     fp = un.select("doc_id", doc_fingerprint("text").alias("fp"))
@@ -1688,7 +1655,7 @@ def q_html_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected survivors: the heading and the document body."""
     from ocr_spark.operators.boilerplate import strip_boilerplate
 
-    docs = _docs_table(spark, sf_dir).select("doc_id", _HTML_SPARK().alias("html"))
+    docs = _docs_table(spark, sf_dir).selectExpr("doc_id", f"{_HTML_SQL} as html")
     out = strip_boilerplate(docs)
     return out.select(
         "doc_id",
@@ -1704,8 +1671,8 @@ def q_html_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule), value-exact per block."""
     from ocr_spark.operators.boilerplate import classify_blocks, html_blocks
 
-    docs = _docs_table(spark, sf_dir).filter(F.col("doc_id") < 30).select(
-        "doc_id", _HTML_SPARK().alias("html")
+    docs = _docs_table(spark, sf_dir).filter(F.col("doc_id") < 30).selectExpr(
+        "doc_id", f"{_HTML_SQL} as html"
     )
     out = classify_blocks(html_blocks(docs))
     return out.select(
@@ -1933,6 +1900,8 @@ _WORDS_CTE = (
 
 def oracle_sql() -> dict[str, str]:
     sql: dict[str, str] = {}
+    text_words = _words_sql("coalesce(text, '')")
+    answers = _DERIVED_ANSWERS_SQL.format(orders="orders")
 
     sql["t4_math_rewrite"] = (
         f"select doc_id, {_math_chain_sql('(' + _MATH_SUFFIX_SQL + ')')} as rewritten "
@@ -1978,12 +1947,12 @@ def oracle_sql() -> dict[str, str]:
         {_WORDS_CTE}
         select doc_id, pos,
                row_number() over (partition by doc_id order by pos) as fig_no
-        from words where ({_SPAN_KIND_SQL}) = 'media'
+        from words where ({_span_kind_sql('word')}) = 'media'
     """
     sql["problems_grammar"] = f"""
         {_WORDS_CTE},
         spans as (
-          select doc_id, pos, word, ({_SPAN_KIND_SQL}) as kind from words
+          select doc_id, pos, word, ({_span_kind_sql('word')}) as kind from words
         ),
         numbered as (
           select *, sum(case when kind = 'heading' then 1 else 0 end)
@@ -2016,7 +1985,7 @@ def oracle_sql() -> dict[str, str]:
         with unioned as (
           select doc_id, coalesce(text, '') as text, source from documents
           union all
-          select doc_id + 100000 as doc_id, '  ' || translate(coalesce(text, ''), 'abcdefghijklmnopqrstuvwxyz', 'ABCDEFGHIJKLMNOPQRSTUVWXYZ') || '  ' as text, source
+          select doc_id + 100000 as doc_id, '  ' || {_ASCII_UPPER_SQL} || '  ' as text, source
           from documents where doc_id % 10 = 0
         )
         select doc_id, source from unioned
@@ -2064,19 +2033,17 @@ def oracle_sql() -> dict[str, str]:
         )
         select id as doc_id, min(v) as cluster from r group by id
     """
-    sql["token_stats"] = r"""
+    sql["token_stats"] = rf"""
         select doc_id,
-               len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as ws_tokens,
-               len(regexp_extract_all(coalesce(text, ''), '\p{L}+|\p{N}+|[^\p{L}\p{N} \t\n\x0b\f\r]')) as bpe_tokens,
+               len({text_words}) as ws_tokens,
+               len(regexp_extract_all(coalesce(text, ''), '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}{WS_CHARS}]')) as bpe_tokens,
                length(coalesce(text, '')) as n_chars_obs
         from documents
     """
-    sql["lang_detect"] = r"""
+    sql["lang_detect"] = rf"""
         with t as (
           select doc_id,
-                 case when doc_id % 7 = 0
-                      then 'この回路の合成抵抗を求めよ。電圧と電流の関係を示せ。'
-                      else coalesce(text, '') end as t2
+                 {_LANG_TEXT_SQL} as t2
           from documents
         ), c as (
           select doc_id, length(t2) as total,
@@ -2093,7 +2060,7 @@ def oracle_sql() -> dict[str, str]:
                     else 'other' end as lang
         from c
     """
-    sql["quality_score"] = r"""
+    sql["quality_score"] = rf"""
         with d as (select doc_id, coalesce(text, '') as text from documents),
         c as (
           select doc_id, text,
@@ -2101,8 +2068,8 @@ def oracle_sql() -> dict[str, str]:
                  greatest(length(text), 1) as total,
                  len(regexp_extract_all(text, '[[:punct:]。、「」・]')) as punct,
                  len(regexp_extract_all(text, '[0-9]')) as digit,
-                 len(regexp_extract_all(text, '[ \t\n\x0b\f\r]')) as space,
-                 len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+')) as ws_tokens
+                 len(regexp_extract_all(text, '{WS_CLASS}')) as space,
+                 len({_words_sql("text")}) as ws_tokens
           from d
         )
         select doc_id,
@@ -2124,10 +2091,10 @@ def oracle_sql() -> dict[str, str]:
                  (select embedding from embeddings where vec_id = 0)::DOUBLE[]) desc, vec_id
         limit 10
     """
-    sql["pack_sequences"] = r"""
+    sql["pack_sequences"] = rf"""
         with t as (
           select doc_id, cast(doc_id % 8 as int) as shard,
-                 cast(len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as bigint) as n_tokens
+                 cast(len({text_words}) as bigint) as n_tokens
           from documents
         ),
         c as (
@@ -2142,12 +2109,12 @@ def oracle_sql() -> dict[str, str]:
                cast((cum - n_tokens) % 256 as int) as offset_in_pack
         from c order by doc_id
     """
-    sql["lm_quality"] = r"""
+    sql["lm_quality"] = rf"""
         with words as (
           select doc_id,
-                 unnest(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as w
+                 unnest({text_words}) as w
           from documents
-          where len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) > 0
+          where len({text_words}) > 0
         ),
         counts as (select w, count(*) as c from words group by w),
         consts as (select cast(sum(c) as double) as total,
@@ -2170,12 +2137,12 @@ def oracle_sql() -> dict[str, str]:
     """
     # CCNet head/middle/tail: the lm_quality scoring CTEs + discrete
     # order-statistic tertile thresholds (see q_perplexity_buckets)
-    sql["perplexity_buckets"] = r"""
+    sql["perplexity_buckets"] = rf"""
         with words as (
           select doc_id,
-                 unnest(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as w
+                 unnest({text_words}) as w
           from documents
-          where len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) > 0
+          where len({text_words}) > 0
         ),
         counts as (select w, count(*) as c from words group by w),
         consts as (select cast(sum(c) as double) as total,
@@ -2217,13 +2184,13 @@ def oracle_sql() -> dict[str, str]:
         from all_ce cross join th
         order by doc_id
     """
-    sql["dedup_lines"] = r"""
+    sql["dedup_lines"] = rf"""
         with words as (
           select doc_id,
-                 unnest(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as w,
-                 generate_subscripts(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+'), 1) as pos
+                 unnest({text_words}) as w,
+                 generate_subscripts({text_words}, 1) as pos
           from documents
-          where len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) > 0
+          where len({text_words}) > 0
         ),
         lines as (
           select doc_id, cast((pos - 1) // 2 as int) as ci,
@@ -2340,7 +2307,7 @@ def oracle_sql() -> dict[str, str]:
         group by p_brand
     """
     sql["weighted_scores"] = f"""
-        with ua as ({_DERIVED_ANSWERS_SQL}),
+        with ua as ({answers}),
         qm as ({_DERIVED_META_SQL}),
         j as (
           select ua.user_id, ua.exam_type, ua.status, qm.difficulty, qm.is_mandatory
@@ -2372,7 +2339,7 @@ def oracle_sql() -> dict[str, str]:
         from agg
     """
     sql["calculate_scores"] = f"""
-        with ua as ({_DERIVED_ANSWERS_SQL}),
+        with ua as ({answers}),
         qm as ({_DERIVED_META_SQL}),
         totals as (
           select exam_type, count(*) as total_questions,
@@ -2400,7 +2367,7 @@ def oracle_sql() -> dict[str, str]:
         from per_user p join totals using (exam_type)
     """
     sql["weak_questions"] = f"""
-        with ua as ({_DERIVED_ANSWERS_SQL}),
+        with ua as ({answers}),
         qm as ({_DERIVED_META_SQL}),
         incorrect as (
           select question_id, cast(count(*) as bigint) as incorrect_count
@@ -2444,7 +2411,7 @@ def oracle_sql() -> dict[str, str]:
                                    order by total_score desc) = 1
     """
     sql["frequent_questions"] = f"""
-        with ua as ({_DERIVED_ANSWERS_SQL}),
+        with ua as ({answers}),
         freq as (
           select 'Q' || i as question_id, 'EXAM' as exam_type,
                  (i * 37 % 1000) / 10.0 as final_score
@@ -2508,11 +2475,10 @@ def oracle_sql() -> dict[str, str]:
                case when rn_top <= 5 then 'similar' else 'dissimilar' end as side
         from ranked where rn_top <= 5 or rn_bot <= 5
     """
-    sql["json_block"] = r"""
+    sql["json_block"] = f"""
         select doc_id,
                trim(regexp_extract(
-                 'intro ' || substring(coalesce(text, ''), 1, 20) || ' ```json' || chr(10) ||
-                 '{"k": ' || doc_id || '}' || chr(10) || '``` outro',
+                 {_JSON_TEXT_SQL},
                  '(?s)```json(.*?)```', 1), ' ') as block
         from documents
     """
@@ -2522,16 +2488,14 @@ def oracle_sql() -> dict[str, str]:
     """
     # checksum chars: '(?s).' not '.' — RE2's bare dot skips \n, silently
     # dropping newline codepoints from the sum (Spark's split('') does not)
-    sql["base64_mime"] = """
+    sql["base64_mime"] = f"""
         with named as (
           select doc_id, coalesce(text, '') as text, source,
-                 case when doc_id % 4 = 0 then 'png'
-                      when doc_id % 4 = 1 then 'JPG'
-                      when doc_id % 4 = 2 then 'webp' else 'txt' end as ext
+                 {_MIME_EXT_SQL} as ext
           from documents
         )
         select doc_id,
-               source || '_' || doc_id || '.' || ext as file_name,
+               {_MIME_NAME_SQL} as file_name,
                case lower(ext) when 'png' then 'image/png'
                     when 'jpg' then 'image/jpeg' when 'jpeg' then 'image/jpeg'
                     when 'webp' then 'image/webp' when 'gif' then 'image/gif'
@@ -2564,7 +2528,7 @@ def oracle_sql() -> dict[str, str]:
         with un as (
           select doc_id, coalesce(text, '') as text from documents
           union all
-          select doc_id + 200000, '  ' || translate(coalesce(text, ''), 'abcdefghijklmnopqrstuvwxyz', 'ABCDEFGHIJKLMNOPQRSTUVWXYZ')
+          select doc_id + 200000, '  ' || {_ASCII_UPPER_SQL}
           from documents where doc_id % 7 = 0
         ),
         norm as (
@@ -2756,7 +2720,7 @@ def oracle_sql() -> dict[str, str]:
     sql["problems_markdown"] = f"""
         {_WORDS_CTE},
         spans as (
-          select doc_id, pos, word, ({_SPAN_KIND_SQL}) as kind from words
+          select doc_id, pos, word, ({_span_kind_sql('word')}) as kind from words
         ),
         numbered as (
           select *, sum(case when kind = 'heading' then 1 else 0 end)
@@ -2772,9 +2736,9 @@ def oracle_sql() -> dict[str, str]:
                  coalesce(string_agg(
                    case when kind = 'choice' then
                      coalesce(nullif(regexp_extract(word,
-                       '^[ \\t\\n\\x0b\\f\\r]*(\\d+)[\\.．、]?[ \\t\\n\\x0b\\f\\r]*(.*)$', 1), ''), '')
+                       {_sql_quote(_re2_pattern(CHOICE_RE))}, 1), ''), '')
                      || '. ' ||
-                     regexp_extract(word, '^[ \\t\\n\\x0b\\f\\r]*(\\d+)[\\.．、]?[ \\t\\n\\x0b\\f\\r]*(.*)$', 2)
+                     regexp_extract(word, {_sql_quote(_re2_pattern(CHOICE_RE))}, 2)
                      || chr(10)
                    end, '' order by pos), '') as choices_md,
                  sum(case when kind = 'choice' then 1 else 0 end) as n_choices
@@ -2930,12 +2894,8 @@ def oracle_sql() -> dict[str, str]:
     # --- north-rule operators: boilerplate strip + layout regions ----------
     # Regex semantics verified identical between Java regex and RE2 for
     # these patterns (block-tag split, tag strip, lazy anchor extraction).
-    _BLOCK_RE = (
-        r"(?i)</?(?:p|div|nav|header|footer|h[1-6]|li|ul|ol|article|section|"
-        r"aside|table|tr|td|br)\b[^>]*>"
-    )
     _FEAT_CTE = f"""
-        bl as (select doc_id, string_split_regex(html, '{_BLOCK_RE}') as arr from base),
+        bl as (select doc_id, string_split_regex(html, '{BLOCK_TAG_RE}') as arr from base),
         blocks as (
           select doc_id, generate_subscripts(arr, 1) - 1 as block_no,
                  unnest(arr) as raw
@@ -2943,14 +2903,14 @@ def oracle_sql() -> dict[str, str]:
         ),
         feat as (
           select doc_id, cast(block_no as int) as block_no,
-                 trim(regexp_replace(regexp_replace(raw, '(?s)<[^>]*>', ' ', 'g'),
-                                     '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') as text,
+                 trim(regexp_replace(regexp_replace(raw, '{_TAG_RE}', ' ', 'g'),
+                                     '{WS_CLASS}+', ' ', 'g'), ' ') as text,
                  cast(coalesce(list_sum(list_transform(
-                        regexp_extract_all(raw, '(?is)<a\\b[^>]*>(.*?)</a>', 1),
+                        regexp_extract_all(raw, '{_ANCHOR_RE}', 1),
                         a -> length(trim(regexp_replace(regexp_replace(a,
-                               '(?s)<[^>]*>', ' ', 'g'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')))), 0)
+                               '{_TAG_RE}', ' ', 'g'), '{WS_CLASS}+', ' ', 'g'), ' ')))), 0)
                       as int) as link_chars,
-                 cast(len(regexp_extract_all(raw, '(?s)<[^>]*>')) as int) as n_tags
+                 cast(len(regexp_extract_all(raw, '{_TAG_RE}')) as int) as n_tags
           from blocks
         ),
         scored as (
@@ -3046,6 +3006,7 @@ def oracle_sql() -> dict[str, str]:
     # pattern (no split/promotion) — and the HASH now catches it if that
     # property ever breaks, unlike the r2 count-only oracle.
     _EXTRACTED_WORD_SQL = _layout_chain_sql(_math_chain_sql("word"))
+    _RAW_KIND_SQL = _span_kind_sql("raw_word")
     # non-media span text strips literal NULs first, mirroring the
     # operator's sentinel-forgery defense (extract._normalized_text strips
     # \x00 before the in-band image-sentinel pass); kind is decided on the
@@ -3060,10 +3021,10 @@ def oracle_sql() -> dict[str, str]:
         ),
         spans as (
           select doc_id, pos,
-                 ({_SPAN_KIND_RAW_SQL}) as kind,
-                 case when ({_SPAN_KIND_RAW_SQL}) = 'media' then raw_word
+                 ({_RAW_KIND_SQL}) as kind,
+                 case when ({_RAW_KIND_SQL}) = 'media' then raw_word
                       else {_EXTRACTED_WORD_SQL} end as text,
-                 case when ({_SPAN_KIND_RAW_SQL}) = 'media'
+                 case when ({_RAW_KIND_SQL}) = 'media'
                       then 'img://' || doc_id || '/' || pos end as media_ref
           from cleaned
         )
@@ -3090,13 +3051,13 @@ def oracle_sql() -> dict[str, str]:
     # runs over the EXPLICIT shared class (textstats.WS_CHARS — engine \s
     # shorthand is never trusted on a value-exact surface); empty text ->
     # zero words (left joins restore empty docs with zeroed stats)
-    _CURATION_WORDS = r"""
+    _CURATION_WORDS = rf"""
         words as (
           select doc_id,
-                 unnest(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) as w,
-                 generate_subscripts(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+'), 1) as pos
+                 unnest({text_words}) as w,
+                 generate_subscripts({text_words}, 1) as pos
           from documents
-          where len(regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+')) > 0
+          where len({text_words}) > 0
         )
     """
     sql["repetition_stats"] = f"""
@@ -3141,13 +3102,13 @@ def oracle_sql() -> dict[str, str]:
     sql["gopher_quality"] = rf"""
         with base as (
           select doc_id, coalesce(text, '') as t,
-                 regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+') as ws
+                 {text_words} as ws
           from documents
         ),
         raw as (
           select doc_id,
                  len(ws) as n_words,
-                 cast(length(regexp_replace(t, '[ \t\n\x0b\f\r]', '', 'g')) as double)
+                 cast(length(regexp_replace(t, '{WS_CLASS}', '', 'g')) as double)
                    / greatest(len(ws), 1) as mean_word_len,
                  cast(len(regexp_extract_all(t, '#|\.\.\.|…')) as double)
                    / greatest(len(ws), 1) as symbol_ratio,
@@ -3214,18 +3175,15 @@ def oracle_sql() -> dict[str, str]:
     # at sf scale is ~1e-15); keeper = row_number 1 by (doc, pos), interval
     # merge via gaps-and-islands (equal window length k=5 makes the
     # running-max lag(pos)+5), rebuild = words not covered by any island.
-    sql["substr_dedup"] = r"""
+    sql["substr_dedup"] = rf"""
         with docs0 as (
           select doc_id,
-                 case when doc_id % 3 = 0
-                      then 'subscribe to our newsletter for daily updates today '
-                           || coalesce(text, '')
-                      else text end as t
+                 {_SUBSTR_TEXT_SQL} as t
           from documents
         ),
         base as (
           select doc_id, coalesce(t, '') as t,
-                 regexp_extract_all(coalesce(t, ''), '[^ \t\n\x0b\f\r]+') as ws
+                 {_words_sql("coalesce(t, '')")} as ws
           from docs0
         ),
         wins as (
@@ -3292,13 +3250,8 @@ def oracle_sql() -> dict[str, str]:
     _LANGID_COMMON = rf"""
         with docs0 as (
           select doc_id,
-                 case when doc_id % 3 = 0 then 'aa'
-                      when doc_id % 3 = 1 then 'bb'
-                      else 'cc' end as lang,
-                 translate(case when doc_id % 3 = 0 then coalesce(text, '')
-                            when doc_id % 3 = 1
-                              then translate(coalesce(text, ''), 'etaoins', 'XXXXXXX')
-                            else translate(coalesce(text, ''), 'rhldcum', 'QQQQQQQ') end,
+                 {_LANGID_LANG_SQL} as lang,
+                 translate({_LANGID_TEXT_SQL},
                    {_FOLD_SQL_ARGS}) as t
           from documents
         ),
@@ -3385,13 +3338,13 @@ def oracle_sql() -> dict[str, str]:
     sql["curation_pipeline"] = rf"""
         with base as (
           select doc_id, coalesce(text, '') as t,
-                 regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+') as ws
+                 {text_words} as ws
           from documents
         ),
         raw as (
           select doc_id,
                  len(ws) as n_words,
-                 cast(length(regexp_replace(t, '[ \t\n\x0b\f\r]', '', 'g')) as double)
+                 cast(length(regexp_replace(t, '{WS_CLASS}', '', 'g')) as double)
                    / greatest(len(ws), 1) as mean_word_len,
                  cast(len(regexp_extract_all(t, '#|\.\.\.|…')) as double)
                    / greatest(len(ws), 1) as symbol_ratio,
@@ -3411,10 +3364,10 @@ def oracle_sql() -> dict[str, str]:
         ),
         words as (
           select d.doc_id,
-                 unnest(regexp_extract_all(coalesce(d.text, ''), '[^ \t\n\x0b\f\r]+')) as w,
-                 generate_subscripts(regexp_extract_all(coalesce(d.text, ''), '[^ \t\n\x0b\f\r]+'), 1) as pos
+                 unnest({_words_sql("coalesce(d.text, '')")}) as w,
+                 generate_subscripts({_words_sql("coalesce(d.text, '')")}, 1) as pos
           from documents d join kept using (doc_id)
-          where len(regexp_extract_all(coalesce(d.text, ''), '[^ \t\n\x0b\f\r]+')) > 0
+          where len({_words_sql("coalesce(d.text, '')")}) > 0
         ),
         ch as (
           select doc_id, cast((pos - 1) // 10 as int) as ci,
@@ -3443,7 +3396,7 @@ def oracle_sql() -> dict[str, str]:
     sql["decontaminate"] = rf"""
         with base as (
           select doc_id,
-                 regexp_extract_all(coalesce(translate(text, {_FOLD_SQL_ARGS}), ''), '[^ \t\n\x0b\f\r]+') as ws
+                 {_words_sql(f"coalesce(translate(text, {_FOLD_SQL_ARGS}), '')")} as ws
           from documents
         ),
         grams as (
@@ -3470,7 +3423,7 @@ def oracle_sql() -> dict[str, str]:
     # full RE2-portable mirror of web.normalize_url (trim/fragment/scheme/
     # host/www/default-port/path-slash/tracking-param/sort chain), then the
     # smallest-doc_id winner per canonical URL
-    sql["url_canonical"] = r"""
+    sql["url_canonical"] = rf"""
         with raw as (
           select doc_id,
                  'HTTP://' || case when doc_id % 2 = 0 then 'WWW.' else '' end ||
@@ -3490,7 +3443,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         n1 as (
           select *,
-            lower(regexp_extract(u0, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) as scheme,
+            lower(regexp_extract(u0, '{_SCHEME_RE}', 1)) as scheme,
             regexp_replace(u0, '^[A-Za-z][A-Za-z0-9+.\-]*://', '') as rest
           from n0
         ),
@@ -3523,7 +3476,7 @@ def oracle_sql() -> dict[str, str]:
           select *,
             array_to_string(list_sort(list_filter(string_split(qs, '&'),
               p -> p <> '' and not regexp_matches(p,
-                '^(utm_[^=]*|fbclid|gclid|msclkid|ref)='))), '&') as qjoin
+                '{TRACKING_PARAM_RE}'))), '&') as qjoin
           from n4
         ),
         n6 as (
@@ -3571,10 +3524,10 @@ def oracle_sql() -> dict[str, str]:
     from ocr_spark.operators.classify import make_seeded_weights
 
     _wlit = "[" + ", ".join(repr(x) for x in make_seeded_weights(32, seed=5)) + "]"
-    sql["classifier_quality"] = r"""
+    sql["classifier_quality"] = rf"""
         with docs as (select doc_id, coalesce(text, '') as text from documents),
         words as (
-          select doc_id, unnest(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+')) as w
+          select doc_id, unnest({_words_sql("text")}) as w
           from docs
         ),
         -- md5 word bucket, digit-by-digit (the portable_uniform trick):
@@ -3644,11 +3597,11 @@ def oracle_sql() -> dict[str, str]:
     # 32 md5 buckets over unigram+bigram features, add-0.5 smoothing over
     # the CLOSED 32-way space. Every stage is replayed exactly: the md5
     # bucket digit-by-digit, ln on doubles, the dense bucket range.
-    _DSIR_COMMON = r"""
+    _DSIR_COMMON = rf"""
         with docs as (select doc_id, coalesce(text, '') as text from documents),
         base as (
           select doc_id,
-                 regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+') as ws
+                 {text_words} as ws
           from docs
         ),
         grams as (
@@ -3778,9 +3731,9 @@ def oracle_sql() -> dict[str, str]:
         from u
         order by doc_id
     """
-    sql["top_ngrams"] = r"""
+    sql["top_ngrams"] = rf"""
         with base as (
-          select regexp_extract_all(coalesce(text, ''), '[^ \t\n\x0b\f\r]+') as ws
+          select {text_words} as ws
           from documents
         ),
         grams as (
@@ -3794,7 +3747,11 @@ def oracle_sql() -> dict[str, str]:
         order by n_occurrences desc, gram
         limit 20
     """
-    sql["pii_redact"] = r"""
+    pii_counts = "".join(
+        f"len(regexp_extract_all(text,\n                 {_sql_quote(pat)})) as n_{name},\n               "
+        for name, pat, _ in PII_PATTERNS
+    )
+    sql["pii_redact"] = f"""
         with planted as (
           select doc_id,
                  case when doc_id % 4 = 0 then coalesce(text, '')
@@ -3806,16 +3763,7 @@ def oracle_sql() -> dict[str, str]:
           from documents
         )
         select doc_id,
-               len(regexp_extract_all(text,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) as n_email,
-               len(regexp_extract_all(text,
-                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) as n_ip,
-               len(regexp_extract_all(text,
-                 '\b0\d{1,4}-\d{1,4}-\d{3,4}\b')) as n_phone,
-               regexp_replace(regexp_replace(regexp_replace(text,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-                 '\b0\d{1,4}-\d{1,4}-\d{3,4}\b', '<PHONE>', 'g') as redacted
+               {pii_counts}{_pii_chain_sql("text")} as redacted
         from planted
     """
     return sql

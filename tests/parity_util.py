@@ -7,6 +7,13 @@ a floating zero. DuckDB's ``round()`` keeps the sign (``round(-1e-16, 4)``
 is ``-0.0``) while Spark's BigDecimal-based round can only produce ``+0.0``
 — normalizing both to "0" locally hid exactly the class of divergence the
 round-4 driver run flagged on ``token_entropy``.
+
+It is also dtype-strict: the CORRECTNESS compare hashes each value's
+text, so an int64 ``32`` and a float64 ``32.0`` differ there even though
+``canon`` folds both to "32". ``assert_frames_match`` therefore compares
+each column's pandas dtype kind (signed and unsigned ints are one kind; a
+column that is all-null on either side carries no type evidence and is
+skipped).
 """
 
 from __future__ import annotations
@@ -38,10 +45,19 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows)
 
 
+def _dtype_kind(col: pd.Series) -> str | None:
+    if col.isna().all():
+        return None
+    return "i" if col.dtype.kind == "u" else col.dtype.kind
+
+
 def assert_frames_match(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> None:
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
         f"{name}: column mismatch {sorted(spark_pdf.columns)} vs {sorted(duck_pdf.columns)}"
     )
+    kinds = {c: (_dtype_kind(spark_pdf[c]), _dtype_kind(duck_pdf[c])) for c in spark_pdf.columns}
+    mismatched = {c: k for c, k in kinds.items() if None not in k and k[0] != k[1]}
+    assert not mismatched, f"{name}: dtype kind mismatch (spark, duckdb): {mismatched}"
     assert len(spark_pdf) == len(duck_pdf), (
         f"{name}: row count {len(spark_pdf)} vs {len(duck_pdf)}"
     )

@@ -18,6 +18,7 @@ from ocr_spark.operators.cluster import (
     kmeans_fit,
     semdedup,
 )
+from tests.plan_util import plan_text
 
 
 # ---------------------------------------------------------------- classify
@@ -88,12 +89,7 @@ def test_literal_and_joined_paths_agree(spark, docs_df):
 
 
 def test_classifier_literal_path_has_no_exchange(spark, docs_df):
-    plan = (
-        classifier_score(docs_df, make_seeded_weights(8), seed=1)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_text(classifier_score(docs_df, make_seeded_weights(8), seed=1))
     assert "Exchange" not in plan  # row-local end to end
 
 
@@ -191,12 +187,7 @@ def test_semdedup_threshold_one_keeps_everything(spark):
 
 def test_semdedup_pair_stream_is_aggregated_not_distincted(spark):
     emb, _ = _toy_embeddings(spark, n=12, k=3)
-    plan = (
-        semdedup(emb, n_cells=3, threshold=0.9, n_iter=0)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    plan = plan_text(semdedup(emb, n_cells=3, threshold=0.9, n_iter=0), "optimized")
     assert "Deduplicate" not in plan  # no dropDuplicates on the pair stream
 
 

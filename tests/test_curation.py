@@ -19,6 +19,7 @@ from ocr_spark.operators.curation import (
     token_entropy,
     words_column,
 )
+from tests.plan_util import plan_text
 
 
 def _docs(spark, rows):
@@ -352,7 +353,7 @@ def test_lm_cross_entropy_matches_hand_math(spark):
     assert abs(floored[11]["cross_entropy"] - want_floor) < 1e-12
     # plan: the per-(doc, word) aggregation is partition-local after the
     # one doc-pinned repartition; the LM join is deliberately unhinted
-    p = lm_cross_entropy(scored, lm)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(lm_cross_entropy(scored, lm))
     assert "Window" not in p, p[:2000]
 
 
@@ -375,7 +376,7 @@ def test_dedup_lines_keeps_first_occurrence_in_order(spark):
     assert out[2]["text"] == "alpha" and out[2]["n_kept"] == 1
     assert out[3]["text"] == "" and out[3]["n_lines"] == 1 and out[3]["n_kept"] == 1
     assert out[4]["text"] == "only line"
-    p = dedup_lines(docs)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(dedup_lines(docs))
     assert p.count("Exchange") - p.count("BroadcastExchange") <= 1, p[:2000]
     assert "Window" not in p, p[:2000]
 
@@ -420,7 +421,7 @@ def test_perplexity_buckets_explicit_thresholds_row_local(spark):
     got = {r["doc_id"]: r["bucket"] for r in out.collect()}
     # boundary docs fall to the LOWER bucket (<=)
     assert got == {1: "head", 2: "head", 3: "middle", 4: "tail"}
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     assert "Exchange" not in plan  # explicit thresholds: pure row-local
 
 
@@ -615,7 +616,7 @@ def test_exact_substring_dedup_plan_shape(spark):
         ).alias("text"),
     )
     out = exact_substring_dedup(docs, min_words=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     # keeper selection is an aggregation, never a window over the key
     assert "Window" not in plan
     # no global sort anywhere (interval merge is a row-local fold)

@@ -24,6 +24,7 @@ from ocr_spark.operators.dedup import (
     simhash_dup_pairs,
     word_shingles,
 )
+from tests.plan_util import plan_text
 
 DOCS = [
     ("a1", "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -219,12 +220,9 @@ def test_with_shingles_materializes_words_once(spark, docs_df):
     }
     assert got == want
 
-    plan = (
+    plan = plan_text(
         with_shingles(docs_df, "text", 3)
-        .select("doc_id", "shingles")
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
+        .select("doc_id", "shingles"), "optimized"
     )
     assert plan.count("regexp_replace") == 1, plan[:1500]
 
@@ -241,7 +239,7 @@ def test_exploded_shingles_have_no_inferred_lambda_filter(spark, docs_df):
         minhash_signatures(docs_df, n_hashes=4),
         simhash_signatures(docs_df),
     ):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        plan = plan_text(df, "optimized")
         for line in plan.splitlines():
             if line.strip().startswith(("Filter", "+- Filter")):
                 assert "lambdafunction" not in line, line[:500]

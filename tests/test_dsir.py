@@ -14,6 +14,7 @@ from ocr_spark.operators.dsir import (
     dsir_score,
     gram_bucket_stream,
 )
+from tests.plan_util import plan_text
 
 TARGET = [
     (1, "the theory of prime numbers and modular arithmetic"),
@@ -149,12 +150,7 @@ def test_resample_is_deterministic_and_layout_independent(spark, target_df, raw_
 def test_resample_plans_as_take_ordered(spark, target_df, raw_df):
     llr_df = dsir_log_ratios(target_df, raw_df, 16, ns=(1, 2), seed=3)
     scored = dsir_score(raw_df, llr_df, 16, ns=(1, 2), seed=3)
-    plan = (
-        dsir_resample(scored, 4, seed=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_text(dsir_resample(scored, 4, seed=5))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange SinglePartition" not in plan
 
@@ -164,12 +160,7 @@ def test_score_stream_shuffles_only_on_doc_id(spark, target_df, raw_df):
     the only exchanges in the scoring plan are the pinned repartition(s)
     and the model-side broadcast — never a shuffle keyed on the stream."""
     llr_df = dsir_log_ratios(target_df, raw_df, 16, ns=(1, 2), seed=3)
-    plan = (
-        dsir_score(raw_df, llr_df, 16, ns=(1, 2), seed=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_text(dsir_score(raw_df, llr_df, 16, ns=(1, 2), seed=3))
     assert "BroadcastExchange" in plan
     import re
 
@@ -185,7 +176,7 @@ def test_sample_fraction_is_row_local(spark, target_df, raw_df):
     llr_df = dsir_log_ratios(target_df, raw_df, 16, ns=(1, 2), seed=3)
     scored = dsir_score(raw_df, llr_df, 16, ns=(1, 2), seed=3).localCheckpoint()
     out = dsir_sample_fraction(scored, log_threshold=0.0, seed=5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     # selection adds NO exchange over the checkpointed scores
     assert "Exchange" not in plan
     rows = out.collect()

@@ -14,6 +14,11 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from ocr_spark.functions.textstats import WS_CHARS
+from ocr_spark.functions.uniconst import FOLD_FROM, FOLD_TO
+from ocr_spark.operators.boilerplate import _ANCHOR_RE, _TAG_RE
+from ocr_spark.operators.curation import PII_PATTERNS
+from ocr_spark.operators.web import _SCHEME_RE, TRACKING_PARAM_RE
 from tests.parity_util import assert_frames_match
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
@@ -59,15 +64,42 @@ def test_oracle_counts_are_integers(duck, name, col):
     assert pd.api.types.is_integer_dtype(pdf[col]), (name, col, pdf[col].dtype)
 
 
-def test_oracle_sql_interpolates_the_fold_tables():
-    """The case-fold tables live once, in uniconst: the oracle SQL builds
-    its translate() calls from them instead of carrying pasted copies."""
-    from ocr_spark.functions.uniconst import FOLD_FROM, FOLD_TO
+def test_canon_tells_an_int_from_an_integral_float():
+    """The CORRECTNESS compare hashes each value's text, so int64 32 and
+    float64 32.0 differ there; the local canon must reject the pair too."""
+    spark_pdf = pd.DataFrame({"n": pd.Series([32], dtype="int64")})
+    duck_pdf = pd.DataFrame({"n": pd.Series([32.0], dtype="float64")})
+    with pytest.raises(AssertionError, match="dtype kind"):
+        assert_frames_match("n", spark_pdf, duck_pdf)
+    # int widths and signedness are one kind; an all-null column is skipped
+    assert_frames_match("n", spark_pdf, pd.DataFrame({"n": pd.Series([32], dtype="uint8")}))
+    assert_frames_match(
+        "n", pd.DataFrame({"n": [None]}), pd.DataFrame({"n": pd.Series([None], dtype="float64")})
+    )
 
+
+CONTRACT_CONSTANTS = {
+    "FOLD_FROM": FOLD_FROM,
+    "FOLD_TO": FOLD_TO,
+    "WS_CHARS": WS_CHARS,
+    **{f"PII_PATTERNS.{name}": pat for name, pat, _ in PII_PATTERNS},
+    "TRACKING_PARAM_RE": TRACKING_PARAM_RE,
+    "_SCHEME_RE": _SCHEME_RE,
+    "_TAG_RE": _TAG_RE,
+    "_ANCHOR_RE": _ANCHOR_RE,
+}
+
+
+@pytest.mark.parametrize("const", list(CONTRACT_CONSTANTS))
+def test_oracle_sql_interpolates_the_fold_tables(const):
+    """Each contract constant lives once, in its operator module: the
+    oracle SQL interpolates it instead of carrying a pasted copy, raw or
+    backslash-escaped inside a plain string literal."""
+    value = CONTRACT_CONSTANTS[const]
     with open(entry_mod.__file__, encoding="utf-8") as f:
         src = f.read()
-    assert FOLD_FROM not in src and FOLD_TO not in src
-    assert any(FOLD_FROM in q for q in entry_mod.oracle_sql().values())
+    assert value not in src and value.replace("\\", "\\\\") not in src
+    assert any(value in q for q in entry_mod.oracle_sql().values())
 
 
 def test_rows_only_queries(spark):

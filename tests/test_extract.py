@@ -21,6 +21,7 @@ from .conftest import spans_of
 from . import oracle
 
 import pyspark.sql.functions as F
+from tests.plan_util import plan_text
 
 
 def _mk(doc_id, triples):
@@ -206,5 +207,5 @@ def test_render_markdown(spark, golden_df):
 
 
 def test_extract_plan_is_shuffle_free(spark, golden_df):
-    plan = extract_docs(golden_df)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(extract_docs(golden_df))
     assert "Exchange" not in plan, f"narrow path must not shuffle:\n{plan}"

@@ -12,6 +12,7 @@ from ocr_spark.operators.langid import (
     langid_predict,
     langid_scores,
 )
+from tests.plan_util import plan_text
 
 SEED_DOCS = [
     ("en", "the quick brown fox jumps over the lazy dog again and again"),
@@ -159,7 +160,7 @@ def test_score_plan_shape(spark, seed_df, score_df):
 
     model = langid_fit(seed_df, 32, n=3, seed=5)
     out = langid_predict(langid_scores(score_df, model, 32, n=3, seed=5))
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     assert "BroadcastExchange" in plan
     assert "Window" not in plan
     keyed = [

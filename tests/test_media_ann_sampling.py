@@ -17,6 +17,7 @@ from ocr_spark.operators.media import (
 )
 from ocr_spark.operators.sampling import stride_sample
 from ocr_spark.operators.similarity import ann_topk_per_query, top_k_per_query
+from tests.plan_util import plan_text
 
 
 # ---------------------------------------------------------------------------
@@ -265,7 +266,7 @@ def test_ivf_production_dims_plan_stays_flat(spark):
         F.col("doc_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = ivf_topk_per_query(emb, qs, n_cells=n_cells, n_probe=4, k=3)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan_text(out, "optimized")
     # the literal form would be ~150k lit nodes (megabytes of plan text)
     assert len(plan) < 100_000, f"plan blew up: {len(plan)} chars"
     got = out.collect()

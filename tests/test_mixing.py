@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.mixing import decontaminate, portable_uniform, weighted_sample
+from tests.plan_util import plan_text
 
 
 def _docs(spark, rows):
@@ -148,7 +149,7 @@ def test_top_ngrams_counts_and_ties(spark):
     assert [(r["gram"], r["n_occurrences"]) for r in rows] == [
         ("a b c", 3), ("b c a", 1), ("c a b", 1)  # ties broken gram-ascending
     ]
-    plan = top_ngrams(docs, n=3, k=3)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(top_ngrams(docs, n=3, k=3))
     assert "TakeOrderedAndProject" in plan, plan[:1500]  # never a global sort
 
 
@@ -308,7 +309,7 @@ def test_mixing_plan_shape(spark):
     bench = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
 
-    p = decontaminate(train, bench, n=3)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(decontaminate(train, bench, n=3))
     assert "BroadcastHashJoin" in p, p[:2000]
     # 3 designed shuffles (bench distinct, per-(doc,gram) distinct, per-doc
     # count) + up to 2 for the final totals<->counts join: createDataFrame
@@ -322,6 +323,6 @@ def test_mixing_plan_shape(spark):
     assert not bad, bad[:2]
 
     weights = docs.sparkSession.createDataFrame([("src0", 2.5)], ["source", "weight"])
-    p = weighted_sample(docs.select("doc_id", "source"), weights)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(weighted_sample(docs.select("doc_id", "source"), weights))
     assert p.count("Exchange") - p.count("BroadcastExchange") == 0, p[:2000]
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:2000]

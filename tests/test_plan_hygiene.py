@@ -10,15 +10,14 @@ from __future__ import annotations
 import os
 
 import __spark_entry__ as entry_mod
+from tests.plan_util import plan_text
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _plan(spark, name: str) -> str:
     df = entry_mod.queries()[name](spark, SF_DIR)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return plan_text(df, "formatted")
 
 
 def test_public_api_names_resolve():
@@ -88,9 +87,7 @@ def test_ivf_centroid_pick_is_take_ordered(spark):
         "vec_id", "doc_id"
     )
     df = ivf_centroid_pick(emb, 16)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = plan_text(df, "formatted")
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     assert "Window" not in plan
     assert "Exchange SinglePartition" not in plan, plan[:1500]
@@ -111,9 +108,7 @@ def test_ivf_centroid_pick_accepts_string_ids(spark):
         F.array(F.sin("id"), F.cos("id")).alias("embedding"),
     )
     df = ivf_centroid_pick(emb, 8)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = plan_text(df, "formatted")
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     picked = sorted(r["__cid"] for r in df.collect())
     repicked = sorted(
@@ -162,7 +157,7 @@ def test_ivf_probe_explode_has_no_inferred_filter(spark):
     emb = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
     qs = spark.createDataFrame(rows[:3], "query_id long, query_vec array<double>")
     df = ivf_topk_per_query(emb, qs, n_cells=4, n_probe=2, k=3)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan_text(df, "optimized")
     for line in plan.splitlines():
         if line.strip().lstrip("+-: ").startswith("Filter"):
             assert "lambdafunction" not in line, line[:500]
@@ -191,7 +186,7 @@ def test_simhash_pair_stream_never_shuffles(spark):
             for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     df = simhash_dup_pairs(docs, max_hamming=3, n_blocks=8)
-    p = df._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(df)
     assert "HashAggregate(keys=[id_a" not in p, p[:2000]
     assert "hashpartitioning(id_a" not in p, p[:2000]
 
@@ -206,9 +201,9 @@ def test_ann_candidate_stream_never_distincts(spark):
     rows = [(i, [float((i * 7 + j) % 13) for j in range(16)]) for i in range(60)]
     emb = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
     qdf = spark.createDataFrame(rows[:3], "query_id long, query_vec array<double>")
-    p1 = ann_topk_per_query(emb, qdf, dim=16, k=5)._jdf.queryExecution().executedPlan().toString()
+    p1 = plan_text(ann_topk_per_query(emb, qdf, dim=16, k=5))
     assert "HashAggregate(keys=[__qid" not in p1, p1[:2000]
-    p2 = lsh_bucket_pairs(emb, dim=16)._jdf.queryExecution().executedPlan().toString()
+    p2 = plan_text(lsh_bucket_pairs(emb, dim=16))
     assert "HashAggregate(keys=[id_a" not in p2, p2[:2000]
     assert "hashpartitioning(id_a" not in p2, p2[:2000]
 
@@ -230,7 +225,7 @@ def test_curation_ops_plan_shape(spark):
     rows = [(i, f"alpha beta gamma {i % 5} delta beta") for i in range(30)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for op, budget in ((repetition_stats, 1), (token_entropy, 1), (chunk_dedup, 5)):
-        p = op(docs)._jdf.queryExecution().executedPlan().toString()
+        p = plan_text(op(docs))
         assert p.count("Exchange") <= budget, (op.__name__, p[:2000])
         bad = [l for l in p.splitlines() if "Filter" in l and "split(" in l]
         assert not bad, (op.__name__, bad[:2])
@@ -238,10 +233,10 @@ def test_curation_ops_plan_shape(spark):
     # Window partitioned by the chunk text puts every copy of a duplicated
     # chunk in ONE task (measured 0.13 N->4N efficiency on a self-similar
     # corpus before the rewrite)
-    p = chunk_dedup(docs)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(chunk_dedup(docs))
     assert "Window" not in p, p[:2000]
     # gopher_quality is row-local: zero exchanges, one codegen projection
-    p = gopher_quality(docs)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(gopher_quality(docs))
     assert "Exchange" not in p, p[:2000]
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from ocr_spark.operators.quantize import (
@@ -9,8 +11,7 @@ from ocr_spark.operators.quantize import (
     topk_similar_quantized,
     with_int8_vectors,
 )
-
-import os
+from tests.plan_util import plan_text
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
@@ -90,5 +91,5 @@ def test_quantized_topk_matches_exact_on_test_corpus(spark):
     got_ids = [r["doc_id"] for r in got.collect()]
     assert got_ids == exact_ids  # rescoring restores exact order at default factor
     # stage-1 scan must heap-select, never globally sort
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(got)
     assert "TakeOrderedAndProject" in plan, plan[:1500]

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.skew import salted_join, skewed_join_aqe
+from tests.plan_util import plan_text
 
 
 def _skewed_facts(spark, n=200_000, hot_frac=0.9):
@@ -102,7 +103,7 @@ def test_aqe_actually_splits_skewed_partition(spark):
         )
         out = facts.join(dim, "k")
         out.foreachPartition(lambda it: sum(1 for _ in it))
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan_text(out)
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, plan[:2000]
         assert "skewed" in plan, plan[:2000]
@@ -138,14 +139,14 @@ def test_bucketed_join_is_shuffle_free(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = spark.table("qb").join(spark.table("eb"), "question_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = plan_text(joined)
         assert "Exchange hashpartitioning" not in plan, plan[:2000]
         assert "Bucketed: true" in plan, plan[:2000]
         assert joined.count() == 5_000
 
         # contrast: the same join over unbucketed data shuffles both sides
         plain = q.join(emb, "question_id")
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
+        plain_plan = plan_text(plain)
         assert "Exchange hashpartitioning" in plain_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

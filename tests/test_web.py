@@ -12,6 +12,7 @@ from ocr_spark.operators.web import (
     url_dedup,
     url_domain,
 )
+from tests.plan_util import plan_text
 
 
 def _norm(spark, url: str) -> str:
@@ -122,7 +123,7 @@ def test_domain_cap_scale_path_has_no_window(spark):
     df = spark.createDataFrame(
         [(1, "http://a.com/1")], "doc_id long, url string"
     )
-    plan = domain_cap(df, cap=2)._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan_text(domain_cap(df, cap=2), "optimized")
     assert "Window" not in plan
 
 
@@ -185,7 +186,7 @@ def test_blocklist_filter_plan_broadcasts_and_never_distincts_stream(spark):
     )
     bl = spark.createDataFrame([("h3.example.com",), ("nope.net",)], "domain string")
     out = blocklist_filter(docs, bl)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     assert "BroadcastExchange" in plan
     # the suffix stream is aggregated per doc, never deduplicated wholesale
     assert "HashAggregate" in plan
@@ -225,12 +226,7 @@ def test_blocklist_suffix_lambda_touches_only_materialized_labels(spark):
         [(1, "https://ads.example.com/x?utm_a=1")], "doc_id long, url string"
     )
     bl = spark.createDataFrame([("example.com",)], "domain string")
-    plan = (
-        blocklist_filter(docs, bl)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    plan = plan_text(blocklist_filter(docs, bl), "optimized")
     for body in _lambda_bodies(plan):
         assert "regexp" not in body.lower(), body[:300]
         assert "split(" not in body, body[:300]
