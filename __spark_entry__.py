@@ -63,7 +63,7 @@ from ocr_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash_dup_pairs,
 )
-from ocr_spark.operators.extract import render_markdown
+from ocr_spark.operators.extract import extract_docs, render_markdown
 from ocr_spark.operators.sampling import stride_sample
 from ocr_spark.operators.similarity import ann_topk_per_query, head_tail_similar
 from ocr_spark.operators.tags import questions_with_min_years, tag_histogram
@@ -77,7 +77,7 @@ from ocr_spark.operators.similarity import top_k_per_query, top_k_similar
 from ocr_spark.operators.structure import CHOICE_RE, extract_problems
 from ocr_spark.operators.tags import questions_by_multiple_tags
 from ocr_spark.operators.web import _SCHEME_RE, TRACKING_PARAM_RE
-from ocr_spark.plans.pipeline import run_pipeline
+from ocr_spark.plans.pipeline import embeddings_from_extracted
 from ocr_spark.schema import SPAN_STRUCT
 
 
@@ -1743,9 +1743,7 @@ def q_extraction_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (non-media spans: layout(math(word)); media spans pass through
     unchanged), then hashes the identical serialization. Counts stay as
     secondary columns."""
-    docs = _spans_from_documents(_docs_table(spark, sf_dir))
-    stages = run_pipeline(docs, dim=64)
-    ext = stages["extracted"]
+    ext = extract_docs(_spans_from_documents(_docs_table(spark, sf_dir)))
     ser = F.array_join(
         F.transform(
             "spans",
@@ -1775,8 +1773,7 @@ def q_embeddings_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.vectors import l2_norm
 
     docs = _spans_from_documents(_docs_table(spark, sf_dir))
-    stages = run_pipeline(docs, dim=64)
-    emb = stages["embeddings"]
+    emb = embeddings_from_extracted(extract_docs(docs), dim=64)
     return emb.select(
         "doc_id",
         F.size("embedding").alias("dim"),

@@ -12,9 +12,11 @@ Ship and run:
 
 Reads the interleaved docs table (input_hint shape), runs the 4-stage
 pipeline (extracted / questions / problems / embeddings), writes each stage
-to the catalog. ``--checkpointed`` uses the per-partition manifest + resume
-path (north_rule); without it, stages are computed in one fused plan and
-written directly (throughput mode).
+to the catalog and prints its row count. ``--checkpointed`` uses the
+per-partition manifest + resume path (north_rule); without it (throughput
+mode), ``extracted`` is written first and the other three stages are built
+from the written table, so the docs are scanned once, and each row count is
+taken during its write.
 
 On a cluster, pass the usual ``--master yarn|k8s:// --num-executors ...``
 to spark-submit; this script only builds the SparkSession from the ambient
@@ -56,13 +58,11 @@ def main() -> None:
             catalog, docs, dim=args.dim, year=args.year,
             n_partitions=args.n_partitions, run_id=args.run_id,
         )
+        rows = {name: catalog.read(name).count() for name in stages}
     else:
-        stages = run_pipeline(docs, dim=args.dim, year=args.year)
-        for name, df in stages.items():
-            catalog.write(df, name)
+        rows = run_pipeline(catalog, docs, dim=args.dim, year=args.year)
 
-    for name in ("extracted", "questions", "problems", "embeddings"):
-        n = catalog.read(name).count()
+    for name, n in rows.items():
         print(f"stage={name} rows={n}")
 
 

@@ -113,7 +113,7 @@ def extract_docs(docs: DataFrame, image_base_path: str = "images") -> DataFrame:
     return docs.select("doc_id", redense.alias("spans"))
 
 
-def render_markdown(extracted: DataFrame) -> Column | DataFrame:
+def render_markdown(extracted: DataFrame) -> DataFrame:
     """extracted(doc_id, spans) → (doc_id, content): the markdown render
     used for the ``questions`` table (reference per-page .md files,
     /root/reference/src/ocr_to_markdown.py:452-459).

@@ -1,20 +1,22 @@
 """End-to-end extraction pipeline (the Spark replacement of
 /root/reference/run_pipeline.sh's 8-stage shell DAG — SURVEY §3.1).
 
-Stages (each an optional checkpoint via storage.run_stage):
-
     docs ──extract──▶ extracted ──┬─render+id──▶ questions
                                   ├─grammar────▶ problems
                                   └─embed──────▶ embeddings
 
-All stage transforms are pure DataFrame functions, so the whole pipeline can
-also run UNCHECKPOINTED as one fused Catalyst plan: the extraction stage is shuffle-free, problems adds one shuffle (doc_id), and
-embeddings adds one Arrow-batched Python stage.
+Both modes write ``extracted`` first and build the :func:`derived_stages`
+from the table read back, so the docs are scanned and extracted once.
+:func:`run_pipeline` (throughput mode) overwrites each table and counts its
+rows during the write; :func:`run_pipeline_checkpointed` writes each stage
+through storage.run_stage (per-partition manifest, resume).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.embed import embed_text, seed_for_text
@@ -55,19 +57,33 @@ def embeddings_from_extracted(extracted: DataFrame,
     )
 
 
-def run_pipeline(
-    docs: DataFrame,
-    dim: int = DEFAULT_EMBEDDING_DIM,
-    year: int = 2024,
-) -> dict[str, DataFrame]:
-    """Unmaterialized (lazy) pipeline: returns all stage DataFrames."""
-    extracted = extract_docs(docs)
+def derived_stages(dim: int, year: int) -> dict[str, Callable[[DataFrame], DataFrame]]:
+    """The stages built from ``extracted``, as {table: transform}."""
     return {
-        "extracted": extracted,
-        "questions": questions_from_extracted(extracted, year=year),
-        "problems": extract_problems(extracted),
-        "embeddings": embeddings_from_extracted(extracted, dim=dim),
+        "questions": lambda df: questions_from_extracted(df, year=year),
+        "problems": extract_problems,
+        "embeddings": lambda df: embeddings_from_extracted(df, dim=dim),
     }
+
+
+def run_pipeline(catalog: Catalog, docs: DataFrame, dim: int = DEFAULT_EMBEDDING_DIM,
+                 year: int = 2024) -> dict[str, int]:
+    """Throughput mode: write ``extracted``, read it back and write the
+    derived stages from the read-back, so the docs are scanned once.
+    Returns {table: rows}, counted by an observation on each write: no
+    Spark job runs besides the four writes and the read-back."""
+    rows = {}
+
+    def write(df: DataFrame, name: str) -> None:
+        seen = Observation(name)
+        catalog.write(df.observe(seen, F.count(F.lit(1)).alias("rows")), name)
+        rows[name] = seen.get["rows"]
+
+    write(extract_docs(docs), "extracted")
+    extracted = catalog.read("extracted")
+    for name, transform in derived_stages(dim, year).items():
+        write(transform(extracted), name)
+    return rows
 
 
 def run_pipeline_checkpointed(
@@ -81,27 +97,13 @@ def run_pipeline_checkpointed(
     """Checkpointed pipeline: every stage materializes to the catalog with a
     per-partition manifest; re-running after a crash resumes from the first
     incomplete partition of the first incomplete stage (F1/F2 semantics)."""
-    extracted = run_stage(
+    out = {"extracted": run_stage(
         catalog, "extracted", docs, extract_docs,
         n_partitions=n_partitions, run_id=run_id, lineage="docs",
-    )
-    questions = run_stage(
-        catalog, "questions", extracted,
-        lambda df: questions_from_extracted(df, year=year),
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
-    )
-    problems = run_stage(
-        catalog, "problems", extracted, extract_problems,
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
-    )
-    embeddings = run_stage(
-        catalog, "embeddings", extracted,
-        lambda df: embeddings_from_extracted(df, dim=dim),
-        n_partitions=n_partitions, run_id=run_id, lineage="extracted",
-    )
-    return {
-        "extracted": extracted,
-        "questions": questions,
-        "problems": problems,
-        "embeddings": embeddings,
-    }
+    )}
+    for name, transform in derived_stages(dim, year).items():
+        out[name] = run_stage(
+            catalog, name, out["extracted"], transform,
+            n_partitions=n_partitions, run_id=run_id, lineage="extracted",
+        )
+    return out

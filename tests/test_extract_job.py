@@ -1,0 +1,110 @@
+"""extract_job end to end through its argv interface: throughput mode scans
+the docs once and prints row counts taken during the writes; the fused and
+checkpointed catalogs hold the same rows; an empty docs table gives four
+empty tables."""
+
+from __future__ import annotations
+
+import contextlib
+import io
+import os
+import re
+import sys
+from urllib.parse import urlparse
+
+import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.types import MapType
+
+from ocr_spark import corpus
+from ocr_spark.schema import DOC_SCHEMA
+from ocr_spark.storage import Catalog
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+import extract_job  # noqa: E402
+
+STAGES = ["extracted", "questions", "problems", "embeddings"]
+
+
+def _run_job(docs_dir: str, catalog: str, *extra: str) -> dict[str, int]:
+    """Run ``extract_job.main()`` and parse its ``stage=… rows=…`` lines."""
+    out = io.StringIO()
+    with pytest.MonkeyPatch.context() as mp, contextlib.redirect_stdout(out):
+        mp.setattr(sys, "argv", ["extract_job.py", "--input", docs_dir, "--catalog", catalog,
+                                 "--dim", "8", *extra])
+        extract_job.main()
+    lines = re.findall(r"^stage=(\S+) rows=(\d+)$", out.getvalue(), re.M)
+    return {stage: int(n) for stage, n in lines}
+
+
+@pytest.fixture(scope="module")
+def runs(spark, tmp_path_factory):
+    """One fused run, with every ``Catalog.write`` recording its input
+    files, and one checkpointed run, over the same 40 generated docs."""
+    root = tmp_path_factory.mktemp("extract_job")
+    docs_dir = str(root / "docs")
+    corpus.generate_docs(spark, 40, seed=11, heavy_pct=0.0).write.parquet(docs_dir)
+    fused, ck = str(root / "fused"), str(root / "checkpointed")
+    writes = []
+    write = Catalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        writes.append((name, [_path(f) for f in df.inputFiles()]))
+        return write(self, df, name, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Catalog, "write", recording_write)
+        fused_rows = _run_job(docs_dir, fused)
+    ck_rows = _run_job(docs_dir, ck, "--checkpointed", "--n-partitions", "4")
+    return {"docs": docs_dir, "fused": fused, "checkpointed": ck, "writes": writes,
+            "fused_rows": fused_rows, "ck_rows": ck_rows}
+
+
+def _path(uri: str) -> str:
+    return urlparse(uri).path
+
+
+def test_fused_mode_reads_the_docs_once(runs):
+    docs = runs["docs"] + os.sep
+    extracted = os.path.join(runs["fused"], "extracted") + os.sep
+    assert [name for name, _ in runs["writes"]] == STAGES
+    from_docs = [name for name, files in runs["writes"] if any(f.startswith(docs) for f in files)]
+    assert from_docs == ["extracted"]
+    for name, files in runs["writes"][1:]:
+        assert files and all(f.startswith(extracted) for f in files), name
+
+
+def _comparable(df):
+    """Drop ``__pid`` and turn map columns into sorted entry arrays, which
+    set operations accept."""
+    df = df.drop("__pid")
+    return df.select(*(
+        F.array_sort(F.map_entries(f.name)).alias(f.name) if isinstance(f.dataType, MapType)
+        else F.col(f.name)
+        for f in df.schema.fields
+    ))
+
+
+def test_printed_rows_match_tables_and_fused_equals_checkpointed(spark, runs):
+    assert list(runs["fused_rows"]) == STAGES
+    assert runs["ck_rows"] == runs["fused_rows"]
+    for stage in STAGES:
+        fused = spark.read.parquet(os.path.join(runs["fused"], stage))
+        ck = spark.read.parquet(os.path.join(runs["checkpointed"], stage))
+        assert runs["fused_rows"][stage] == fused.count() == 40, stage
+        assert ck.count() == 40, stage
+        a, b = _comparable(fused), _comparable(ck)
+        assert a.exceptAll(b).count() == 0, stage
+        assert b.exceptAll(a).count() == 0, stage
+
+
+def test_empty_docs_give_empty_tables(spark, runs, tmp_path):
+    docs_dir = str(tmp_path / "docs")
+    spark.createDataFrame([], DOC_SCHEMA).write.parquet(docs_dir)
+    catalog = str(tmp_path / "catalog")
+    assert _run_job(docs_dir, catalog) == dict.fromkeys(STAGES, 0)
+    for stage in STAGES:
+        got = spark.read.parquet(os.path.join(catalog, stage))
+        want = spark.read.parquet(os.path.join(runs["fused"], stage))
+        assert got.count() == 0, stage
+        assert got.schema.simpleString() == want.schema.simpleString(), stage

@@ -132,20 +132,23 @@ def test_error_split(spark, catalog, monkeypatch):
     assert m.agg(F.sum("rows_out")).collect()[0][0] == 36
 
 
-def test_pipeline_end_to_end(spark, catalog):
+def test_pipeline_end_to_end(spark, catalog, tmp_path):
     docs = corpus.generate_docs(spark, 40, seed=9, heavy_pct=0.0)
-    lazy = run_pipeline(docs, dim=32)
+    fused_catalog = Catalog(spark, str(tmp_path / "fused"))
+    rows = run_pipeline(fused_catalog, docs, dim=32)
+    assert rows == dict.fromkeys(["extracted", "questions", "problems", "embeddings"], 40)
+    fused = {name: fused_catalog.read(name) for name in rows}
     ck = run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=3)
-    # checkpointed output == lazy output, stage by stage
-    assert spans_of(ck["extracted"]) == spans_of(lazy["extracted"])
-    lq = {r.question_id: (r.year, r.content) for r in lazy["questions"].collect()}
+    # checkpointed output == fused output, stage by stage
+    assert spans_of(ck["extracted"]) == spans_of(fused["extracted"])
+    fq = {r.question_id: (r.year, r.content) for r in fused["questions"].collect()}
     cq = {r.question_id: (r.year, r.content) for r in ck["questions"].collect()}
-    assert lq == cq
-    le = {r.doc_id: tuple(r.embedding) for r in lazy["embeddings"].collect()}
+    assert fq == cq
+    fe = {r.doc_id: tuple(r.embedding) for r in fused["embeddings"].collect()}
     ce = {r.doc_id: tuple(r.embedding) for r in ck["embeddings"].collect()}
-    assert le == ce
-    lp = {r.doc_id: str(r.problems) for r in lazy["problems"].collect()}
+    assert fe == ce
+    fp = {r.doc_id: str(r.problems) for r in fused["problems"].collect()}
     cp = {r.doc_id: str(r.problems) for r in ck["problems"].collect()}
-    assert lp == cp
+    assert fp == cp
     # manifest covers 4 stages × 3 partitions
     assert catalog.manifest().count() == 12
