@@ -289,14 +289,14 @@ _DERIVED_META_SQL = (
 )
 
 
-def _span_kind_sql(word: str) -> str:
+def _span_kind_sql(word: str, pos: str) -> str:
     """Word-level span kind, a pure function of (word, pos): shared by the
     reconstruction / numbering / grammar gates and their oracles."""
     return (
-        "case when pos % 13 = 1 then 'heading' "
-        "when pos % 13 in (5, 6) then 'choice' "
+        f"case when {pos} % 13 = 1 then 'heading' "
+        f"when {pos} % 13 in (5, 6) then 'choice' "
         f"when {word} = 'table' then 'media' "
-        "when pos % 11 = 3 then 'table' else 'text' end"
+        f"when {pos} % 11 = 3 then 'table' else 'text' end"
     )
 
 
@@ -333,7 +333,7 @@ def _spans_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize the input_hint spans shape deterministically from the
     driver's documents table (word-level spans, kind from (word, pos))."""
     w = _words_with_pos(docs)
-    kind = F.expr(_span_kind_sql("word"))
+    kind = F.expr(_span_kind_sql("word", "pos"))
     spans = w.select(
         "doc_id",
         F.struct(
@@ -409,7 +409,7 @@ def q_figure_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7: media spans numbered 1..N per doc in document order."""
     docs = _docs_table(spark, sf_dir)
     w = _words_with_pos(docs)
-    media = w.filter(F.expr(_span_kind_sql("word")) == "media")
+    media = w.filter(F.expr(_span_kind_sql("word", "pos")) == "media")
     win = Window.partitionBy("doc_id").orderBy("pos")
     return media.select(
         "doc_id", "pos", F.row_number().over(win).alias("fig_no")
@@ -1449,12 +1449,20 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time windows (the batch twin of the streaming
-    watermarked aggregation, ocr_spark.streaming.aggregate)."""
-    from ocr_spark.streaming.aggregate import windowed_event_counts
-
+    """Tumbling one-hour event-time windows: per-(window, event_type)
+    counts and value sums."""
     ev = _events_table(spark, sf_dir)
-    return windowed_event_counts(ev, window="1 hour")
+    return (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
 
 
 def q_extreme_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1538,8 +1546,8 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-histogram media features (T15's image half, deterministic fake
-    decode) through the full media_table pipeline; exploded for value-exact
-    oracle comparison."""
+    decode) through media.media_table's steps, inline with float64
+    features; exploded for value-exact oracle comparison."""
     from ocr_spark.operators.media import (
         byte_histogram_features,
         make_decode_udf,
@@ -1944,12 +1952,12 @@ def oracle_sql() -> dict[str, str]:
         {_WORDS_CTE}
         select doc_id, pos,
                row_number() over (partition by doc_id order by pos) as fig_no
-        from words where ({_span_kind_sql('word')}) = 'media'
+        from words where ({_span_kind_sql('word', 'pos')}) = 'media'
     """
     sql["problems_grammar"] = f"""
         {_WORDS_CTE},
         spans as (
-          select doc_id, pos, word, ({_span_kind_sql('word')}) as kind from words
+          select doc_id, pos, word, ({_span_kind_sql('word', 'pos')}) as kind from words
         ),
         numbered as (
           select *, sum(case when kind = 'heading' then 1 else 0 end)
@@ -2717,7 +2725,7 @@ def oracle_sql() -> dict[str, str]:
     sql["problems_markdown"] = f"""
         {_WORDS_CTE},
         spans as (
-          select doc_id, pos, word, ({_span_kind_sql('word')}) as kind from words
+          select doc_id, pos, word, ({_span_kind_sql('word', 'pos')}) as kind from words
         ),
         numbered as (
           select *, sum(case when kind = 'heading' then 1 else 0 end)
@@ -2876,10 +2884,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         lastw as (
           select a.doc_id, a.n,
-                 (case when w.pos % 13 = 1 then 'heading'
-                       when w.pos % 13 in (5, 6) then 'choice'
-                       when w.word = 'table' then 'media'
-                       when w.pos % 11 = 3 then 'table' else 'text' end) as lk
+                 ({_span_kind_sql('w.word', 'w.pos')}) as lk
           from agg a join words w on w.doc_id = a.doc_id and w.pos = a.maxpos
         )
         select d.doc_id,
@@ -3003,7 +3008,7 @@ def oracle_sql() -> dict[str, str]:
     # pattern (no split/promotion) — and the HASH now catches it if that
     # property ever breaks, unlike the r2 count-only oracle.
     _EXTRACTED_WORD_SQL = _layout_chain_sql(_math_chain_sql("word"))
-    _RAW_KIND_SQL = _span_kind_sql("raw_word")
+    _RAW_KIND_SQL = _span_kind_sql("raw_word", "pos")
     # non-media span text strips literal NULs first, mirroring the
     # operator's sentinel-forgery defense (extract._normalized_text strips
     # \x00 before the in-band image-sentinel pass); kind is decided on the
@@ -3441,7 +3446,7 @@ def oracle_sql() -> dict[str, str]:
         n1 as (
           select *,
             lower(regexp_extract(u0, '{_SCHEME_RE}', 1)) as scheme,
-            regexp_replace(u0, '^[A-Za-z][A-Za-z0-9+.\-]*://', '') as rest
+            regexp_replace(u0, '{_SCHEME_RE}', '') as rest
           from n0
         ),
         n2 as (

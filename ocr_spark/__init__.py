@@ -10,13 +10,13 @@ Layout:
     session     SparkSession factory with scale-oriented defaults
     schema      canonical schemas (docs/spans, problems, embeddings, manifest)
     corpus      deterministic synthetic corpus generator (seeded, skew knobs)
-    storage     parquet table catalog + MERGE-style upsert + manifest/resume
+    storage     parquet table catalog (overwrite, snapshot/restore) +
+                per-partition manifest/resume
     functions/  native column-expression libraries (text normalization, ids,
                 vector math, text stats)
     operators/  DataFrame → DataFrame operators (extraction, structure,
                 embeddings, similarity, dedup, tags, scores, ann, media)
     plans/      end-to-end pipelines (extract → questions/problems/embeddings)
-    streaming/  incremental / foreachBatch wrappers
 """
 
 __version__ = "0.1.0"
@@ -54,11 +54,6 @@ _API = {
     "sample_frames": "ocr_spark.operators.media",
     "run_pipeline": "ocr_spark.plans.pipeline",
     "run_pipeline_checkpointed": "ocr_spark.plans.pipeline",
-    "stream_extract": "ocr_spark.streaming.ingest",
-    "stream_event_counts": "ocr_spark.streaming.aggregate",
-    "windowed_event_counts": "ocr_spark.streaming.aggregate",
-    "stream_dedup_firstseen": "ocr_spark.streaming.stateful",
-    "streaming_first_seen": "ocr_spark.streaming.stateful",
 }
 
 __all__ = sorted(_API) + ["__version__"]

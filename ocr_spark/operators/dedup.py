@@ -280,10 +280,13 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _edge_signature(edges: DataFrame):
     """One-pass set signature for the fixpoint check: ``(count,
-    sum(xxhash64(u, v)), bit_xor(xxhash64(u, v)))`` over the (distinct)
-    edge set. Two different sets collide only if count AND the 64-bit sum
-    AND the 64-bit xor all match — ~2⁻¹²⁸, the same standard as the
-    ExactSubstr dual-xxhash64 window keys. Replaces the earlier exact
+    sum(xxhash64(u, v)), bit_xor(xxhash64(1, u, v)))`` over the (distinct)
+    edge set. The xor leg's leading constant is hashed first and seeds the
+    rest, so the legs are two independently seeded 64-bit hashes of each
+    edge (legs over one hash would share bit 0 — a sum's low bit is the
+    xor's — and one hash collision between two edges would fool both).
+    Modeled as uniform random functions, two different edge sets of equal
+    count collide with probability ~2⁻¹²⁸ per check. Replaces the earlier exact
     ``exceptAll ∪ exceptAll → isEmpty`` check, which shuffled BOTH edge
     sets twice per round and dominated the loop once the edge set shrank
     (the r5 ccskew scaling leg read 0.374 N→4N from that overhead)."""
@@ -294,7 +297,7 @@ def _edge_signature(edges: DataFrame):
         edges.agg(
             F.count("*").alias("c"),
             F.sum(h.cast("decimal(38,0)")).alias("s"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("x"),
+            F.expr("bit_xor(xxhash64(1, u, v))").alias("x"),
         ).collect()[0]
     )
 

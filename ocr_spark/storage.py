@@ -1,18 +1,20 @@
-"""Storage layer: table catalog, MERGE-style upsert, checkpoint manifest (M4).
+"""Storage layer: table catalog, snapshots, checkpoint manifest (M4).
 
-Logical contract = Iceberg (`MERGE INTO`, snapshot-based resume); physical
+Logical contract = Iceberg (overwrite commits, snapshots, resume); physical
 implementation here = plain parquet directories, because no Iceberg runtime
 jar can be fetched in the sandbox (SURVEY §7.0). This module is the single
 swap point: on a real cluster, replace ``Catalog`` internals with
-``df.writeTo(...).using("iceberg")`` + SQL ``MERGE INTO`` and the manifest
+``df.writeTo(...).using("iceberg")`` overwrites and the manifest
 with Iceberg snapshot metadata — every operator and pipeline above this layer
 is unchanged.
 
 Capabilities mirrored from the reference:
 
-* UPSERT idempotency (re-import updates the row) —
-  /root/reference/src/markdown_importer.py:202-210,
-  src/embed_importer.py:276-289 → :meth:`Catalog.merge_upsert`.
+* UPSERT idempotency (re-import updates the row; reference
+  src/markdown_importer.py:202-210, src/embed_importer.py:276-289) → every
+  sink overwrites: :meth:`Catalog.write` replaces a whole table (the fused
+  ``run_pipeline``), :func:`run_stage` replaces each bucket it redoes
+  (dynamic partition overwrite), so a re-run replaces rows, never adds them.
 * Stage skipping / resume from any stage — /root/reference/run_pipeline.sh:52-64
   → per-partition manifest + :func:`run_stage` pending-partition filtering.
 * Per-item error isolation with success/failure counters —
@@ -35,7 +37,8 @@ MANIFEST_TABLE = "__manifest__"
 
 
 class Catalog:
-    """A directory of parquet tables with atomic overwrite + merge upsert."""
+    """A directory of parquet tables: overwrite, snapshot/restore, and the
+    stage manifest."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -47,7 +50,7 @@ class Catalog:
         ``/`` (internal nested layouts like ``__snapshots__/<table>/<snap>``)
         but can never escape the root: absolute paths, backslashes, and
         empty / ``.`` / ``..`` components are rejected. Validating HERE
-        covers every entry point (read/write/drop/merge/snapshot/restore)
+        covers every entry point (read/write/snapshot/restore)
         — the r2 advisor fix only guarded snapshot_name, leaving the table
         name on the same f-string line as a traversal vector."""
         if (
@@ -72,99 +75,15 @@ class Catalog:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None) -> None:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
-
-    def drop(self, name: str) -> None:
-        shutil.rmtree(self.path(name), ignore_errors=True)
-
-    def merge_upsert(self, updates: DataFrame, name: str, key_cols: list[str]) -> None:
-        """MERGE INTO emulation keyed on ``key_cols``: new rows win over
-        existing rows with the same key (WHEN MATCHED UPDATE semantics).
-
-        Within ``updates`` itself, duplicate keys are resolved deterministically
-        (arbitrary-but-stable first row per key) before the merge, mirroring
-        the unique-key constraint the reference's UPSERT relies on.
-
-        Atomicity: the merged result is written to a staging dir, then swapped
-        in with two renames (crash before the final rename leaves the old
-        table intact).
-        """
-        updates = updates.dropDuplicates(key_cols)
-        target = self.path(name)
-        if not self.exists(name):
-            updates.write.mode("overwrite").parquet(target)
-            return
-        existing = self.spark.read.parquet(target)
-        keep = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-        merged = keep.unionByName(updates)
-        staging = target + ".__staging__" + uuid.uuid4().hex[:8]
-        merged.write.mode("overwrite").parquet(staging)
-        old = target + ".__old__" + uuid.uuid4().hex[:8]
-        os.rename(target, old)
-        os.rename(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def merge_upsert_bucketed(
-        self,
-        updates: DataFrame,
-        name: str,
-        key_cols: list[str],
-        n_buckets: int = 64,
-    ) -> None:
-        """Partition-local MERGE: the table lives partitioned by
-        ``__kb = pmod(xxhash64(keys), n_buckets)``; a merge rewrites ONLY
-        the bucket partitions that contain update keys (dynamic partition
-        overwrite), so merge cost is O(affected buckets), not O(table) —
-        the scale fix for :meth:`merge_upsert`'s full rewrite (r1 accepted
-        debt). On Iceberg this whole method is ``MERGE INTO`` with
-        bucket-partitioned tables; the layout and touched-partition math are
-        identical. Read the table back with :meth:`read_bucketed`.
-
-        Duplicate keys WITHIN ``updates`` are resolved like
-        :meth:`merge_upsert`: ``dropDuplicates(key_cols)`` keeps an
-        arbitrary-but-stable single row per key (the unique-key contract the
-        reference's UPSERT relies on); conflicting duplicate update rows are
-        NOT an error — dedupe upstream if last-writer-wins ordering matters.
-
-        Atomicity is per-partition (Spark's commit protocol swaps each
-        ``__kb=N`` directory); a crash mid-merge can leave some buckets
-        merged and others not, but every bucket is internally consistent and
-        re-running the same merge is idempotent.
-        """
-        kb = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-        updates = updates.dropDuplicates(key_cols).withColumn("__kb", kb)
-        target = self.path(name)
-        if not self.exists(name):
-            updates.write.mode("overwrite").partitionBy("__kb").parquet(target)
-            return
-        affected = [r["__kb"] for r in updates.select("__kb").distinct().collect()]
-        existing = self.spark.read.parquet(target).filter(
-            F.col("__kb").isin(affected)  # partition-pruned scan
-        )
-        keep = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-        merged = keep.unionByName(updates)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__kb")
-            .parquet(target)
-        )
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucket-partitioned table, hiding the bucket column."""
-        return self.read(name).drop("__kb")
+    def write(self, df: DataFrame, name: str) -> None:
+        df.write.mode("overwrite").parquet(self.path(name))
 
     # ------------------------------------------------------------------
     # snapshots (S11 — reference pg_dump/restore, README.md:244-254)
     # ------------------------------------------------------------------
     def _partition_cols(self, name: str) -> list[str]:
         """Hive-style partition columns of a table directory (top-level
-        ``col=value`` subdirs), e.g. ``__kb`` for bucketed tables."""
+        ``col=value`` subdirs), e.g. ``__pid`` for :func:`run_stage` tables."""
         p = self.path(name)
         if not os.path.isdir(p):
             return []
@@ -193,8 +112,8 @@ class Catalog:
 
     def snapshot(self, name: str, snapshot_name: str) -> str:
         """CTAS-style snapshot of a table's CURRENT contents, PRESERVING its
-        partition layout (a bucketed table restores bucketed, so
-        merge_upsert_bucketed keeps working after a restore). Re-snapshotting
+        partition layout (a ``__pid``-bucketed stage table restores bucketed,
+        so :func:`run_stage` keeps overwriting per bucket). Re-snapshotting
         the same name overwrites (idempotent). On Iceberg this becomes a
         zero-copy tag/branch; here it is a parquet copy through Spark."""
         self._check_snapshot_name(snapshot_name)
@@ -217,9 +136,9 @@ class Catalog:
 
     def restore(self, name: str, snapshot_name: str) -> None:
         """Restore a table from a snapshot, atomically: the snapshot is
-        materialized to a staging dir, then swapped in with two renames
-        (same crash contract as merge_upsert). The snapshot itself is
-        untouched, so restore is repeatable."""
+        materialized to a staging dir, then swapped in with two renames (a
+        crash before the second rename leaves the old table in place). The
+        snapshot itself is untouched, so restore is repeatable."""
         self._check_snapshot_name(snapshot_name)
         snap = f"__snapshots__/{name}/{snapshot_name}"
         if not self.exists(snap):

@@ -94,11 +94,13 @@ CONTRACT_CONSTANTS = {
 def test_oracle_sql_interpolates_the_fold_tables(const):
     """Each contract constant lives once, in its operator module: the
     oracle SQL interpolates it instead of carrying a pasted copy, raw or
-    backslash-escaped inside a plain string literal."""
+    backslash-escaped inside a plain string literal, with or without its
+    groups' parentheses."""
     value = CONTRACT_CONSTANTS[const]
     with open(entry_mod.__file__, encoding="utf-8") as f:
         src = f.read()
-    assert value not in src and value.replace("\\", "\\\\") not in src
+    for copy in (value, value.replace("(", "").replace(")", "")):
+        assert copy not in src and copy.replace("\\", "\\\\") not in src, copy
     assert any(value in q for q in entry_mod.oracle_sql().values())
 
 

@@ -1,7 +1,8 @@
 """extract_job end to end through its argv interface: throughput mode scans
 the docs once and prints row counts taken during the writes; the fused and
-checkpointed catalogs hold the same rows; an empty docs table gives four
-empty tables."""
+checkpointed catalogs hold the same rows; a fused re-run into a populated
+catalog replaces rows instead of adding them; an empty docs table gives
+four empty tables."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import contextlib
 import io
 import os
 import re
+import shutil
 import sys
 from urllib.parse import urlparse
 
@@ -17,6 +19,7 @@ import pytest
 from pyspark.sql.types import MapType
 
 from ocr_spark import corpus
+from ocr_spark.operators.extract import extract_docs
 from ocr_spark.schema import DOC_SCHEMA
 from ocr_spark.storage import Catalog
 
@@ -96,6 +99,37 @@ def test_printed_rows_match_tables_and_fused_equals_checkpointed(spark, runs):
         a, b = _comparable(fused), _comparable(ck)
         assert a.exceptAll(b).count() == 0, stage
         assert b.exceptAll(a).count() == 0, stage
+
+
+def test_fused_rerun_replaces_changed_rows(spark, runs, tmp_path):
+    """F2 as the jobs run it: a fused re-run into a populated catalog, with
+    one doc's spans changed, leaves one row per doc in every table, and the
+    changed doc's ``extracted`` row is the new one."""
+    catalog = str(tmp_path / "catalog")
+    shutil.copytree(runs["fused"], catalog)
+    docs = spark.read.parquet(runs["docs"])
+    target = docs.agg(F.min("doc_id")).first()[0]
+    is_target = F.col("doc_id") == target
+    rewritten = F.transform(
+        "spans", lambda s: s.withField("text", F.concat(s["text"], F.lit(" rewritten"))))
+    docs_dir = str(tmp_path / "docs")
+    docs.withColumn("spans", F.when(is_target, rewritten).otherwise(F.col("spans"))) \
+        .write.parquet(docs_dir)
+
+    assert _run_job(docs_dir, catalog) == dict.fromkeys(STAGES, 40)
+    for stage in STAGES:
+        table = spark.read.parquet(os.path.join(catalog, stage))
+        assert table.count() == table.select("doc_id").distinct().count() == 40, stage
+
+    def target_row(df):
+        return _comparable(df.filter(is_target))
+
+    got = target_row(spark.read.parquet(os.path.join(catalog, "extracted")))
+    old = target_row(spark.read.parquet(os.path.join(runs["fused"], "extracted")))
+    new = target_row(extract_docs(spark.read.parquet(docs_dir)))
+    assert got.count() == new.count() == 1
+    assert got.exceptAll(new).count() == 0 and new.exceptAll(got).count() == 0
+    assert got.exceptAll(old).count() == 1
 
 
 def test_empty_docs_give_empty_tables(spark, runs, tmp_path):

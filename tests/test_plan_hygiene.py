@@ -7,12 +7,22 @@ benchmark three rounds later.
 
 from __future__ import annotations
 
+import ast
 import os
+import re
 
 import __spark_entry__ as entry_mod
 from tests.plan_util import plan_text
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Exported names that no gate, job, script or engine module calls; each has
+# a COVERAGE.md row saying it has no gate or job caller.
+API_WITHOUT_CALLER = {
+    "embed_multimodal", "minhash_dedup", "questions_by_tag",
+    "salted_join", "skewed_join_aqe", "sample_frames", "media_table",
+}
 
 
 def _plan(spark, name: str) -> str:
@@ -27,6 +37,47 @@ def test_public_api_names_resolve():
 
     for name in ocr_spark.__all__:
         assert getattr(ocr_spark, name) is not None, name
+
+
+def _identifiers(path: str) -> set[str]:
+    """Names, attributes and imported names used in a Python file's code
+    (comments and docstrings do not count)."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name)
+    return out
+
+
+def test_public_api_has_a_non_test_caller():
+    """Every ``ocr_spark`` export is used by a job, ``__spark_entry__``, a
+    script, ``bench.py`` or an engine module other than its own, or is
+    listed in API_WITHOUT_CALLER with a COVERAGE.md row that says so."""
+    import ocr_spark
+
+    callers = [os.path.join(ROOT, f) for f in ("__spark_entry__.py", "bench.py")]
+    for d in ("jobs", "scripts", "ocr_spark"):
+        for dirpath, _, files in os.walk(os.path.join(ROOT, d)):
+            callers += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    used = {p: _identifiers(p) for p in callers}
+    init = os.path.join(ROOT, "ocr_spark", "__init__.py")
+    uncalled = set()
+    for name, module in ocr_spark._API.items():
+        home = os.path.join(ROOT, *module.split(".")) + ".py"
+        if not any(name in ids for p, ids in used.items() if p not in (home, init)):
+            uncalled.add(name)
+    assert uncalled == API_WITHOUT_CALLER
+
+    with open(os.path.join(ROOT, "COVERAGE.md"), encoding="utf-8") as f:
+        rows = [line for line in f if "no gate or job caller" in line]
+    for name in API_WITHOUT_CALLER:
+        assert any(re.search(rf"\b{name}\b", row) for row in rows), name
 
 
 def test_filter_pushdown_reaches_scan(spark):

@@ -269,13 +269,9 @@ def test_snapshot_restore_roundtrip(spark, tmp_path):
     cat.write(t0, "scores")
     cat.snapshot("scores", "v1")
 
-    # mutate: upsert changes v for k=0..2 and adds k=10
-    updates = spark.createDataFrame(
-        [(0, 100), (1, 100), (2, 100), (10, 100)], "k long, v long"
-    )
-    cat.merge_upsert(updates, "scores", ["k"])
-    assert cat.read("scores").count() == 6
-    assert cat.read("scores").filter("v = 100").count() == 4
+    # mutate: overwrite with different rows
+    cat.write(spark.createDataFrame([(0, 100), (10, 100)], "k long, v long"), "scores")
+    assert sorted((r.k, r.v) for r in cat.read("scores").collect()) == [(0, 100), (10, 100)]
 
     # restore brings back the exact pre-mutation contents
     cat.restore("scores", "v1")
@@ -312,90 +308,34 @@ def test_snapshot_name_rejects_path_escape(spark, tmp_path):
 
 
 def test_snapshot_restore_preserves_bucketed_layout(spark, tmp_path):
-    """Restoring a bucketed table must keep its __kb partition layout so a
-    subsequent merge_upsert_bucketed stays partition-local and the directory
-    never mixes flat files with partition dirs."""
+    """Restoring a run_stage table must keep its __pid partition layout:
+    the directory never mixes flat files with partition dirs, and a re-run
+    of the same stage over the restored table is a no-op with the same
+    rows."""
     import os
 
-    from ocr_spark.storage import Catalog
+    from ocr_spark.storage import Catalog, run_stage
 
     cat = Catalog(spark, str(tmp_path / "cat"))
-    base = spark.range(200).select(
-        F.concat(F.lit("k"), F.col("id")).alias("key"), F.col("id").alias("v")
-    )
-    cat.merge_upsert_bucketed(base, "bt", ["key"], n_buckets=8)
-    cat.snapshot("bt", "s1")
-    cat.merge_upsert_bucketed(
-        spark.createDataFrame([("k1", 999)], "key string, v long"),
-        "bt", ["key"], n_buckets=8,
-    )
-    cat.restore("bt", "s1")
-    # layout preserved: only __kb= partition dirs at the root
-    entries = os.listdir(cat.path("bt"))
-    kb_dirs = [e for e in entries if e.startswith("__kb=")]
+    docs = spark.range(40).select(F.col("id").alias("doc_id"), F.col("id").alias("v"))
+
+    def stage():
+        return run_stage(cat, "st", docs, lambda df: df.withColumn("w", F.col("v") * 2),
+                         n_partitions=4)
+
+    want = sorted(stage().collect())
+    cat.snapshot("st", "s1")
+    cat.write(spark.createDataFrame([(1, 1, 1)], "doc_id long, v long, w long"), "st")
+    cat.restore("st", "s1")
+    # layout preserved: only __pid= partition dirs at the root
+    entries = os.listdir(cat.path("st"))
+    pid_dirs = [e for e in entries if e.startswith("__pid=")]
     flat_files = [e for e in entries if e.endswith(".parquet")]
-    assert kb_dirs and not flat_files, entries
-    # and bucketed merging still works on the restored table
-    cat.merge_upsert_bucketed(
-        spark.createDataFrame([("k1", 777), ("knew", 1)], "key string, v long"),
-        "bt", ["key"], n_buckets=8,
-    )
-    got = {r.key: r.v for r in cat.read_bucketed("bt").collect()}
-    assert len(got) == 201 and got["k1"] == 777 and got["k2"] == 2
-
-
-def test_merge_upsert_bucketed_touches_only_affected_partitions(spark, tmp_path):
-    """The bucketed MERGE must (a) produce exactly the merge_upsert result,
-    (b) leave parquet files of unaffected bucket partitions byte-untouched
-    (same file set) — proving O(affected buckets) rewrite."""
-    import os
-
-    from ocr_spark.storage import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    base = spark.range(1000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("key"), F.col("id").alias("v")
-    )
-    cat.merge_upsert_bucketed(base, "t", ["key"], n_buckets=16)
-
-    def files_by_bucket():
-        out = {}
-        root = cat.path("t")
-        for d in os.listdir(root):
-            if d.startswith("__kb="):
-                out[d] = sorted(os.listdir(os.path.join(root, d)))
-        return out
-
-    before = files_by_bucket()
-    assert len(before) > 4  # keys spread over many buckets
-
-    updates = spark.createDataFrame(
-        [("k5", 999), ("k6", 999), ("knew", 1)], "key string, v long"
-    )
-    cat.merge_upsert_bucketed(updates, "t", ["key"], n_buckets=16)
-    after = files_by_bucket()
-
-    got = {r.key: r.v for r in cat.read_bucketed("t").collect()}
-    assert len(got) == 1001
-    assert got["k5"] == 999 and got["k6"] == 999 and got["knew"] == 1
-    assert got["k7"] == 7  # untouched row intact
-
-    # affected buckets = buckets of k5/k6/knew; all others byte-identical
-    import pyspark.sql.functions as SF
-    aff = {
-        f"__kb={r.b}"
-        for r in updates.select(
-            SF.pmod(SF.xxhash64("key"), SF.lit(16)).cast("int").alias("b")
-        ).distinct().collect()
-    }
-    untouched = set(before) - aff
-    assert untouched  # the test is vacuous if every bucket was affected
-    for d in untouched:
-        assert after[d] == before[d], f"unaffected partition {d} was rewritten"
-
-    # idempotent re-merge
-    cat.merge_upsert_bucketed(updates, "t", ["key"], n_buckets=16)
-    assert cat.read_bucketed("t").count() == 1001
+    assert pid_dirs and not flat_files, entries
+    # every bucket is still complete in the manifest: the re-run writes
+    # nothing and reads back the restored rows
+    assert sorted(stage().collect()) == want
+    assert cat.manifest().count() == 4
 
 
 def test_table_name_rejects_path_escape(spark, tmp_path):
@@ -414,7 +354,6 @@ def test_table_name_rejects_path_escape(spark, tmp_path):
             lambda: cat.restore(bad, "s"),
             lambda: cat.write(t0, bad),
             lambda: cat.read(bad),
-            lambda: cat.drop(bad),
         ):
             with pytest.raises(ValueError):
                 fn()
