@@ -1546,7 +1546,7 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-histogram media features (T15's image half, deterministic fake
-    decode) through media.media_table's steps, inline with float64
+    decode): synthesize bytes -> decode meta -> resize -> float64
     features; exploded for value-exact oracle comparison."""
     from ocr_spark.operators.media import (
         byte_histogram_features,
@@ -1563,7 +1563,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ord() histogram is byte-exact only on single-byte chars
         F.regexp_replace("text", "[^ -~]", "").alias("text"),
     )
-    feat = byte_histogram_features(64, as_double=True)
+    feat = byte_histogram_features(64)
     mt = (
         docs.withColumn("data", synthesize_media_bytes("media_ref", "text"))
         .withColumn("meta", decode_image_meta("data"))

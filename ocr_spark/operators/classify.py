@@ -42,13 +42,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.curation import _pinned_partitions, words_column
 
-__all__ = [
-    "word_bucket",
-    "make_seeded_weights",
-    "classifier_score",
-    "classifier_score_joined",
-]
-
 
 def word_bucket(word: Column, n_buckets: int, seed: int = 0) -> Column:
     """Hash bucket of one word: first 8 hex chars of md5(seed || '|' || word)

@@ -55,8 +55,6 @@ from ocr_spark.operators.similarity import (
     with_best_cells,
 )
 
-__all__ = ["kmeans_fit", "assign_clusters", "semdedup"]
-
 
 def kmeans_fit(
     embeddings: DataFrame,

@@ -26,7 +26,7 @@ Scale design:
   * the words/gram arrays are materialized as real columns BEFORE any
     explode and exploded with ``posexplode_outer`` — Catalyst re-inlines
     aliased expressions into inferred ``size()>0`` filters and HOF lambda
-    bodies (see operators/dedup.word_shingles' warning), and the `_outer`
+    bodies (see operators/dedup.with_shingles' docstring), and the `_outer`
     variants keep the optimizer from inferring that filter at all;
   * no windows at all: `chunk_dedup`'s first-occurrence keeper is a
     struct-min hash aggregate (map-side combined), never a window
@@ -40,24 +40,6 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-__all__ = [
-    "words_column",
-    "repetition_stats",
-    "gopher_quality",
-    "token_entropy",
-    "top_ngrams",
-    "dedup_lines",
-    "unigram_lm",
-    "lm_cross_entropy",
-    "perplexity_buckets",
-    "chunk_dedup",
-    "exact_substring_dedup",
-    "pii_counts",
-    "redact_pii",
-    "DEFAULT_STOPWORDS",
-    "PII_PATTERNS",
-]
 
 
 def words_column(text_col: Column | str) -> Column:
@@ -96,7 +78,7 @@ def _ngrams(words: Column, n: int) -> Column:
     ``words`` must be a plain column reference (not an expensive
     expression): the outer-scope reference is re-inlined into both lambda
     bodies by Catalyst, which is free for an attribute and quadratic for an
-    expression (the word_shingles lesson). ``element_at`` is O(1) per
+    expression (the with_shingles lesson). ``element_at`` is O(1) per
     element, so gram construction is O(n) per gram."""
     count = F.size(words) - (n - 1)
     # sequence(1, 0) steps DOWNWARD ([1, 0]) — guard short docs explicitly

@@ -54,30 +54,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles of normalized text, as array<string> — native.
-
-    Documents with fewer than k words contribute their whole text as the
-    single shingle (so short docs still dedupe exactly).
-
-    PERFORMANCE WARNING — O(len²) on big documents: the ``words``
-    split-expression is referenced INSIDE the transform lambda, and Catalyst
-    re-inlines it there (no CSE in HOF lambda bodies), so normalize+split of
-    the whole text re-evaluates once PER SHINGLE. Fine for ≤~1k-word rows;
-    a 75k-word document turns into ~37 GB of regex work. Every pipeline in
-    this module uses :func:`with_shingles` instead, which materializes the
-    words array as a real column first. Kept only as the column-expression
-    form for small-text call sites and as the equivalence baseline in tests.
-    """
-    words = F.split(normalized_text(col), " ")
-    n = F.size(words)
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(words, i, k), " "),
-    )
-    return F.array_distinct(shingles)
-
-
 def with_shingles(
     df: DataFrame, text_col: str = "text", k: int = 3, out_col: str = "shingles"
 ) -> DataFrame:
@@ -85,8 +61,12 @@ def with_shingles(
     its own projection first, so the split runs once per row and the lambda
     only slices a bound column (the alias is referenced more than once and
     is non-cheap, so CollapseProject cannot re-inline it — verified by the
-    heavy-doc timing test). Linear in document length; identical output to
-    :func:`word_shingles`."""
+    heavy-doc timing test). Linear in document length: a split referenced
+    inside the transform lambda instead is re-inlined there (no CSE in HOF
+    lambda bodies) and re-runs once PER SHINGLE, O(len²) on big documents.
+
+    Documents with fewer than k words contribute their whole text as the
+    single shingle (so short docs still dedupe exactly)."""
     w = df.withColumn("__words", F.split(normalized_text(text_col), " "))
     n = F.size(F.col("__words"))
     shingles = F.array_distinct(
@@ -216,31 +196,6 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.8,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Full near-dup removal: LSH candidates → exact Jaccard ≥ threshold →
-    drop the larger id of each duplicate pair (greedy single-pass; for full
-    connected-component clustering see :func:`dup_clusters` /
-    :func:`minhash_dedup_clustered`)."""
-    dups = jaccard_pairs(
-        df,
-        minhash_lsh_candidates(df, text_col, id_col, k, n_hashes, n_bands, seed),
-        text_col,
-        id_col,
-        k,
-        threshold,
-    ).select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(dups, id_col, "left_anti")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -394,31 +349,6 @@ def dup_clusters(
     )
 
 
-def minhash_dedup_clustered(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.8,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Cluster-aware near-dup removal: keep exactly ONE doc (the smallest
-    id) per connected component of Jaccard-verified pairs. Unlike the
-    greedy :func:`minhash_dedup` drop-the-larger policy, a chain A≈B≈C
-    keeps only A (greedy would also drop B's and C's independent pairs the
-    same way here, but differs on asymmetric chains)."""
-    dups = jaccard_pairs(
-        df,
-        minhash_lsh_candidates(df, text_col, id_col, k, n_hashes, n_bands, seed),
-        text_col, id_col, k, threshold,
-    )
-    clusters = dup_clusters(dups, id_col=id_col)
-    losers = clusters.filter(F.col(id_col) != F.col("cluster")).select(id_col)
-    return df.join(losers, id_col, "left_anti")
-
-
 def embedding_near_dup_ids(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -427,8 +357,7 @@ def embedding_near_dup_ids(
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup removal set: ids whose vector is within
-    ``threshold`` cosine of a LOWER id (drop-the-larger greedy policy, same
-    as :func:`minhash_dedup`).
+    ``threshold`` cosine of a LOWER id (drop-the-larger greedy policy).
 
     With ``dim`` set, candidate pairs come from the LSH bucket join
     (:func:`ocr_spark.operators.similarity.lsh_bucket_pairs`); without it,

@@ -44,16 +44,6 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.classify import word_bucket
 from ocr_spark.operators.curation import _ngrams, _pinned_partitions, words_column
 
-__all__ = [
-    "gram_bucket_stream",
-    "bucket_counts",
-    "dsir_log_ratios",
-    "dsir_score",
-    "gumbel_key",
-    "dsir_resample",
-    "dsir_sample_fraction",
-]
-
 
 def gram_bucket_stream(
     docs: DataFrame,

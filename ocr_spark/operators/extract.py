@@ -128,17 +128,3 @@ def render_markdown(extracted: DataFrame) -> DataFrame:
     )
     content = F.array_join(F.transform(ordered, lambda s: s["text"]), "\n\n")
     return extracted.select("doc_id", content.alias("content"))
-
-
-def convert_text_reference_exact(
-    text: Column | str, base_filename: Column, image_base_path: str = "images"
-) -> Column:
-    """Reference-exact whole-text path (math → figure tags with \\n\\n →
-    layout), matching /root/reference/src/ocr_to_markdown.py:400-409 for
-    plain-text documents. A public helper for callers holding one whole
-    text column: the pipeline itself runs span by span (extract_docs) and
-    does not call it. Tested against a pure-Python oracle."""
-    out = apply_math_patterns(F.col(text) if isinstance(text, str) else text)
-    out = insert_image_tags(out, base_filename, image_base_path=image_base_path, sentinel=False)
-    out = format_layout(out)
-    return out

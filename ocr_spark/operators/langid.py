@@ -44,34 +44,6 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.classify import word_bucket
 from ocr_spark.operators.curation import _pinned_partitions
 
-__all__ = [
-    "char_gram_buckets",
-    "langid_fit",
-    "langid_scores",
-    "langid_predict",
-]
-
-
-def char_gram_buckets(
-    text_col: Column | str,
-    n_buckets: int,
-    n: int = 3,
-    seed: int = 0,
-    hash_family: str = "md5",
-) -> Column:
-    """Array of hash buckets of the lowercased char ``n``-grams of a text
-    column (null text -> empty array). The gram build is all
-    argument-level (:func:`_char_grams`) — nothing expensive is
-    referenced from a lambda body, so any input expression is evaluated
-    O(n) times per ROW, never per gram. The fit/score paths still
-    materialize the lowered text first (:func:`_gram_stream`) so the
-    ``lower``/``coalesce`` runs once."""
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    from ocr_spark.functions.textstats import fold_lower
-
-    return _grams_of(fold_lower(text_col), n_buckets, n, seed, hash_family)
-
 
 def _bucket_of(gram: Column, n_buckets: int, seed: int, hash_family: str) -> Column:
     """``md5`` = the engine-portable family (DuckDB replays it digit by
@@ -125,6 +97,10 @@ def _char_grams(t: Column, n: int) -> Column:
 
 
 def _grams_of(t: Column, n_buckets: int, n: int, seed: int, hash_family: str = "md5") -> Column:
+    """Array of the hash buckets of ``t``'s char ``n``-grams — the one
+    gram build under both :func:`langid_fit` and :func:`langid_scores`."""
+    if n < 1:
+        raise ValueError("n must be >= 1")
     return F.transform(
         _char_grams(t, n),
         lambda gram: _bucket_of(gram, n_buckets, seed, hash_family),

@@ -17,7 +17,7 @@ pixel-level math is STUBBED behind a clearly-marked deterministic fake
 binary schema, UDF signatures, Arrow batch shapes, partitioning — is real
 and oracle-tested. Swap the two ``_fake_*`` functions for PIL calls to get
 real decoding with zero plan changes; with PIL absent, the real path raises
-``NotImplementedError`` (see :func:`real_decode_unavailable`).
+``NotImplementedError`` (see :func:`_real_decode`).
 """
 
 from __future__ import annotations
@@ -30,17 +30,6 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 _PNG_MAGIC = b"\x89PNG"
 _JPEG_MAGIC = b"\xff\xd8"
-
-
-def real_decode_unavailable() -> None:
-    """The real decode path (kept for clusters with PIL installed)."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - container has no PIL
-        raise NotImplementedError(
-            "real image decoding needs PIL; this environment ships none — "
-            "the deterministic fake decode is used instead"
-        ) from exc
 
 
 def _real_decode(b: bytes) -> tuple[int, int, str]:
@@ -248,17 +237,15 @@ def resize_meta_native(n_bytes: Column | str) -> Column:
     )
 
 
-def byte_histogram_features(dim: int = 64, as_double: bool = False):
-    """Arrow-batched byte-histogram feature vector (unit-L2) — the
-    deterministic stand-in for pixel-level feature extraction (T15's image
-    half). numpy ``bincount`` over the whole batch; no per-byte Python.
+def byte_histogram_features(dim: int = 64):
+    """Arrow-batched byte-histogram feature vector (unit-L2,
+    ``array<double>``) — the deterministic stand-in for pixel-level feature
+    extraction (T15's image half). numpy ``bincount`` over the whole batch;
+    no per-byte Python. Float64 end to end: the ``media_features`` gate
+    rounds to 4 dp against its DuckDB oracle, where float32 quantization
+    would make the rounding ambiguous."""
 
-    ``as_double=True`` keeps float64 (used by the cross-engine oracle check,
-    where float32 quantization would make 4-dp rounding ambiguous); the
-    storage contract stays float32."""
-    out_dtype = np.float64 if as_double else np.float32
-
-    @pandas_udf("array<double>" if as_double else "array<float>")
+    @pandas_udf("array<double>")
     def features(blobs: pd.Series) -> pd.Series:
         out = []
         for b in blobs:
@@ -268,7 +255,7 @@ def byte_histogram_features(dim: int = 64, as_double: bool = False):
             arr = np.frombuffer(bytes(b), dtype=np.uint8)
             hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
             norm = np.linalg.norm(hist)
-            out.append((hist / norm if norm > 0 else hist).astype(out_dtype))
+            out.append(hist / norm if norm > 0 else hist)
         return pd.Series(out)
 
     return features
@@ -312,19 +299,4 @@ def sample_frames(
     return media.select(id_col, bytes_col).mapInPandas(
         _frames,
         schema=f"{id_col} {id_field.dataType.simpleString()}, frame_no int, frame binary",
-    )
-
-
-def media_table(docs: DataFrame, ref_col: str = "media_ref",
-                payload_col: str = "text") -> DataFrame:
-    """Standard media pipeline: synthesize blobs → decode meta → resize →
-    features. One Arrow-batched Python stage; everything else native."""
-    with_bytes = docs.withColumn(
-        "data", synthesize_media_bytes(ref_col, payload_col)
-    )
-    feat = byte_histogram_features(64)
-    return (
-        with_bytes.withColumn("meta", make_decode_udf()("data"))
-        .withColumn("resized", make_resize_udf()("data"))
-        .withColumn("features", feat(F.col("resized.data")))
     )

@@ -43,14 +43,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.curation import _ngrams, words_column
 
-__all__ = [
-    "decontaminate",
-    "pack_sequences",
-    "portable_uniform",
-    "split_corpus",
-    "weighted_sample",
-]
-
 _MAX_WEIGHT = 64.0  # hard upsampling cap: explode width is bounded by design
 
 

@@ -37,13 +37,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.functions.vectors import cosine_similarity
 
-__all__ = [
-    "with_int8_vectors",
-    "int8_dot",
-    "quantize_vector_py",
-    "topk_similar_quantized",
-]
-
 
 def with_int8_vectors(
     df: DataFrame,

@@ -91,49 +91,6 @@ def _lcg_component(seed: int, plane: int, i: "F.Column") -> "F.Column":
     return v.cast("double") / float(2**31) - 0.5
 
 
-def _bucket_column(vec: "F.Column", dim: int, n_planes: int, seed: int) -> "F.Column":
-    """Signed random-projection bucket id of one vector as a Column."""
-    bits = []
-
-    def _term(plane: int):
-        # real closure: a default-arg lambda would be read by zip_with as a
-        # 3-parameter (element, element, index) function (see dedup.py note)
-        return lambda x, i: x.cast("double") * _lcg_component(seed, plane, i)
-
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.lit(dim - 1)), _term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket
-
-
-def random_projection_buckets(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-) -> DataFrame:
-    """SimHash-style signed random-projection bucket id, computed natively.
-
-    Hyperplanes are deterministic LCG-derived values — no numpy, no broadcast
-    variable, so the same expression works identically on any cluster size
-    AND is reproducible in plain SQL for oracle checks. Summation over
-    components is left-to-right in both engines, so the double-precision
-    projection (and therefore the sign bit) is bit-identical.
-    """
-    return embeddings.withColumn(
-        out_col, _bucket_column(F.col(vec_col), dim, n_planes, seed)
-    )
-
-
 def band_buckets(
     df: DataFrame,
     dim: int,
@@ -155,8 +112,8 @@ def band_buckets(
     n_bands×n_planes doubles per id. A row's elements stay contiguous in
     one task, so each sum accumulates left-to-right exactly like the
     sequential fold — the double-precision projections (and sign bits) are
-    bit-identical to :func:`random_projection_buckets` and to the SQL
-    oracles (band b = seed + b*7919).
+    bit-identical to the SQL oracles' left-to-right fold (band b = seed +
+    b*7919).
 
     Bit-identity CAVEAT: the guarantee holds only while the map-side hash
     aggregate does NOT spill. Under memory pressure Spark spills partial

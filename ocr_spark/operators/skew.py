@@ -6,8 +6,7 @@ Two complementary strategies, both over plain DataFrames:
 * **AQE skew join** — declarative: with
   ``spark.sql.adaptive.skewJoin.enabled`` (on by default in
   ``session.get_spark``) Spark splits oversized shuffle partitions at
-  runtime. :func:`skewed_join_aqe` is a thin wrapper that simply asserts the
-  session is configured and tags the join for observability.
+  runtime; any plain ``join`` gets it.
 
 * **Salted join** — explicit: :func:`salted_join` replicates the small side
   ``n_salts`` times and scatters the skewed side's hot keys across salts, so
@@ -21,15 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def skewed_join_aqe(big: DataFrame, small: DataFrame, on: str | list[str],
-                    how: str = "inner") -> DataFrame:
-    """Equi-join relying on AQE skew-join splitting for hot keys."""
-    spark = big.sparkSession
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-    return big.join(small, on, how)
 
 
 def salted_join(

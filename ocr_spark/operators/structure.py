@@ -201,37 +201,3 @@ def render_problems_markdown(
 
     md = F.aggregate(F.col(problems_col), F.lit(""), lambda acc, pr: F.concat(acc, _one(pr)))
     return problems_df.withColumn(out_col, md)
-
-
-def salvage_json(col: Column | str) -> Column:
-    """T8/T9 JSON-salvage: substring from first ``{`` to last ``}``.
-
-    Mirrors /root/reference/src/claude_image_analyzer.py:222-228
-    (``find('{')`` / ``rfind('}')`` slice). Returns NULL when no braces.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    start = F.instr(c, "{")
-    end = F.length(c) - F.instr(F.reverse(c), "}") + 1
-    return F.when(
-        (start > 0) & (F.instr(c, "}") > 0) & (end >= start),
-        F.substring(c, start, end - start + 1),
-    )
-
-
-def parse_problems_json(df: DataFrame, col: str, schema_ddl: str | None = None) -> DataFrame:
-    """Parse a salvaged JSON payload to the typed problems struct with the
-    reference's unknown-fallback (/root/reference/src/claude_image_analyzer.py:221-241):
-    unparseable rows keep ``parse_ok=false`` and carry ``raw_response``."""
-    ddl = schema_ddl or (
-        "problems array<struct<id:int,question:string,"
-        "choices:array<struct<number:int,text:string>>,explanation:string,"
-        "correct_answer:int,has_circuit_diagram:boolean,has_table:boolean>>"
-    )
-    salvaged = salvage_json(col)
-    parsed = F.from_json(salvaged, f"struct<{ddl}>")
-    return df.withColumn("parsed", parsed).select(
-        "*",
-        F.col("parsed.problems").alias("problems"),
-        F.col("parsed.problems").isNotNull().alias("parse_ok"),
-        F.when(F.col("parsed.problems").isNull(), F.col(col)).alias("raw_response"),
-    ).drop("parsed")

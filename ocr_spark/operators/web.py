@@ -32,16 +32,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.mixing import portable_uniform
 
-__all__ = [
-    "normalize_url",
-    "url_domain",
-    "url_dedup",
-    "domain_stats",
-    "domain_cap",
-    "host_suffixes",
-    "blocklist_filter",
-]
-
 # tracking params dropped during canonicalization (RE2-portable alternation)
 TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref)="
 
@@ -126,18 +116,6 @@ def url_dedup(
     )
 
 
-def domain_stats(
-    docs: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """(domain, n_docs) over canonical URLs — one map-side-combined
-    aggregation; the shuffle carries one partial row per domain per task."""
-    return (
-        docs.select(url_domain(normalize_url(url_col)).alias("domain"))
-        .groupBy("domain")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
 def domain_cap(
     docs: DataFrame,
     cap: int,
@@ -168,25 +146,18 @@ def domain_cap(
     return joined.filter(keep)
 
 
-def host_suffixes(col: Column | str, max_depth: int = 6) -> Column:
-    """All dot-suffixes of a host, most-specific first —
-    ``a.b.example.com`` -> ``[a.b.example.com, b.example.com, example.com,
-    com]`` — capped at the ``max_depth`` SHORTEST suffixes (a pathological
-    100-label host yields only its last ``max_depth`` suffixes; blocklists
-    key on registrable domains, which live at the short end, so the
-    dropped deep suffixes cost nothing). Row-local; each suffix is an
-    O(depth) ``slice`` + join of the labels array.
-
-    The transform lambda references ``col`` (via the labels split) once
-    PER SUFFIX — pass a plain attribute, never an expensive expression
-    (Catalyst re-inlines aliased exprs into lambda bodies, no CSE there);
-    pipelines should materialize the labels array and call
-    :func:`_label_suffixes` directly (see :func:`blocklist_filter`)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _label_suffixes(F.split(c, r"\."), max_depth)
-
-
 def _label_suffixes(labels: Column, max_depth: int) -> Column:
+    """All dot-suffixes of a host's label array, most-specific first —
+    ``[a, b, example, com]`` -> ``[a.b.example.com, b.example.com,
+    example.com, com]`` — capped at the ``max_depth`` SHORTEST suffixes (a
+    pathological 100-label host yields only its last ``max_depth``
+    suffixes; blocklists key on registrable domains, which live at the
+    short end, so the dropped deep suffixes cost nothing). Row-local; each
+    suffix is an O(depth) ``slice`` + join of the labels array.
+
+    The transform lambda references ``labels`` once PER SUFFIX — pass a
+    materialized column, never an expensive expression (Catalyst
+    re-inlines aliased exprs into lambda bodies, no CSE there)."""
     n = F.size(labels)
     start = F.when(n > max_depth, n - max_depth + 1).otherwise(F.lit(1))
     idx = F.when(n >= 1, F.sequence(start, n)).otherwise(

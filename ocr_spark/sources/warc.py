@@ -49,8 +49,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["wet_record_columns", "read_wet"]
-
 # a WARC header line: "Name: value" with CRLF or LF endings
 _HDR = r"(?m)^{name}:[ \t]*([^\r\n]*)\r?$"
 

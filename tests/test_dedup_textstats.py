@@ -19,10 +19,9 @@ from ocr_spark.operators.dedup import (
     exact_dedup,
     hamming64,
     jaccard_pairs,
-    minhash_dedup,
     minhash_lsh_candidates,
     simhash_dup_pairs,
-    word_shingles,
+    with_shingles,
 )
 from tests.plan_util import plan_text
 
@@ -47,7 +46,7 @@ def test_exact_dedup(spark, docs_df):
 
 
 def test_word_shingles_oracle(spark, docs_df):
-    got = {r.doc_id: sorted(r.sh) for r in docs_df.select("doc_id", word_shingles("text", 3).alias("sh")).collect()}
+    got = {r.doc_id: sorted(r.shingles) for r in with_shingles(docs_df, "text", 3).collect()}
     for doc_id, text in DOCS:
         words = re.sub(r"\s+", " ", text.lower()).strip().split(" ")
         if len(words) < 3:
@@ -63,9 +62,8 @@ def test_minhash_near_dup_detection(spark, docs_df):
     assert ("a1", "a2") in pairs and pairs[("a1", "a2")] == 1.0
     assert ("a1", "a3") in pairs and 0.5 <= pairs[("a1", "a3")] < 1.0
     assert all(not (a.startswith("a") and b.startswith("b")) for a, b in pairs)
-
-    kept = sorted(r.doc_id for r in minhash_dedup(docs_df, threshold=0.5, n_hashes=32, n_bands=16).collect())
-    assert kept == ["a1", "b1", "b2", "c1"]
+    # every planted near-dup is the larger id of some verified pair
+    assert {b for _, b in pairs} == {"a2", "a3"}
 
 
 def test_simhash_near_dup(spark, docs_df):
@@ -203,23 +201,11 @@ def test_simhash_pair_index_occupancy_sublinear(spark):
 
 
 def test_with_shingles_materializes_words_once(spark, docs_df):
-    """with_shingles must equal word_shingles AND keep the normalize+split
-    OUT of the transform lambda: the column-expression form re-inlines the
-    split per element (no CSE in HOF lambdas) — measured O(len²): 67s vs
-    2.3s on ONE 20k-word doc. The optimized plan must contain exactly one
+    """with_shingles must keep the normalize+split OUT of the transform
+    lambda: a split referenced from the lambda is re-inlined per element
+    (no CSE in HOF lambdas) — measured O(len²): 67s vs 2.3s on ONE
+    20k-word doc. The optimized plan must contain exactly one
     regexp_replace (in the words projection), none inside the lambda."""
-    from ocr_spark.operators.dedup import with_shingles
-
-    got = {
-        r.doc_id: sorted(r.shingles)
-        for r in with_shingles(docs_df, "text", 3).select("doc_id", "shingles").collect()
-    }
-    want = {
-        r.doc_id: sorted(r.sh)
-        for r in docs_df.select("doc_id", word_shingles("text", 3).alias("sh")).collect()
-    }
-    assert got == want
-
     plan = plan_text(
         with_shingles(docs_df, "text", 3)
         .select("doc_id", "shingles"), "optimized"
@@ -338,26 +324,26 @@ def test_dup_clusters_matches_union_find_on_random_graphs(spark):
 
 def test_minhash_dedup_clustered_keeps_one_per_component(spark):
     """Chained near-dups (base ≈ c1 ≈ c2, base vs c2 below threshold) must
-    collapse to the single smallest id per component."""
-    from ocr_spark.operators.dedup import jaccard_pairs, minhash_dedup_clustered, minhash_lsh_candidates
+    collapse to the single smallest id per component of the verified
+    pairs."""
+    from ocr_spark.operators.dedup import dup_clusters
 
     base = "the quick brown fox jumps over the lazy dog near the river bank today again and again"
     c1 = base + " drift one two three four five"
     c2 = c1 + " more drift six seven eight nine ten"
     rows = [("a1", base), ("a2", c1), ("a3", c2), ("z9", "entirely unrelated content about transformers")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in jaccard_pairs(
-            df, minhash_lsh_candidates(df, n_hashes=32, n_bands=16), threshold=0.55
-        ).collect()
-    }
+    verified = jaccard_pairs(
+        df, minhash_lsh_candidates(df, n_hashes=32, n_bands=16), threshold=0.55
+    )
+    pairs = {(r.id_a, r.id_b) for r in verified.collect()}
     # the chain premise: adjacent pairs pass, the far pair does not
     assert ("a1", "a2") in pairs and ("a2", "a3") in pairs
     assert ("a1", "a3") not in pairs
+    clusters = dup_clusters(verified, nodes=df)
     kept = sorted(
         r.doc_id
-        for r in minhash_dedup_clustered(df, threshold=0.55, n_bands=16).collect()
+        for r in clusters.filter(F.col("doc_id") == F.col("cluster")).collect()
     )
     assert kept == ["a1", "z9"]
 

@@ -149,7 +149,7 @@ def test_media_features_full_sf001_matches_python(spark):
         "doc_id", F.col("source").alias("media_ref"), "text"
     )
     decode_image_meta, resize_image_if_needed = make_decode_udf(), make_resize_udf()
-    feat = byte_histogram_features(64, as_double=True)
+    feat = byte_histogram_features(64)
     got_rows = (
         docs.withColumn("data", synthesize_media_bytes("media_ref", "text"))
         .withColumn("meta", decode_image_meta("data"))

@@ -10,11 +10,12 @@ import pandas as pd
 import pytest
 
 from ocr_spark import corpus
-from ocr_spark.operators.extract import (
-    convert_text_reference_exact,
-    extract_docs,
-    render_markdown,
+from ocr_spark.functions.textnorm import (
+    apply_math_patterns,
+    format_layout,
+    insert_image_tags,
 )
+from ocr_spark.operators.extract import extract_docs, render_markdown
 from ocr_spark.schema import DOC_SCHEMA
 
 from .conftest import spans_of
@@ -181,6 +182,9 @@ def test_salted_path_equivalence(spark):
 
 
 def test_reference_exact_text_path(spark):
+    """The textnorm stages in the reference's whole-text order (math ->
+    figure tags with \\n\\n -> layout) reproduce the reference's
+    whole-text conversion (src/ocr_to_markdown.py:400-409) on plain text."""
     texts = [
         ("√4 and 3/4 then x^2 a_1 sin(x) cos(y) tan(z)", "doc_a"),
         ("[数式:E=mc^2] ∫x dx α β γ θ π ∞", "doc_b"),
@@ -188,12 +192,8 @@ def test_reference_exact_text_path(spark):
         ("1． 見出し\n2、選択肢\n• item\n\n\n\n\nend\n3.14 not heading", "doc_d"),
     ]
     df = spark.createDataFrame(texts, ["text", "base"])
-    got = [
-        r.o
-        for r in df.select(
-            convert_text_reference_exact("text", F.col("base")).alias("o")
-        ).collect()
-    ]
+    out = insert_image_tags(apply_math_patterns(F.col("text")), F.col("base"))
+    got = [r.o for r in df.select(format_layout(out).alias("o")).collect()]
     want = [oracle.convert_text_reference_exact(t, b) for t, b in texts]
     assert got == want
 

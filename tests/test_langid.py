@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.langid import (
-    char_gram_buckets,
     langid_fit,
     langid_predict,
     langid_scores,
@@ -79,19 +78,6 @@ def seed_df(spark):
 @pytest.fixture(scope="module")
 def score_df(spark):
     return spark.createDataFrame(SCORE_DOCS, "doc_id int, text string")
-
-
-def test_char_gram_buckets_match_python(spark, score_df):
-    got = {
-        r["doc_id"]: r["bs"]
-        for r in score_df.select(
-            "doc_id", char_gram_buckets("text", 32, n=3, seed=5).alias("bs")
-        ).collect()
-    }
-    for doc_id, text in SCORE_DOCS:
-        assert got[doc_id] == [
-            _py_bucket(g, 32, 5) for g in _py_grams(text, 3)
-        ]
 
 
 def test_fit_matches_python(spark, seed_df):
@@ -195,9 +181,18 @@ def test_zero_gram_language_keeps_prior_row(spark, score_df):
 
 def test_validation(spark, seed_df):
     with pytest.raises(ValueError):
-        char_gram_buckets("text", 8, n=0)
-    with pytest.raises(ValueError):
         langid_fit(seed_df, 8, add_k=0.0)
+
+
+@pytest.mark.parametrize("n", [0, -1])
+def test_gram_order_must_be_positive(spark, seed_df, score_df, n):
+    """An n < 1 gram order has no grams to hash: both the fit and the score
+    path reject it instead of returning a model or labels."""
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        langid_fit(seed_df, 8, n=n)
+    model = langid_fit(seed_df, 8, n=3)
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        langid_scores(score_df, model, 8, n=n)
 
 
 def test_xxhash_family_same_predictions(spark, seed_df, score_df):

@@ -300,7 +300,7 @@ def test_mixing_plan_shape(spark):
     """decontaminate: training grams meet the benchmark set in a map-side
     broadcast join (never a shuffled join of the exploded gram stream), the
     gram lambdas reference a materialized words ATTRIBUTE (no re-inlined
-    split — the word_shingles lesson), and the shuffle budget is the three
+    split — the with_shingles lesson), and the shuffle budget is the three
     designed aggregations (bench distinct, per-(doc,gram) distinct, per-doc
     count). weighted_sample: zero shuffles — one broadcast of the weight
     table, everything else row-local."""

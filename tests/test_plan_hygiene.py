@@ -17,11 +17,15 @@ from tests.plan_util import plan_text
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Exported names that no gate, job, script or engine module calls; each has
-# a COVERAGE.md row saying it has no gate or job caller.
-API_WITHOUT_CALLER = {
-    "embed_multimodal", "minhash_dedup", "questions_by_tag",
-    "salted_join", "skewed_join_aqe", "sample_frames", "media_table",
+# Public engine names that no gate, job, scaling leg, script or other
+# engine code calls; each has a COVERAGE.md row saying it has no gate or
+# job caller.
+PUBLIC_WITHOUT_CALLER = {
+    "report_from_head_tail", "plan_visual_grid", "render_visual_grid",
+    "generate_docs_pandas", "oracle_embedding", "questions_by_tag",
+    "enrich_tags", "dedupe_tags", "embed_multimodal", "sample_frames",
+    "salted_join", "read_jsonl", "split_corrupt", "scan_binary_files",
+    "read_wet",
 }
 
 
@@ -30,53 +34,72 @@ def _plan(spark, name: str) -> str:
     return plan_text(df, "formatted")
 
 
-def test_public_api_names_resolve():
-    """Every name ``ocr_spark`` exports must resolve through its lazy import
-    map: deleting an operator without its ``_API`` entry fails here."""
-    import ocr_spark
-
-    for name in ocr_spark.__all__:
-        assert getattr(ocr_spark, name) is not None, name
-
-
-def _identifiers(path: str) -> set[str]:
-    """Names, attributes and imported names used in a Python file's code
-    (comments and docstrings do not count)."""
-    with open(path, encoding="utf-8") as f:
-        tree = ast.parse(f.read())
+def _identifiers(nodes) -> set[str]:
+    """Names, attributes and imported names used in the code of the given
+    AST nodes (comments and docstrings do not count)."""
     out = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
-            out.add(node.id)
-        elif isinstance(node, ast.Attribute):
-            out.add(node.attr)
-        elif isinstance(node, ast.alias):
-            out.add(node.name)
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name)
     return out
 
 
-def test_public_api_has_a_non_test_caller():
-    """Every ``ocr_spark`` export is used by a job, ``__spark_entry__``, a
-    script, ``bench.py`` or an engine module other than its own, or is
-    listed in API_WITHOUT_CALLER with a COVERAGE.md row that says so."""
-    import ocr_spark
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read())
 
+
+def _scaling_leg_identifiers() -> set[str]:
+    """Identifiers in the source of ``scripts/bench_scaling.py``'s worker,
+    which it keeps as the string ``_WORKER`` and runs in a subprocess."""
+    tree = _parse(os.path.join(ROOT, "scripts", "bench_scaling.py"))
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "_WORKER" for t in node.targets
+        ):
+            return _identifiers([ast.parse(node.value.value.format(repo=""))])
+    raise AssertionError("scripts/bench_scaling.py has no _WORKER source")
+
+
+def test_public_api_has_a_non_test_caller():
+    """Every public (no leading underscore) module-level function or class
+    in ``ocr_spark`` is referenced by non-test code outside its own
+    definition: a job, ``__spark_entry__``, ``bench.py``, a script, the
+    scaling legs' worker source or engine code (its own module included).
+    The names that are not are exactly PUBLIC_WITHOUT_CALLER, each with a
+    COVERAGE.md row that says so."""
     callers = [os.path.join(ROOT, f) for f in ("__spark_entry__.py", "bench.py")]
     for d in ("jobs", "scripts", "ocr_spark"):
         for dirpath, _, files in os.walk(os.path.join(ROOT, d)):
             callers += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
-    used = {p: _identifiers(p) for p in callers}
-    init = os.path.join(ROOT, "ocr_spark", "__init__.py")
+    trees = {p: _parse(p) for p in callers}
+    # one identifier set per top-level statement, so a definition's own
+    # body can be left out of its own callers
+    stmts = [(node, _identifiers([node])) for t in trees.values() for node in t.body]
+    leg_ids = _scaling_leg_identifiers()
+    engine = os.path.join(ROOT, "ocr_spark")
     uncalled = set()
-    for name, module in ocr_spark._API.items():
-        home = os.path.join(ROOT, *module.split(".")) + ".py"
-        if not any(name in ids for p, ids in used.items() if p not in (home, init)):
-            uncalled.add(name)
-    assert uncalled == API_WITHOUT_CALLER
+    for path, tree in trees.items():
+        if not path.startswith(engine + os.sep):
+            continue
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            name = node.name
+            if name.startswith("_") or name in leg_ids:
+                continue
+            if not any(name in ids for other, ids in stmts if other is not node):
+                uncalled.add(name)
+    assert uncalled == PUBLIC_WITHOUT_CALLER
 
     with open(os.path.join(ROOT, "COVERAGE.md"), encoding="utf-8") as f:
         rows = [line for line in f if "no gate or job caller" in line]
-    for name in API_WITHOUT_CALLER:
+    for name in PUBLIC_WITHOUT_CALLER:
         assert any(re.search(rf"\b{name}\b", row) for row in rows), name
 
 
@@ -264,7 +287,7 @@ def test_curation_ops_plan_shape(spark):
     repartition for repetition_stats/token_entropy (every later groupBy is
     partition-local), the min-struct keeper + winners rebuild + totals join
     for chunk_dedup, and NO inferred size()>0 filter re-substituting the
-    words split below an explode (the word_shingles lesson — curation
+    words split below an explode (the with_shingles lesson — curation
     materializes arrays and explodes with posexplode_outer)."""
     from ocr_spark.operators.curation import (
         chunk_dedup,

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.skew import salted_join, skewed_join_aqe
+from ocr_spark.operators.skew import salted_join
 from tests.plan_util import plan_text
 
 
@@ -73,8 +73,12 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_aqe_skew_join_configured_and_correct(spark):
+    """get_spark turns on AQE and its skew-join split, so a plain join of
+    skewed facts gets the runtime split with no wrapper."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
     facts, dim = _skewed_facts(spark, n=50_000), _dim(spark)
-    out = skewed_join_aqe(facts, dim, "k")
+    out = facts.join(dim, "k")
     assert out.count() == facts.count()  # every key 0..96 exists in dim
 
 

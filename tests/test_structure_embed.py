@@ -11,7 +11,7 @@ import pytest
 
 from ocr_spark import corpus
 from ocr_spark.operators.embed import embed_text, oracle_embedding, seed_for_text
-from ocr_spark.operators.structure import extract_problems, parse_problems_json, salvage_json
+from ocr_spark.operators.structure import extract_problems
 from ocr_spark.schema import DOC_SCHEMA
 
 CHOICE_RE = re.compile(r"^\s*(\d+)[\.．、]?\s*(.*)$", re.S)
@@ -137,33 +137,6 @@ def test_extract_problems_random_corpus(spark):
     }
     for rec in pdf.to_dict("records"):
         assert got[rec["doc_id"]] == _row_to_cmp(oracle_problems(rec["spans"])), rec["doc_id"]
-
-
-def test_salvage_json(spark):
-    rows = [
-        ('prefix {"problems": []} suffix',),
-        ("no braces here",),
-        ('{"a": {"b": 1}} trailing } ignored? no: rfind',),
-    ]
-    df = spark.createDataFrame(rows, ["t"])
-    got = [r.s for r in df.select(salvage_json("t").alias("s")).collect()]
-    def py_salvage(t):
-        i, j = t.find("{"), t.rfind("}")
-        return t[i : j + 1] if i != -1 and j != -1 and j >= i else None
-    assert got == [py_salvage(t) for (t, ) in rows]
-
-
-def test_parse_problems_json_fallback(spark):
-    ok = 'noise {"problems": [{"id": 1, "question": "q", "choices": [{"number": 1, "text": "a"}], "explanation": "e", "correct_answer": 1, "has_circuit_diagram": false, "has_table": true}]} noise'
-    bad = "completely unparseable"
-    df = spark.createDataFrame([("A", ok), ("B", bad)], ["doc_id", "payload"])
-    out = {r.doc_id: r.asDict(recursive=True) for r in parse_problems_json(df, "payload").collect()}
-    assert out["A"]["parse_ok"] is True
-    assert out["A"]["problems"][0]["question"] == "q"
-    assert out["A"]["raw_response"] is None
-    assert out["B"]["parse_ok"] is False
-    assert out["B"]["problems"] is None
-    assert out["B"]["raw_response"] == bad
 
 
 def test_embedding_determinism_and_contract(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.web import (
     domain_cap,
-    domain_stats,
     normalize_url,
     url_dedup,
     url_domain,
@@ -78,15 +77,6 @@ def test_url_dedup_keeps_whole_smallest_row(spark):
     )
 
 
-def test_domain_stats(spark):
-    df = spark.createDataFrame(
-        [(1, "http://www.a.com/1"), (2, "https://A.COM/2"), (3, "http://b.com/")],
-        "doc_id long, url string",
-    )
-    got = {r["domain"]: r["n_docs"] for r in domain_stats(df).collect()}
-    assert got == {"a.com": 2, "b.com": 1}
-
-
 def _py_uniform(doc_id, seed=0) -> float:
     h8 = hashlib.md5(f"{seed}|{doc_id}".encode()).hexdigest()[:8]
     return int(h8, 16) / 2**32
@@ -130,13 +120,14 @@ def test_domain_cap_scale_path_has_no_window(spark):
 # ------------------------------------------------------------- blocklist
 
 def test_host_suffixes_cases(spark):
-    from ocr_spark.operators.web import host_suffixes
+    from ocr_spark.operators.web import _label_suffixes
 
     df = spark.createDataFrame(
         [("a.b.example.com",), ("example.com",), ("com",), ("",)],
         "host string",
     )
-    got = [r["s"] for r in df.select(host_suffixes("host").alias("s")).collect()]
+    labels = F.split("host", r"\.")
+    got = [r["s"] for r in df.select(_label_suffixes(labels, 6).alias("s")).collect()]
     assert got[0] == ["a.b.example.com", "b.example.com", "example.com", "com"]
     assert got[1] == ["example.com", "com"]
     assert got[2] == ["com"]
@@ -144,10 +135,11 @@ def test_host_suffixes_cases(spark):
 
 
 def test_host_suffixes_depth_cap_keeps_short_end(spark):
-    from ocr_spark.operators.web import host_suffixes
+    from ocr_spark.operators.web import _label_suffixes
 
     df = spark.createDataFrame([("a.b.c.d.e.f.g.com",)], "host string")
-    got = df.select(host_suffixes("host", max_depth=3).alias("s")).collect()[0]["s"]
+    labels = F.split("host", r"\.")
+    got = df.select(_label_suffixes(labels, 3).alias("s")).collect()[0]["s"]
     assert got == ["f.g.com", "g.com", "com"]
 
 
