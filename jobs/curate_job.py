@@ -37,9 +37,10 @@ filter first so each stage sees less data:
        small curated table, not the raw corpus).
 
 Writes ``curated`` (doc_id, text, n_chunks, n_kept), ``curation_stats``
-and ``curation_rejects`` to the catalog. All stages are native Spark SQL
-expressions; the only corpus-wide shuffle is chunk_dedup's distinct-chunk
-aggregation (see operators/curation for the scale notes).
+and ``curation_rejects`` to the catalog and prints each table's row count
+as its write counted it (no table is re-read to count it). All stages are
+native Spark SQL expressions; the only corpus-wide shuffle is chunk_dedup's
+distinct-chunk aggregation (see operators/curation for the scale notes).
 """
 
 from __future__ import annotations
@@ -91,7 +92,8 @@ def main() -> None:
         min_stopwords=args.min_stopwords,
         carry_text=True,
     )
-    catalog.write(flagged.filter(~F.col("keep")).drop("keep"), "curation_rejects")
+    rows = {"curation_rejects": catalog.write(
+        flagged.filter(~F.col("keep")).drop("keep"), "curation_rejects")}
     kept = flagged.filter(F.col("keep")).select("doc_id", "text")
     if args.redact_pii:
         kept = kept.withColumn("text", redact_pii("text"))
@@ -105,17 +107,16 @@ def main() -> None:
         deduped = exact_substring_dedup(kept, min_words=args.substr_words)
     else:
         deduped = chunk_dedup(kept, chunk_words=args.chunk_words)
-    catalog.write(deduped, "curated")
+    rows["curated"] = catalog.write(deduped, "curated")
 
     texts = catalog.read("curated").select("doc_id", "text")
     stats = repetition_stats(texts).join(
         token_entropy(texts).select("doc_id", "entropy"), "doc_id"
     )
-    catalog.write(stats, "curation_stats")
+    rows["curation_stats"] = catalog.write(stats, "curation_stats")
 
     for name in ("curated", "curation_stats", "curation_rejects"):
-        n = catalog.read(name).count()
-        print(f"stage={name} rows={n}")
+        print(f"stage={name} rows={rows[name]}")
 
 
 if __name__ == "__main__":

@@ -12,11 +12,11 @@ Ship and run:
 
 Reads the interleaved docs table (input_hint shape), runs the 4-stage
 pipeline (extracted / questions / problems / embeddings), writes each stage
-to the catalog and prints its row count. ``--checkpointed`` uses the
-per-partition manifest + resume path (north_rule); without it (throughput
-mode), ``extracted`` is written first and the other three stages are built
-from the written table, so the docs are scanned once, and each row count is
-taken during its write.
+to the catalog and prints its row count as the write counted it (no table
+is re-read to count it). ``extracted`` is written first and the other three
+stages are built from the written table, so the docs are scanned once.
+``--checkpointed`` uses the per-partition manifest + resume path
+(north_rule); a resumed stage's rows come from the manifest.
 
 On a cluster, pass the usual ``--master yarn|k8s:// --num-executors ...``
 to spark-submit; this script only builds the SparkSession from the ambient
@@ -54,11 +54,10 @@ def main() -> None:
     catalog = Catalog(spark, args.catalog)
 
     if args.checkpointed:
-        stages = run_pipeline_checkpointed(
+        rows = run_pipeline_checkpointed(
             catalog, docs, dim=args.dim, year=args.year,
             n_partitions=args.n_partitions, run_id=args.run_id,
         )
-        rows = {name: catalog.read(name).count() for name in stages}
     else:
         rows = run_pipeline(catalog, docs, dim=args.dim, year=args.year)
 

@@ -25,7 +25,9 @@ each source at its target mix weight.
        so downstream shuffling/sharding can keep epochs apart.
 
 Writes ``mix`` (the sampled corpus), ``mix_contaminated`` and a per-source
-``mix_stats`` (input docs, contaminated, sampled rows) to the catalog.
+``mix_stats`` (input docs, contaminated, sampled rows) to the catalog and
+prints each table's row count as its write counted it (no table is re-read
+to count it).
 The benchmark gram set is broadcast; the only corpus-wide shuffle is the
 per-doc overlap count of the (contamination-selective) matched stream —
 see operators/mixing for the scale notes.
@@ -73,15 +75,15 @@ def main() -> None:
         docs, bench, n=args.ngram, min_overlaps=args.min_overlaps
     ).localCheckpoint()
     flagged = docs.join(flags, "doc_id")
-    catalog.write(
+    rows = {"mix_contaminated": catalog.write(
         flagged.filter(~F.col("keep")).drop("keep"), "mix_contaminated"
-    )
+    )}
     clean = flagged.filter(F.col("keep")).select("doc_id", "source", "text")
 
     mix = weighted_sample(
         clean, weights, seed=args.seed, default_weight=args.default_weight
     )
-    catalog.write(mix, "mix")
+    rows["mix"] = catalog.write(mix, "mix")
 
     stats = (
         flagged.groupBy("source")
@@ -96,11 +98,10 @@ def main() -> None:
         )
         .withColumn("n_sampled", F.coalesce("n_sampled", F.lit(0)))
     )
-    catalog.write(stats, "mix_stats")
+    rows["mix_stats"] = catalog.write(stats, "mix_stats")
 
     for name in ("mix", "mix_contaminated", "mix_stats"):
-        n = catalog.read(name).count()
-        print(f"stage={name} rows={n}")
+        print(f"stage={name} rows={rows[name]}")
 
 
 if __name__ == "__main__":

@@ -32,7 +32,9 @@ rejects with the evidence columns (per-item isolation, F3 style).
        around ``--log-threshold`` (the corpus-sized path).
 
 Writes ``selected``, ``select_blocked``, ``select_lowquality`` and a
-one-row ``select_stats`` to the catalog. The blocklist and the DSIR model
+one-row ``select_stats`` to the catalog, and prints the stats row. Its
+counts are the input's ``count()`` and the rows each write counted (no
+table is re-read to count it). The blocklist and the DSIR model
 are broadcast; the only corpus-wide shuffles are the two model-sized fit
 aggregations and the id-keyed score sum (see operators/dsir scale notes).
 """
@@ -80,13 +82,14 @@ def main() -> None:
     catalog = Catalog(spark, args.catalog)
 
     n_input = docs.count()
+    n_blocked = 0
     if args.blocklist:
         bl = spark.read.csv(args.blocklist, schema="domain string")
         # localCheckpoint: the verdict frame fans out to the rejects write
         # AND the survivor stream (same reason mix_job checkpoints flags)
         verdicts = blocklist_filter(docs, bl).localCheckpoint()
-        catalog.write(verdicts.filter(F.col("blocked")).drop("blocked"),
-                      "select_blocked")
+        n_blocked = catalog.write(verdicts.filter(F.col("blocked")).drop("blocked"),
+                                  "select_blocked")
         docs = verdicts.filter(~F.col("blocked")).drop("host", "blocked")
 
     # seeded stand-in model (the T14 dummy-embedder convention: swap in a
@@ -96,7 +99,7 @@ def main() -> None:
     scored = classifier_score(
         docs, make_seeded_weights(1 << 16, seed=args.seed + 1), seed=args.seed
     ).localCheckpoint()
-    catalog.write(
+    n_lowquality = catalog.write(
         scored.filter(F.col("score") < args.quality_threshold), "select_lowquality"
     )
     survivors = scored.filter(F.col("score") >= args.quality_threshold).drop(
@@ -113,20 +116,11 @@ def main() -> None:
         selected = dsir_sample_fraction(
             dsir_scored, args.log_threshold, seed=args.seed
         ).filter(F.col("keep")).drop("keep")
-    catalog.write(selected, "selected")
-
-    stats = spark.createDataFrame(
-        [(
-            n_input,
-            catalog.read("select_blocked").count() if args.blocklist else 0,
-            catalog.read("select_lowquality").count(),
-            catalog.read("selected").count(),
-        )],
-        "n_input long, n_blocked long, n_lowquality long, n_selected long",
-    )
-    catalog.write(stats, "select_stats")
-    for r in catalog.read("select_stats").collect():
-        print(f"stats={r.asDict()}")
+    stats = {"n_input": n_input, "n_blocked": n_blocked, "n_lowquality": n_lowquality,
+             "n_selected": catalog.write(selected, "selected")}
+    schema = ", ".join(f"{name} long" for name in stats)
+    catalog.write(spark.createDataFrame([tuple(stats.values())], schema), "select_stats")
+    print(f"stats={stats}")
 
 
 if __name__ == "__main__":

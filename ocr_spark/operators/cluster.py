@@ -17,9 +17,10 @@ Scale design:
   data rows); each iteration is one broadcast-column assignment (no shuffle)
   plus one map-side-combined aggregation (reuses
   similarity.lloyd_iteration — the machinery behind IVF's refine_iters).
-* **Assignment never shuffles.** The centroid set rides in as ONE broadcast
-  row holding array<struct<cell,cvec>> (similarity.with_best_cells) — no
-  plan literals, flat plan at production dims.
+* **Assignment never shuffles.** It is row-local: one numpy matmul per
+  Arrow batch against the closure-captured centroid matrix
+  (similarity.make_ivf_assign_blas_udf) — no plan literals, flat plan at
+  production dims.
 * **Pairs are cell-local.** The self-join keys on the cell id, so candidate
   volume is sum(|cell| choose 2), not (n choose 2). Cell granularity is the
   knob: n_cells ~ corpus_size / target_cell_size keeps cells bounded; a hot
@@ -52,7 +53,7 @@ from ocr_spark.functions.vectors import cosine_similarity
 from ocr_spark.operators.similarity import (
     ivf_centroid_pick,
     lloyd_iteration,
-    with_best_cells,
+    make_ivf_assign_blas_udf,
 )
 
 
@@ -89,28 +90,19 @@ def assign_clusters(
     cent_rows: list[dict],
     vec_col: str = "embedding",
     cell_col: str = "cell",
-    blas: bool = False,
 ) -> DataFrame:
     """Every row + its nearest-centroid ``cell_col`` (max cosine, ties to
-    the smaller cell) — one broadcast nested-loop join, zero shuffles.
+    the smaller cell) — row-local, zero shuffles.
 
-    ``blas=True`` switches to the Arrow-batched numpy-matmul assignment
-    (similarity.make_ivf_assign_blas_udf) — the throughput path when
-    n_cells x dim makes the per-row native fold interpreter-bound (SemDeDup
-    at production scale runs ~100k clusters). Same tie rule; summation
-    order differs, so oracle-gated paths stay native (see the UDF's
-    docstring)."""
-    if blas:
-        from ocr_spark.operators.similarity import make_ivf_assign_blas_udf
-
-        assign_udf = make_ivf_assign_blas_udf(cent_rows)
-        return embeddings.withColumn(cell_col, assign_udf(F.col(vec_col)))
-    spark = embeddings.sparkSession
-    return (
-        with_best_cells(spark, embeddings, F.col(vec_col), 1, cent_rows)
-        .withColumn(cell_col, F.element_at("__cells", 1))
-        .drop("__cells")
-    )
+    Runs the Arrow-batched numpy-matmul assignment
+    (similarity.make_ivf_assign_blas_udf), which stays fast where n_cells x
+    dim makes a per-row native fold interpreter-bound (SemDeDup at
+    production scale runs ~100k clusters). It is the path the
+    ``semdedup_keep`` gate verifies against its SQL oracle and the SemDeDup
+    scaling legs measure; its tie rule is the native ranking's
+    (similarity.with_best_cells), which the Lloyd steps still run."""
+    assign_udf = make_ivf_assign_blas_udf(cent_rows)
+    return embeddings.withColumn(cell_col, assign_udf(F.col(vec_col)))
 
 
 def semdedup(
@@ -121,7 +113,6 @@ def semdedup(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     seed: int = 0,
-    blas: bool = False,
     max_cell_size: int = 4096,
 ) -> DataFrame:
     """SemDeDup keep/drop marking: adds ``cell`` and ``keep``.
@@ -136,8 +127,8 @@ def semdedup(
     oracle-reproducible configuration; pass ``n_iter>0`` for real Lloyd
     refinement in production (pytest-pinned equivalence, no SQL twin).
 
-    Plan: broadcast assignment (no shuffle) -> cell-keyed self-join (the one
-    real shuffle, on the cell id) -> per-id map-side-combined witness
+    Plan: row-local BLAS assignment (no shuffle) -> cell-keyed self-join (the
+    one real shuffle, on the cell id) -> per-id map-side-combined witness
     aggregation -> id-keyed left join back. The pair stream is never
     distinct-ed or windowed.
 
@@ -163,7 +154,7 @@ def semdedup(
         raise ValueError("max_cell_size must be >= 2")
     assigned = semdedup_assign(
         embeddings, n_cells, n_iter=n_iter, id_col=id_col,
-        vec_col=vec_col, seed=seed, blas=blas,
+        vec_col=vec_col, seed=seed,
     ).localCheckpoint()
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("__cn"))
     tagged = assigned.join(F.broadcast(sizes), "cell")
@@ -362,7 +353,6 @@ def semdedup_assign(
     id_col: str = "doc_id",
     vec_col: str = "embedding",
     seed: int = 0,
-    blas: bool = False,
 ) -> DataFrame:
     """The clustering half of :func:`semdedup` (fit + assign), exposed for
     pipelines that persist assignments once and run several threshold
@@ -371,4 +361,4 @@ def semdedup_assign(
         embeddings, n_cells, n_iter=n_iter, id_col=id_col,
         vec_col=vec_col, seed=seed,
     )
-    return assign_clusters(embeddings, cent_rows, vec_col=vec_col, blas=blas)
+    return assign_clusters(embeddings, cent_rows, vec_col=vec_col)

@@ -481,10 +481,11 @@ def make_ivf_assign_blas_udf(cent_rows: list[dict]):
     of a row's cosines equally, so argmax is unaffected). Ties resolve to
     the smallest cell (argmax returns the first maximum over cells sorted
     ascending) — the same rule as the native ``array_sort`` ranking.
-    Summation order differs from the sequential fold, so bit-exact parity
-    of near-tied assignments with the SQL oracle is NOT guaranteed — use
-    the native path for oracle-gated runs; the equivalence test pins
-    agreement on a well-separated corpus.
+    Summation order differs from the sequential fold, so a near-tie can
+    resolve differently from the SQL oracle's fold: the ``semdedup_keep``
+    gate (cluster.assign_clusters runs this UDF) holds parity on its
+    corpus, and the equivalence tests pin agreement with the native
+    ranking on well-separated corpora.
 
     Factory (not module-level @pandas_udf): DDL-typed module-level pandas
     UDFs crash on worker import (see operators/embed.py).

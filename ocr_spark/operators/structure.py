@@ -36,7 +36,8 @@ CORRECT_RE = r"正解[:：]?\s*(\d+)"
 
 
 def extract_problems(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, spans) → (doc_id, problems, parse_ok).
+    """docs(doc_id, spans) → (doc_id, problems); a doc without a heading
+    gets empty ``problems``.
 
     One shuffle total: the running-sum window and both groupBys share the
     ``doc_id`` hash partitioning, so Catalyst plans a single Exchange.
@@ -136,11 +137,7 @@ def extract_problems(docs: DataFrame) -> DataFrame:
         F.slice("problems_raw", 1, F.greatest(F.size("problems_raw") - 1, F.lit(0))),
     ).otherwise(F.col("problems_raw"))
 
-    out = per_doc.select(
-        "doc_id",
-        problems.alias("problems"),
-        F.lit(True).alias("parse_ok"),
-    )
+    out = per_doc.select("doc_id", problems.alias("problems"))
     # docs with no heading at all: emit empty problems (left join back)
     all_docs = docs.select("doc_id")
     return (
@@ -151,7 +148,6 @@ def extract_problems(docs: DataFrame) -> DataFrame:
                 "problems",
                 F.array().cast(out.schema["problems"].dataType),
             ).alias("problems"),
-            F.coalesce("parse_ok", F.lit(True)).alias("parse_ok"),
         )
     )
 

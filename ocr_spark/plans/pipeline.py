@@ -6,9 +6,10 @@
                                   └─embed──────▶ embeddings
 
 Both modes write ``extracted`` first and build the :func:`derived_stages`
-from the table read back, so the docs are scanned and extracted once.
-:func:`run_pipeline` (throughput mode) overwrites each table and counts its
-rows during the write; :func:`run_pipeline_checkpointed` writes each stage
+from the table read back, so the docs are scanned and extracted once, and
+both return ``{table: rows}`` as counted by the writes (storage module
+docstring). :func:`run_pipeline` (throughput mode) overwrites each table
+with ``Catalog.write``; :func:`run_pipeline_checkpointed` writes each stage
 through storage.run_stage (per-partition manifest, resume).
 """
 
@@ -16,14 +17,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.embed import embed_text, seed_for_text
 from ocr_spark.operators.extract import extract_docs, render_markdown
 from ocr_spark.operators.structure import extract_problems
 from ocr_spark.functions.textnorm import derive_question_id
-from ocr_spark.schema import DEFAULT_EMBEDDING_DIM
+from ocr_spark.schema import DEFAULT_EMBEDDING_DIM, DOC_SCHEMA
 from ocr_spark.storage import Catalog, run_stage
 
 
@@ -70,19 +71,11 @@ def run_pipeline(catalog: Catalog, docs: DataFrame, dim: int = DEFAULT_EMBEDDING
                  year: int = 2024) -> dict[str, int]:
     """Throughput mode: write ``extracted``, read it back and write the
     derived stages from the read-back, so the docs are scanned once.
-    Returns {table: rows}, counted by an observation on each write: no
-    Spark job runs besides the four writes and the read-back."""
-    rows = {}
-
-    def write(df: DataFrame, name: str) -> None:
-        seen = Observation(name)
-        catalog.write(df.observe(seen, F.count(F.lit(1)).alias("rows")), name)
-        rows[name] = seen.get["rows"]
-
-    write(extract_docs(docs), "extracted")
+    Returns {table: rows}: no Spark job runs besides the four writes."""
+    rows = {"extracted": catalog.write(extract_docs(docs), "extracted")}
     extracted = catalog.read("extracted")
     for name, transform in derived_stages(dim, year).items():
-        write(transform(extracted), name)
+        rows[name] = catalog.write(transform(extracted), name)
     return rows
 
 
@@ -93,17 +86,21 @@ def run_pipeline_checkpointed(
     year: int = 2024,
     n_partitions: int = 8,
     run_id: str | None = None,
-) -> dict[str, DataFrame]:
+) -> dict[str, int]:
     """Checkpointed pipeline: every stage materializes to the catalog with a
     per-partition manifest; re-running after a crash resumes from the first
-    incomplete partition of the first incomplete stage (F1/F2 semantics)."""
-    out = {"extracted": run_stage(
+    incomplete partition of the first incomplete stage (F1/F2 semantics).
+    Returns {table: rows} like :func:`run_pipeline`; a resumed run takes
+    the completed buckets' rows from the manifest, never from the tables."""
+    rows = {"extracted": run_stage(
         catalog, "extracted", docs, extract_docs,
         n_partitions=n_partitions, run_id=run_id, lineage="docs",
     )}
+    # read with the schema so an empty stage (no bucket dirs) reads as 0 rows
+    extracted = catalog.spark.read.schema(DOC_SCHEMA).parquet(catalog.path("extracted"))
     for name, transform in derived_stages(dim, year).items():
-        out[name] = run_stage(
-            catalog, name, out["extracted"], transform,
+        rows[name] = run_stage(
+            catalog, name, extracted, transform,
             n_partitions=n_partitions, run_id=run_id, lineage="extracted",
         )
-    return out
+    return rows

@@ -59,7 +59,6 @@ PROBLEMS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("problems", T.ArrayType(PROBLEM_STRUCT), True),
-        T.StructField("parse_ok", T.BooleanType(), False),
     ]
 )
 

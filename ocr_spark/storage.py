@@ -13,13 +13,15 @@ Capabilities mirrored from the reference:
 * UPSERT idempotency (re-import updates the row; reference
   src/markdown_importer.py:202-210, src/embed_importer.py:276-289) → every
   sink overwrites: :meth:`Catalog.write` replaces a whole table (the fused
-  ``run_pipeline``), :func:`run_stage` replaces each bucket it redoes
-  (dynamic partition overwrite), so a re-run replaces rows, never adds them.
+  ``run_pipeline`` and the curate/select/mix jobs), :func:`run_stage`
+  replaces each bucket it redoes (dynamic partition overwrite), so a re-run
+  replaces rows, never adds them.
 * Stage skipping / resume from any stage — /root/reference/run_pipeline.sh:52-64
   → per-partition manifest + :func:`run_stage` pending-partition filtering.
 * Per-item error isolation with success/failure counters —
   /root/reference/src/markdown_importer.py:216-219,234-272 → error-split
-  writes + rows_in/rows_out/errors metrics per partition (north_rule).
+  writes + rows_in/rows_out/errors metrics per partition (north_rule),
+  counted by observations during the writes: no sink re-reads to count.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.schema import MANIFEST_SCHEMA
@@ -75,8 +77,14 @@ class Catalog:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    def write(self, df: DataFrame, name: str) -> None:
-        df.write.mode("overwrite").parquet(self.path(name))
+    def write(self, df: DataFrame, name: str) -> int:
+        """Overwrite table ``name`` with ``df``; returns the rows written,
+        counted during the write."""
+        seen = Observation()
+        df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
+            self.path(name)
+        )
+        return seen.get["rows"]
 
     # ------------------------------------------------------------------
     # snapshots (S11 — reference pg_dump/restore, README.md:244-254)
@@ -180,15 +188,16 @@ class Catalog:
         )
         df.write.mode("append").parquet(self.path(MANIFEST_TABLE))
 
-    def completed_partitions(self, stage: str, lineage: str | None = None) -> set[int]:
+    def completed_partitions(self, stage: str, lineage: str | None = None) -> dict[int, int]:
+        """``{partition_id: rows_out}`` of the stage's completed partitions."""
         if not self.exists(MANIFEST_TABLE):
-            return set()
+            return {}
         m = self.manifest().filter(
             (F.col("stage") == stage) & (F.col("status") == "completed")
         )
         if lineage is not None:
             m = m.filter(F.col("lineage") == lineage)
-        return {r.partition_id for r in m.select("partition_id").distinct().collect()}
+        return {r.partition_id: r.rows_out for r in m.select("partition_id", "rows_out").collect()}
 
 
 def partition_id_col(key_col: str, n_partitions: int) -> F.Column:
@@ -206,12 +215,13 @@ def run_stage(
     run_id: str | None = None,
     lineage: str | None = None,
     error_col: str | None = None,
-) -> DataFrame:
+) -> int:
     """Run one checkpointed pipeline stage, resumable per partition.
 
     * input rows are assigned a deterministic ``__pid`` bucket;
     * buckets already ``completed`` in the manifest (same stage+lineage) are
-      skipped entirely — a re-run after a crash is a no-op for them;
+      skipped entirely — a re-run after a crash is a no-op for them, and a
+      stage with no pending bucket is not planned at all;
     * ALL pending buckets run in ONE Spark job that writes
       ``{stage}/__pid=p`` by dynamic partition overwrite; their manifest
       rows land after the job commits. A crash before the manifest lands
@@ -225,54 +235,50 @@ def run_stage(
       rows) and counted in the manifest instead of failing the stage
       (per-item error isolation, F3).
 
-    Returns the full stage output, read back once from the table directory
-    with the transform's schema (so an empty stage reads back as zero rows;
-    empty buckets have no directory).
+    Each bucket's ``rows_in``/``rows_out``/``errors`` are observed (one
+    ``count_if(__pid == p)`` per pending bucket) on the input, as the
+    transform reads it, and on the output, during the stage write. Returns
+    the stage's rows: observed for the buckets run now, from the manifest
+    for the others. An empty stage has no bucket directories.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     lineage = lineage or stage + ":input"
     done = catalog.completed_partitions(stage, lineage)
     pending = [p for p in range(n_partitions) if p not in done]
+    if not pending:
+        return sum(done.values())
     pid = partition_id_col(key_col, n_partitions)
+
+    def per_bucket(prefix: str, cond: F.Column) -> list[F.Column]:
+        return [F.count_if((F.col("__pid") == p) & cond).alias(f"{prefix}{p}") for p in pending]
+
+    seen_in, seen_out = Observation(), Observation()
     sub = input_df.withColumn("__pid", pid).filter(F.col("__pid").isin(pending))
-    out = transform(sub.drop("__pid"))
-    if error_col is not None:
-        bad = out.filter(F.col(error_col).isNotNull())
-        out = out.filter(F.col(error_col).isNull()).drop(error_col)
-    out = out.withColumn("__pid", pid)
-
-    table_dir = catalog.path(stage)
-    os.makedirs(table_dir, exist_ok=True)
-
-    def read_table() -> DataFrame:
-        return catalog.spark.read.schema(out.schema).parquet(table_dir)
-
-    if pending:
-        in_counts = _counts_by_pid(sub)
-        err_counts = {}
-        if error_col is not None:
-            bad = bad.withColumn("__pid", pid)
-            err_counts = _counts_by_pid(bad)
-            if err_counts:
-                _overwrite_buckets(bad, catalog.path(stage + "_errors"))
-        _overwrite_buckets(out, table_dir)
-        out_counts = _counts_by_pid(read_table().filter(F.col("__pid").isin(pending)))
-        catalog.append_manifest(
-            [
-                {
-                    "stage": stage,
-                    "partition_id": p,
-                    "status": "completed",
-                    "rows_in": in_counts.get(p, 0),
-                    "rows_out": out_counts.get(p, 0),
-                    "errors": err_counts.get(p, 0),
-                    "lineage": lineage,
-                    "run_id": run_id,
-                }
-                for p in pending
-            ]
-        )
-    return read_table().drop("__pid")
+    sub = sub.observe(seen_in, *per_bucket("in", F.lit(True)))
+    out = transform(sub.drop("__pid")).withColumn("__pid", pid)
+    ok = F.lit(True) if error_col is None else F.col(error_col).isNull()
+    out = out.observe(seen_out, *per_bucket("out", ok), *per_bucket("err", ~ok))
+    good = out if error_col is None else out.filter(ok).drop(error_col)
+    _overwrite_buckets(good, catalog.path(stage))
+    counts = {**seen_in.get, **seen_out.get}
+    if any(counts[f"err{p}"] for p in pending):
+        _overwrite_buckets(out.filter(~ok), catalog.path(stage + "_errors"))
+    catalog.append_manifest(
+        [
+            {
+                "stage": stage,
+                "partition_id": p,
+                "status": "completed",
+                "rows_in": counts[f"in{p}"],
+                "rows_out": counts[f"out{p}"],
+                "errors": counts[f"err{p}"],
+                "lineage": lineage,
+                "run_id": run_id,
+            }
+            for p in pending
+        ]
+    )
+    return sum(done.values()) + sum(counts[f"out{p}"] for p in pending)
 
 
 def _overwrite_buckets(df: DataFrame, path: str) -> None:
@@ -285,7 +291,3 @@ def _overwrite_buckets(df: DataFrame, path: str) -> None:
         .partitionBy("__pid")
         .parquet(path)
     )
-
-
-def _counts_by_pid(df: DataFrame) -> dict[int, int]:
-    return {r["__pid"]: r["count"] for r in df.groupBy("__pid").count().collect()}

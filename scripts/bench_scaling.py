@@ -174,7 +174,7 @@ JOBS = {{
     # (~n^2/2k = 30M at 500k docs), map-side-combined witness aggregation
     "semdedup": lambda: semdedup(
         spark.read.parquet(corpus + "_qemb").select("doc_id", "embedding"),
-        n_cells=4096, threshold=0.8, n_iter=0, blas=True,
+        n_cells=4096, threshold=0.8, n_iter=0,
     ),
     # the giant-cell defense under adversarial skew: 10% of the corpus is
     # ONE planted duplicate direction (50k identical vectors at 500k ->
@@ -261,8 +261,7 @@ def _semdedup_skew_job():
         F.when(hot, hotvec).otherwise(F.col("embedding")).alias("embedding"),
     )
     return semdedup(
-        emb, n_cells=4096, threshold=0.8, n_iter=0, blas=True,
-        max_cell_size=4096,
+        emb, n_cells=4096, threshold=0.8, n_iter=0, max_cell_size=4096,
     )
 
 def _lm_quality_job():

@@ -22,6 +22,8 @@ from ocr_spark.operators.similarity import (
     top_k_similar,
 )
 from ocr_spark.operators.tags import (
+    dedupe_tags,
+    enrich_tags,
     questions_by_multiple_tags,
     questions_by_tag,
     questions_with_min_years,
@@ -154,6 +156,44 @@ def test_questions_by_tag_and_multi(spark, tag_dfs):
         ).collect()
     )
     assert multi == ["Q001", "Q004"]
+
+
+def test_enrich_tags_matches_dict_join(spark, tag_dfs):
+    """J4: every tag row keeps its place and gains its key's definition; a
+    key with no definition (``year_list``) gets null."""
+    _, qt = tag_dfs
+    defs = {"category": ("分類", "enum"), "difficulty": ("難易度", "enum")}
+    tag_defs = spark.createDataFrame(
+        [(k, label, kind) for k, (label, kind) in defs.items()],
+        "tag_key string, label string, value_type string",
+    )
+    got = sorted(
+        (r.question_id, r.tag_key, r.tag_value, r.label, r.value_type)
+        for r in enrich_tags(qt, tag_defs).collect()
+    )
+    want = sorted((q, k, v, *defs.get(k, (None, None))) for q, k, v in TAGS)
+    assert got == want
+    assert ("Q005", "year_list", '["R03","R04","R05"]', None, None) in got
+
+
+def test_dedupe_tags_keeps_one_whole_row_per_key(spark):
+    """U3: exactly one row survives per (question_id, tag_key), and each
+    survivor is one whole input row, never fields stitched from two."""
+    rows = [
+        ("Q1", "category", "circuit", "model-a"),
+        ("Q1", "category", "power", "model-b"),
+        ("Q1", "difficulty", "HIGH", None),
+        ("Q2", "category", "circuit", "model-a"),
+        ("Q2", "category", "circuit", "model-c"),
+        ("Q2", "category", "power", None),
+    ]
+    qt = spark.createDataFrame(
+        rows, "question_id string, tag_key string, tag_value string, ai_inference string"
+    ).repartition(3)
+    got = [tuple(r) for r in dedupe_tags(qt).collect()]
+    keys = [(q, k) for q, k, *_ in got]
+    assert sorted(keys) == sorted({(q, k) for q, k, *_ in rows})
+    assert all(r in rows for r in got)
 
 
 def test_questions_with_min_years(spark, tag_dfs):

@@ -148,15 +148,19 @@ def test_kmeans_niter0_is_the_seeded_pick(spark):
 
 
 def test_assign_clusters_blas_agrees_with_native(spark):
+    """assign_clusters (the BLAS UDF) picks the cell the native ranking
+    that the Lloyd steps run (similarity.with_best_cells) picks."""
+    from ocr_spark.operators.similarity import with_best_cells
+
     emb, _ = _toy_embeddings(spark)
     cents = kmeans_fit(emb, k=3, n_iter=1)
     nat = {
-        r["doc_id"]: r["cell"]
-        for r in assign_clusters(emb, cents).collect()
+        r["doc_id"]: r["__cells"][0]
+        for r in with_best_cells(spark, emb, F.col("embedding"), 1, cents).collect()
     }
     blas = {
         r["doc_id"]: r["cell"]
-        for r in assign_clusters(emb, cents, blas=True).collect()
+        for r in assign_clusters(emb, cents).collect()
     }
     assert nat == blas
 

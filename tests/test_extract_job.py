@@ -1,8 +1,9 @@
 """extract_job end to end through its argv interface: throughput mode scans
-the docs once and prints row counts taken during the writes; the fused and
-checkpointed catalogs hold the same rows; a fused re-run into a populated
-catalog replaces rows instead of adding them; an empty docs table gives
-four empty tables."""
+the docs once; both modes print row counts taken during the writes (a
+checkpointed run and its resume count no table); the fused and checkpointed
+catalogs hold the same rows, typed as ``ocr_spark.schema`` documents them; a
+fused re-run into a populated catalog replaces rows instead of adding them;
+an empty docs table gives four empty tables."""
 
 from __future__ import annotations
 
@@ -16,11 +17,12 @@ from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import MapType
 
 from ocr_spark import corpus
 from ocr_spark.operators.extract import extract_docs
-from ocr_spark.schema import DOC_SCHEMA
+from ocr_spark.schema import DOC_SCHEMA, EMBEDDING_SCHEMA, PROBLEMS_SCHEMA, SPAN_KINDS
 from ocr_spark.storage import Catalog
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
@@ -99,6 +101,38 @@ def test_printed_rows_match_tables_and_fused_equals_checkpointed(spark, runs):
         a, b = _comparable(fused), _comparable(ck)
         assert a.exceptAll(b).count() == 0, stage
         assert b.exceptAll(a).count() == 0, stage
+
+
+def test_tables_have_the_documented_schemas(spark, runs):
+    """Each written table's types (nullability aside: ``simpleString``
+    omits it) are the schema that documents it, in both modes, and every
+    extracted span kind is a documented one."""
+    documented = {"extracted": DOC_SCHEMA, "problems": PROBLEMS_SCHEMA,
+                  "embeddings": EMBEDDING_SCHEMA}
+    for mode in ("fused", "checkpointed"):
+        for stage, schema in documented.items():
+            got = spark.read.parquet(os.path.join(runs[mode], stage)).drop("__pid").schema
+            assert got.simpleString() == schema.simpleString(), (mode, stage)
+        extracted = spark.read.parquet(os.path.join(runs[mode], "extracted"))
+        kinds = {r.kind for r in extracted.select(F.explode("spans.kind").alias("kind"))
+                 .distinct().collect()}
+        assert kinds and kinds <= set(SPAN_KINDS), (mode, kinds)
+
+
+def test_checkpointed_rows_come_from_the_writes(spark, runs, tmp_path):
+    """A checkpointed run and its resume print every table's true row
+    count without a ``count()``: the resume takes them from the manifest."""
+    catalog = str(tmp_path / "catalog")
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count() called")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClassicDataFrame, "count", no_count)
+        first = _run_job(runs["docs"], catalog, "--checkpointed", "--n-partitions", "4")
+        again = _run_job(runs["docs"], catalog, "--checkpointed", "--n-partitions", "4")
+    tables = {stage: spark.read.parquet(os.path.join(catalog, stage)).count() for stage in STAGES}
+    assert first == again == tables == dict.fromkeys(STAGES, 40)
 
 
 def test_fused_rerun_replaces_changed_rows(spark, runs, tmp_path):

@@ -103,6 +103,55 @@ def test_public_api_has_a_non_test_caller():
         assert any(re.search(rf"\b{name}\b", row) for row in rows), name
 
 
+def _is_table_read(node, tables: set[str]) -> bool:
+    """Whether an expression is a ``catalog.read(...)`` result: the call
+    itself, a method chain on it, or a name bound to one."""
+    while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        f = node.func
+        if f.attr == "read" and isinstance(f.value, ast.Name) and f.value.id == "catalog":
+            return True
+        node = f.value
+    return isinstance(node, ast.Name) and node.id in tables
+
+
+def _table_count_calls(tree: ast.Module) -> list[int]:
+    """Line numbers of ``.count()`` calls on a ``catalog.read(...)`` result."""
+    tables = {
+        t.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and _is_table_read(node.value, set())
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "count" and not node.args
+        and _is_table_read(node.func.value, tables)
+    ]
+
+
+def test_jobs_never_count_a_table_they_read():
+    """Row counts come from the writes (``Catalog.write`` returns the rows
+    it wrote, ``run_pipeline*`` return ``{table: rows}``): no job re-reads
+    a catalog table to ``count()`` it."""
+    planted = ast.parse(
+        "n = catalog.read(name).count()\n"
+        "t = catalog.read('x').select('a')\n"
+        "m = t.count()\n"
+        "k = catalog.read('x').groupBy('a').agg(F.count('*'))\n"
+    )
+    assert _table_count_calls(planted) == [1, 3]
+    jobs = os.path.join(ROOT, "jobs")
+    found = {
+        f: lines
+        for f in sorted(os.listdir(jobs))
+        if f.endswith(".py") and (lines := _table_count_calls(_parse(os.path.join(jobs, f))))
+    }
+    assert not found
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _plan(spark, "q1_pricing_summary")
     assert "LessThanOrEqual(l_shipdate" in plan  # PushedFilters

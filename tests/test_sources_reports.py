@@ -320,8 +320,9 @@ def test_snapshot_restore_preserves_bucketed_layout(spark, tmp_path):
     docs = spark.range(40).select(F.col("id").alias("doc_id"), F.col("id").alias("v"))
 
     def stage():
-        return run_stage(cat, "st", docs, lambda df: df.withColumn("w", F.col("v") * 2),
-                         n_partitions=4)
+        run_stage(cat, "st", docs, lambda df: df.withColumn("w", F.col("v") * 2),
+                  n_partitions=4)
+        return cat.read("st").drop("__pid")
 
     want = sorted(stage().collect())
     cat.snapshot("st", "s1")

@@ -39,37 +39,42 @@ def test_run_stage_resume_after_crash(spark, catalog, monkeypatch):
         run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
     assert catalog.manifest().count() == 0
     # resume: every bucket is pending again and is overwritten, not appended
-    out = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
-    assert out.count() == 80
+    rows = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
+    out = catalog.read("extracted")
+    assert rows == out.count() == 80
     assert out.select("doc_id").distinct().count() == 80
     assert catalog.manifest().count() == 4
-    # re-run again: fully no-op, manifest unchanged
-    out2 = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
+    # re-run again: fully no-op, manifest unchanged, rows from the manifest
+    rows2 = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=4, lineage="docs")
+    assert rows2 == 80
     assert catalog.manifest().count() == 4
-    assert spans_of(out2) == spans_of(extract_docs(docs))
+    assert spans_of(catalog.read("extracted")) == spans_of(extract_docs(docs))
 
 
 def test_checkpointed_rerun_with_empty_buckets(spark, catalog):
     """3 docs over 16 buckets leave most bucket directories unwritten; the
-    no-op re-run of the checkpointed pipeline must still read every stage
-    back."""
+    no-op re-run of the checkpointed pipeline must still report every
+    stage's rows, and the tables read back."""
     docs = corpus.generate_docs(spark, 3, seed=5, heavy_pct=0.0)
     run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=16)
     again = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=16)
     assert catalog.manifest().count() == 4 * 16
-    assert {name: df.count() for name, df in again.items()} == {
-        "extracted": 3, "questions": 3, "problems": 3, "embeddings": 3
-    }
-    assert spans_of(again["extracted"]) == spans_of(extract_docs(docs))
+    want = {"extracted": 3, "questions": 3, "problems": 3, "embeddings": 3}
+    assert again == want
+    assert {name: catalog.read(name).count() for name in again} == want
+    assert spans_of(catalog.read("extracted")) == spans_of(extract_docs(docs))
 
 
 def test_checkpointed_empty_input(spark, catalog):
     docs = spark.createDataFrame([], DOC_SCHEMA)
     for _ in range(2):  # first run, then the no-op re-run
-        out = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=4)
-        assert all(df.count() == 0 for df in out.values())
+        rows = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=4)
+        assert rows == dict.fromkeys(["extracted", "questions", "problems", "embeddings"], 0)
         assert catalog.manifest().count() == 4 * 4
-    assert out["extracted"].schema.simpleString() == extract_docs(docs).schema.simpleString()
+    # an empty stage has no bucket directories: it reads back by schema
+    extracted = spark.read.schema(DOC_SCHEMA).parquet(catalog.path("extracted"))
+    assert extracted.count() == 0
+    assert extracted.schema.simpleString() == extract_docs(docs).schema.simpleString()
 
 
 def test_error_split(spark, catalog, monkeypatch):
@@ -85,7 +90,7 @@ def test_error_split(spark, catalog, monkeypatch):
         )
 
     def run():
-        return run_stage(
+        run_stage(
             catalog, "checked", df, transform, n_partitions=4, lineage="raw",
             error_col="error",
         )
@@ -104,7 +109,8 @@ def test_error_split(spark, catalog, monkeypatch):
     monkeypatch.setattr(Catalog, "append_manifest", crash_once)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run()
-    out = run()
+    run()
+    out = catalog.read("checked")
     assert sorted(r.doc_id for r in out.collect()) == sorted(
         r.doc_id for r in df.collect() if r.doc_id not in negative
     )
@@ -124,7 +130,8 @@ def test_pipeline_end_to_end(spark, catalog, tmp_path):
     rows = run_pipeline(fused_catalog, docs, dim=32)
     assert rows == dict.fromkeys(["extracted", "questions", "problems", "embeddings"], 40)
     fused = {name: fused_catalog.read(name) for name in rows}
-    ck = run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=3)
+    assert run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=3) == rows
+    ck = {name: catalog.read(name) for name in rows}
     # checkpointed output == fused output, stage by stage
     assert spans_of(ck["extracted"]) == spans_of(fused["extracted"])
     fq = {r.question_id: (r.year, r.content) for r in fused["questions"].collect()}

@@ -10,7 +10,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from ocr_spark import corpus
-from ocr_spark.operators.embed import embed_text, oracle_embedding, seed_for_text
+from ocr_spark.operators.embed import (
+    embed_multimodal,
+    embed_text,
+    oracle_embedding,
+    seed_for_media,
+    seed_for_text,
+)
 from ocr_spark.operators.structure import extract_problems
 from ocr_spark.schema import DOC_SCHEMA
 
@@ -155,6 +161,28 @@ def test_embedding_determinism_and_contract(spark):
         v = np.array(r.embedding, dtype=np.float32)
         assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-5
         np.testing.assert_allclose(v, oracle_embedding(r.seed, 64), rtol=1e-6)
+
+
+def test_embed_multimodal_matches_oracle(spark):
+    """T15: each vector is the driver-side oracle's for the row's
+    (media_ref, text) seed, within 1e-6, and has unit norm; a null media
+    ref or text hashes as empty."""
+    df = spark.createDataFrame(
+        [("a", "img://d/fig_1.png", "図の説明"), ("b", "img://d/fig_1.png", "other"),
+         ("c", None, "図の説明"), ("d", "img://d/fig_2.png", None), ("e", "", "図の説明")],
+        "doc_id string, media_ref string, content string",
+    )
+    out = embed_multimodal(df, dim=32).select(
+        "doc_id", "embedding", seed_for_media("media_ref", "content").alias("seed")
+    )
+    rows = out.collect()
+    seeds = {r.doc_id: r.seed for r in rows}
+    assert seeds["c"] == seeds["e"] and len(set(seeds.values())) == 4
+    for r in rows:
+        v = np.array(r.embedding, dtype=np.float32)
+        assert v.shape == (32,)
+        np.testing.assert_allclose(v, oracle_embedding(r.seed, 32), atol=1e-6)
+        assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-5
 
 
 def test_embedding_partition_invariance(spark):
