@@ -93,9 +93,8 @@ def main() -> None:
         docs = verdicts.filter(~F.col("blocked")).drop("host", "blocked")
 
     # seeded stand-in model (the T14 dummy-embedder convention: swap in a
-    # trained (bucket, weight) vector in production); 2^16 buckets is the
-    # literal-array path's design ceiling — larger models go through
-    # classifier_score_joined
+    # trained (bucket, weight) vector in production); the weights are one
+    # constant-folded array literal, not one plan-build call per weight
     scored = classifier_score(
         docs, make_seeded_weights(1 << 16, seed=args.seed + 1), seed=args.seed
     ).localCheckpoint()

@@ -9,12 +9,30 @@ no UDF, usable in any filter/join/window without breaking pushdown.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def double_array_literal(xs: Iterable[float]) -> Column:
+    """A constant ``array<double>`` column built from ONE string literal.
+
+    ``F.lit(list)`` is ``array(lit(x), ...)`` on pyspark 4: one py4j call
+    per element, ~30 s of driver time for 65,536 classifier weights. Here
+    the driver makes a handful of calls whatever the length, and Catalyst
+    constant-folds split + cast into one array literal, so the column is
+    foldable (``percentile_approx`` accepts it as its percentages) and
+    costs nothing per row. ``repr`` round-trips a double exactly, so every
+    element is bit-identical to the input."""
+    vals = [float(x) for x in xs]
+    if not vals:
+        raise ValueError("an array literal needs at least one element")
+    return F.split(F.lit(",".join(map(repr, vals))), ",").cast("array<double>")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

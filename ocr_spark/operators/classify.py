@@ -13,24 +13,29 @@ the score is the logistic of the logit — exactly fastText's mean-pooled
 unigram architecture with the hashing trick, minus the softmax (binary
 head).
 
-Scale design — two equivalent paths, equivalence-tested:
+Scale design — two forms, equivalence-tested; neither runs per-row Python:
 
-* :func:`classifier_score` (default): the weight vector rides in as ONE
-  literal array column; scoring is a row-local fold — zero shuffles, whole
-  plan inside whole-stage codegen. Right for models up to ~64k buckets
-  (the literal array is serialized once per task). A quality gate is this
-  score plus one ``score >= threshold`` filter, which callers write inline
-  (jobs/select_job.py). The md5 bucket hash is engine-portable, so the
-  DuckDB oracle mirrors it digit-by-digit (same trick as
-  mixing.portable_uniform).
-* :func:`classifier_score_joined`: for million-bucket models where a plan
-  literal is unreasonable — repartition the RAW docs by id (pinned;
-  HashPartitioning(id) satisfies the downstream groupBy, so the exploded
-  word stream never shuffles — the curation.repetition_stats pattern),
-  posexplode words, broadcast-join the (bucket, weight) table, sum back
-  per doc. One broadcast, zero wide shuffles.
-
-Neither path runs per-row Python; both are native-expression only.
+* :func:`classifier_score`: the weight vector is ONE constant array
+  literal, built from one string
+  (:func:`ocr_spark.functions.vectors.double_array_literal`, a handful of
+  driver calls at any model size), and scoring is a row-local fold: zero
+  shuffles. The gate and jobs/select_job.py run it; a quality gate is
+  this score plus one ``score >= threshold`` filter, written inline by the
+  caller. The md5 bucket hash is engine-portable, so the DuckDB oracle
+  mirrors it digit-by-digit (same trick as mixing.portable_uniform).
+  Every action still pays for the folded literal on the driver (a
+  one-row action takes about 1.9 s at 2^18 buckets, 1 s at 2^16), and
+  the fold runs interpreted (``aggregate`` has no codegen), so on the
+  ``classify`` scaling leg it is slower and scales worse than the joined
+  form.
+* :func:`classifier_score_joined`: for large models (the ``classify``
+  scaling leg runs it at 2^18 buckets) — repartition the RAW docs by id
+  (pinned; HashPartitioning(id) satisfies the downstream groupBy, so the
+  exploded word stream never shuffles — the curation.repetition_stats
+  pattern), posexplode words, broadcast-join the (bucket, weight) table,
+  sum back per doc. One broadcast, zero wide shuffles. It is not used
+  inside select_job: there it raised curate_select_mix's write_amp past
+  its bound (BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.vectors import double_array_literal
 from ocr_spark.operators.curation import _pinned_partitions, words_column
 
 
@@ -84,10 +90,7 @@ def classifier_score(
     n_buckets = len(weights)
     if n_buckets < 1:
         raise ValueError("classifier needs at least one weight bucket")
-    # F.lit(list) is array(*[lit(w) ...]) on pyspark 4: one py4j call per
-    # bucket, ~10 s of plan construction for 64k buckets (ROADMAP.md
-    # holds the one-literal build that removes it)
-    warr = F.lit([float(w) for w in weights])
+    warr = double_array_literal(weights)
     with_words = docs.withColumn("__words", words_column(text_col))
     # fold input is the materialized column; the lambda body touches only
     # its element + the literal array (cheap, constant) — not the expensive
@@ -149,4 +152,3 @@ def classifier_score_joined(
         score_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
     ).drop("__wsum")
     return pinned.join(scored, id_col)
-

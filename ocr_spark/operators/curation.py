@@ -41,6 +41,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.vectors import double_array_literal
+
 
 def words_column(text_col: Column | str) -> Column:
     """Whitespace word array of a text column; empty array for empty/null/
@@ -481,7 +483,7 @@ def perplexity_buckets(
     if thresholds is not None:
         cuts = [float(t) for t in thresholds]
     else:
-        pcts = F.lit([float(f) for f in fractions])
+        pcts = double_array_literal(fractions)
         agg = F.percentile_approx(score_col, pcts, F.lit(accuracy))
         got = scored.agg(agg.alias("t")).collect()[0]["t"]
         if got is None:

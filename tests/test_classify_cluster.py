@@ -5,9 +5,11 @@ import hashlib
 import math
 
 import numpy as np
+import pyspark.sql.functions.builtin as spark_builtin
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.vectors import double_array_literal
 from ocr_spark.operators.classify import (
     classifier_score,
     classifier_score_joined,
@@ -86,6 +88,35 @@ def test_literal_and_joined_paths_agree(spark, docs_df):
         # summation ORDER differs (array fold vs aggregate), so compare
         # numerically, not bit-for-bit
         assert lit[k][1] == pytest.approx(joined[k][1], abs=1e-12)
+
+
+def test_classifier_plan_build_is_not_per_weight(spark, docs_df, monkeypatch):
+    """The weight vector is one string literal, not one py4j call per
+    weight (F.lit(list) made 4,096 calls here and ~30 s of driver time at
+    2^16 weights)."""
+    calls = []
+    invoke = spark_builtin._invoke_function
+
+    def counting(name, *args):
+        calls.append(name)
+        return invoke(name, *args)
+
+    monkeypatch.setattr(spark_builtin, "_invoke_function", counting)
+    classifier_score(docs_df, make_seeded_weights(4096), seed=1)
+    assert 0 < len(calls) < 50
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_weight_literal_is_bit_identical(spark, seed):
+    w = make_seeded_weights(1 << 16, seed=seed)
+    got = spark.range(1).select(double_array_literal(w).alias("w")).first()["w"]
+    assert got == w  # element for element, exact
+
+
+def test_classifier_over_no_docs(spark, docs_df):
+    out = classifier_score(docs_df.limit(0), make_seeded_weights(16), seed=1)
+    assert {"n_words", "score"} <= set(out.columns)
+    assert out.count() == 0
 
 
 def test_classifier_literal_path_has_no_exchange(spark, docs_df):

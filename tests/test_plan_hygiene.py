@@ -152,6 +152,46 @@ def test_jobs_never_count_a_table_they_read():
     assert not found
 
 
+_SEQUENCE_NODES = (ast.List, ast.Tuple, ast.ListComp)
+
+
+def _lit_of_sequence_calls(tree: ast.Module) -> list[int]:
+    """Line numbers of ``F.lit(<list, tuple or comprehension>)`` (or a bare
+    ``lit(...)``): on pyspark 4 that is one py4j call per element."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and (getattr(node.func, "attr", None) == "lit" or getattr(node.func, "id", None) == "lit")
+        and node.args and isinstance(node.args[0], _SEQUENCE_NODES)
+    ]
+
+
+def test_no_lit_of_a_python_sequence():
+    """Constant arrays go through ``double_array_literal`` (one string
+    literal, constant-folded), never ``F.lit(list)``: the classifier's
+    65,536 weights cost ~30 s of driver time that way."""
+    planted = ast.parse(
+        "a = F.lit([1.0, 2.0])\n"
+        "b = F.lit((0.5,))\n"
+        "c = lit([float(w) for w in ws])\n"
+        "d = F.lit((1 << 3) - 1)\n"
+        "e = F.lit(x)\n"
+        "f = F.array(*[F.lit(q) for q in qs])\n"
+    )
+    assert _lit_of_sequence_calls(planted) == [1, 2, 3]
+    paths = [os.path.join(ROOT, "__spark_entry__.py")]
+    for d in ("ocr_spark", "jobs"):
+        for dirpath, _, files in os.walk(os.path.join(ROOT, d)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    found = {
+        os.path.relpath(p, ROOT): lines
+        for p in sorted(paths)
+        if (lines := _lit_of_sequence_calls(_parse(p)))
+    }
+    assert not found
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _plan(spark, "q1_pricing_summary")
     assert "LessThanOrEqual(l_shipdate" in plan  # PushedFilters
