@@ -69,8 +69,7 @@ def main() -> None:
     # localCheckpoint: the decontaminate plan (corpus tokenize + gram
     # explode + broadcast join + per-doc count) fans out to THREE actions
     # below (mix_contaminated write, mix write, mix_stats) — materialize it
-    # once instead of recomputing per action (same reason curate_job
-    # checkpoints its quality frame).
+    # once instead of recomputing per action.
     flags = decontaminate(
         docs, bench, n=args.ngram, min_overlaps=args.min_overlaps
     ).localCheckpoint()

@@ -10,7 +10,9 @@ from the table read back, so the docs are scanned and extracted once, and
 both return ``{table: rows}`` as counted by the writes (storage module
 docstring). :func:`run_pipeline` (throughput mode) overwrites each table
 with ``Catalog.write``; :func:`run_pipeline_checkpointed` writes each stage
-through storage.run_stage (per-partition manifest, resume).
+through storage.run_stage: the stage run is the resume unit, ``__pid``
+buckets are the layout and the per-bucket manifest metrics, and a re-run
+(at any bucket count) skips every completed stage.
 """
 
 from __future__ import annotations
@@ -88,10 +90,10 @@ def run_pipeline_checkpointed(
     run_id: str | None = None,
 ) -> dict[str, int]:
     """Checkpointed pipeline: every stage materializes to the catalog with a
-    per-partition manifest; re-running after a crash resumes from the first
-    incomplete partition of the first incomplete stage (F1/F2 semantics).
-    Returns {table: rows} like :func:`run_pipeline`; a resumed run takes
-    the completed buckets' rows from the manifest, never from the tables."""
+    per-bucket manifest; re-running after a crash skips the completed stages
+    and redoes the first incomplete one whole (F1/F2 semantics). Returns
+    {table: rows} like :func:`run_pipeline`; a resumed run takes the
+    completed stages' rows from the manifest, never from the tables."""
     rows = {"extracted": run_stage(
         catalog, "extracted", docs, extract_docs,
         n_partitions=n_partitions, run_id=run_id, lineage="docs",

@@ -81,7 +81,7 @@ MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("stage", T.StringType(), False),
         T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # completed | failed
+        T.StructField("status", T.StringType(), False),  # always "completed"
         T.StructField("rows_in", T.LongType(), False),
         T.StructField("rows_out", T.LongType(), False),
         T.StructField("errors", T.LongType(), False),

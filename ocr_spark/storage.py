@@ -12,12 +12,15 @@ Capabilities mirrored from the reference:
 
 * UPSERT idempotency (re-import updates the row; reference
   src/markdown_importer.py:202-210, src/embed_importer.py:276-289) → every
-  sink overwrites: :meth:`Catalog.write` replaces a whole table (the fused
-  ``run_pipeline`` and the curate/select/mix jobs), :func:`run_stage`
-  replaces each bucket it redoes (dynamic partition overwrite), so a re-run
-  replaces rows, never adds them.
+  sink overwrites whole: :meth:`Catalog.write` replaces a table (the fused
+  ``run_pipeline`` and the curate/select/mix jobs) and :func:`run_stage`
+  replaces its stage table in one static overwrite, so a re-run replaces
+  rows, never adds them.
 * Stage skipping / resume from any stage — /root/reference/run_pipeline.sh:52-64
-  → per-partition manifest + :func:`run_stage` pending-partition filtering.
+  → the manifest: a stage run is the commit and resume unit, and a stage
+  with completed manifest rows is skipped whole, so a re-run at another
+  bucket count is a no-op. ``__pid`` buckets are the table layout and the
+  metric grain, not the resume unit.
 * Per-item error isolation with success/failure counters —
   /root/reference/src/markdown_importer.py:216-219,234-272 → error-split
   writes + rows_in/rows_out/errors metrics per partition (north_rule),
@@ -120,8 +123,8 @@ class Catalog:
 
     def snapshot(self, name: str, snapshot_name: str) -> str:
         """CTAS-style snapshot of a table's CURRENT contents, PRESERVING its
-        partition layout (a ``__pid``-bucketed stage table restores bucketed,
-        so :func:`run_stage` keeps overwriting per bucket). Re-snapshotting
+        partition layout (a ``__pid``-bucketed stage table restores with
+        its ``{stage}/__pid=p`` layout). Re-snapshotting
         the same name overwrites (idempotent). On Iceberg this becomes a
         zero-copy tag/branch; here it is a parquet copy through Spark."""
         self._check_snapshot_name(snapshot_name)
@@ -200,69 +203,51 @@ class Catalog:
         return {r.partition_id: r.rows_out for r in m.select("partition_id", "rows_out").collect()}
 
 
-def partition_id_col(key_col: str, n_partitions: int) -> F.Column:
-    """Deterministic partition assignment: pmod(xxhash64(key), n)."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_partitions)).cast("int")
-
-
 def run_stage(
     catalog: Catalog,
     stage: str,
     input_df: DataFrame,
     transform,
-    key_col: str = "doc_id",
     n_partitions: int = 8,
     run_id: str | None = None,
     lineage: str | None = None,
     error_col: str | None = None,
 ) -> int:
-    """Run one checkpointed pipeline stage, resumable per partition.
-
-    * input rows are assigned a deterministic ``__pid`` bucket;
-    * buckets already ``completed`` in the manifest (same stage+lineage) are
-      skipped entirely — a re-run after a crash is a no-op for them, and a
-      stage with no pending bucket is not planned at all;
-    * ALL pending buckets run in ONE Spark job that writes
-      ``{stage}/__pid=p`` by dynamic partition overwrite; their manifest
-      rows land after the job commits. A crash before the manifest lands
-      redoes every pending bucket on the next run, overwriting whatever it
-      wrote, so the output stays duplicate-free; buckets completed by
-      earlier runs are untouched. ``transform`` must keep ``key_col`` so
-      ``__pid`` can be recomputed on its output.
-    * when ``error_col`` is set, rows with a non-null error value are split to
-      ``{stage}_errors`` (``__pid``-partitioned and overwritten per bucket
-      like the stage table, so a redone bucket never duplicates its error
-      rows) and counted in the manifest instead of failing the stage
-      (per-item error isolation, F3).
-
-    Each bucket's ``rows_in``/``rows_out``/``errors`` are observed (one
-    ``count_if(__pid == p)`` per pending bucket) on the input, as the
-    transform reads it, and on the output, during the stage write. Returns
-    the stage's rows: observed for the buckets run now, from the manifest
-    for the others. An empty stage has no bucket directories.
+    """Run one checkpointed pipeline stage; the stage run is the commit and
+    resume unit. A stage with completed manifest rows (same stage+lineage)
+    is skipped whole and its rows come from the manifest, at any
+    ``n_partitions``. Otherwise ONE Spark job overwrites ``{stage}`` as
+    ``__pid = pmod(xxhash64(doc_id), n)`` buckets (rows with a non-null
+    ``error_col`` go to ``{stage}_errors``, F3), observing each bucket's
+    ``rows_in``/``rows_out``/``errors``, and one manifest row per bucket
+    lands after it; a crash before that redoes the whole stage. Returns the
+    stage's rows. An empty stage has no bucket directories.
     """
+    if n_partitions < 1:
+        raise ValueError(f"n_partitions must be at least 1, got {n_partitions}")
     run_id = run_id or uuid.uuid4().hex[:12]
     lineage = lineage or stage + ":input"
     done = catalog.completed_partitions(stage, lineage)
-    pending = [p for p in range(n_partitions) if p not in done]
-    if not pending:
+    if done:
         return sum(done.values())
-    pid = partition_id_col(key_col, n_partitions)
+    pid = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_partitions)).cast("int")
+    buckets = range(n_partitions)
 
     def per_bucket(prefix: str, cond: F.Column) -> list[F.Column]:
-        return [F.count_if((F.col("__pid") == p) & cond).alias(f"{prefix}{p}") for p in pending]
+        return [F.count_if((F.col("__pid") == p) & cond).alias(f"{prefix}{p}") for p in buckets]
 
     seen_in, seen_out = Observation(), Observation()
-    sub = input_df.withColumn("__pid", pid).filter(F.col("__pid").isin(pending))
-    sub = sub.observe(seen_in, *per_bucket("in", F.lit(True)))
+    sub = input_df.withColumn("__pid", pid).observe(seen_in, *per_bucket("in", F.lit(True)))
     out = transform(sub.drop("__pid")).withColumn("__pid", pid)
     ok = F.lit(True) if error_col is None else F.col(error_col).isNull()
     out = out.observe(seen_out, *per_bucket("out", ok), *per_bucket("err", ~ok))
     good = out if error_col is None else out.filter(ok).drop(error_col)
-    _overwrite_buckets(good, catalog.path(stage))
+    good.write.mode("overwrite").partitionBy("__pid").parquet(catalog.path(stage))
     counts = {**seen_in.get, **seen_out.get}
-    if any(counts[f"err{p}"] for p in pending):
-        _overwrite_buckets(out.filter(~ok), catalog.path(stage + "_errors"))
+    if any(counts[f"err{p}"] for p in buckets):
+        out.filter(~ok).write.mode("overwrite").partitionBy("__pid").parquet(
+            catalog.path(stage + "_errors")
+        )
     catalog.append_manifest(
         [
             {
@@ -275,19 +260,7 @@ def run_stage(
                 "lineage": lineage,
                 "run_id": run_id,
             }
-            for p in pending
+            for p in buckets
         ]
     )
-    return sum(done.values()) + sum(counts[f"out{p}"] for p in pending)
-
-
-def _overwrite_buckets(df: DataFrame, path: str) -> None:
-    """Write ``df`` as ``path/__pid=p`` directories, replacing only the
-    buckets it holds (dynamic partition overwrite), so a redone bucket never
-    duplicates its earlier rows."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__pid")
-        .parquet(path)
-    )
+    return sum(counts[f"out{p}"] for p in buckets)

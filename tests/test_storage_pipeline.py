@@ -49,6 +49,22 @@ def test_run_stage_resume_after_crash(spark, catalog, monkeypatch):
     assert rows2 == 80
     assert catalog.manifest().count() == 4
     assert spans_of(catalog.read("extracted")) == spans_of(extract_docs(docs))
+    # a re-run at another bucket count is a no-op too: the completed stage
+    # is skipped whole, no bucket of the new layout is written again
+    rows8 = run_stage(catalog, "extracted", docs, extract_docs, n_partitions=8, lineage="docs")
+    out = catalog.read("extracted")
+    assert rows8 == out.count() == 80
+    assert out.select("doc_id").distinct().count() == 80
+    assert catalog.manifest().count() == 4
+
+
+@pytest.mark.parametrize("n_partitions", [0, -1])
+def test_run_stage_rejects_bucket_count_below_one(spark, catalog, n_partitions):
+    docs = corpus.generate_docs(spark, 3, seed=5, heavy_pct=0.0)
+    with pytest.raises(ValueError, match="n_partitions"):
+        run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=n_partitions)
+    assert not catalog.exists("extracted")
+    assert catalog.manifest().count() == 0
 
 
 def test_checkpointed_rerun_with_empty_buckets(spark, catalog):
@@ -144,4 +160,8 @@ def test_pipeline_end_to_end(spark, catalog, tmp_path):
     cp = {r.doc_id: str(r.problems) for r in ck["problems"].collect()}
     assert fp == cp
     # manifest covers 4 stages × 3 partitions
+    assert catalog.manifest().count() == 12
+    # a re-run at another bucket count skips every completed stage
+    assert run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=5) == rows
+    assert {name: catalog.read(name).count() for name in rows} == rows
     assert catalog.manifest().count() == 12
