@@ -14,9 +14,11 @@ Reads the interleaved docs table (input_hint shape), runs the 4-stage
 pipeline (extracted / questions / problems / embeddings), writes each stage
 to the catalog and prints its row count as the write counted it (no table
 is re-read to count it). ``extracted`` is written first and the other three
-stages are built from the written table, so the docs are scanned once.
-``--checkpointed`` uses the per-partition manifest + resume path
-(north_rule); a resumed stage's rows come from the manifest.
+stages are built from the written table, so the docs are scanned once; those
+three are written as concurrent Spark jobs, one driver thread each, and the
+rows print in stage order. ``--checkpointed`` uses the per-partition
+manifest + resume path (north_rule); a resumed stage's rows come from the
+manifest, and a run over other docs files rewrites every stage.
 
 On a cluster, pass the usual ``--master yarn|k8s:// --num-executors ...``
 to spark-submit; this script only builds the SparkSession from the ambient

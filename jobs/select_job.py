@@ -117,8 +117,9 @@ def main() -> None:
         ).filter(F.col("keep")).drop("keep")
     stats = {"n_input": n_input, "n_blocked": n_blocked, "n_lowquality": n_lowquality,
              "n_selected": catalog.write(selected, "selected")}
-    schema = ", ".join(f"{name} long" for name in stats)
-    catalog.write(spark.createDataFrame([tuple(stats.values())], schema), "select_stats")
+    # one JVM-side row: createDataFrame of a Python list starts Python workers
+    catalog.write(spark.range(1, numPartitions=1).select(
+        *(F.lit(n).cast("long").alias(name) for name, n in stats.items())), "select_stats")
     print(f"stats={stats}")
 
 

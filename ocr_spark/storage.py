@@ -29,16 +29,25 @@ Capabilities mirrored from the reference:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ocr_spark.schema import MANIFEST_SCHEMA
 
 MANIFEST_TABLE = "__manifest__"
+
+# Concurrent stages (plans/pipeline writes its derived stages from one thread
+# each) append to one manifest directory, and two appends to one parquet
+# directory share its ``_temporary`` dir: the first job to commit deletes it
+# under the other. So the process appends one at a time.
+_MANIFEST_APPEND = threading.Lock()
 
 
 class Catalog:
@@ -172,24 +181,22 @@ class Catalog:
     # ------------------------------------------------------------------
     # manifest
     # ------------------------------------------------------------------
+    def _manifest_rows(self, rows: list[dict]) -> DataFrame:
+        """``rows`` as a one-partition frame typed by ``MANIFEST_SCHEMA``,
+        built in the JVM from one JSON literal: ``createDataFrame`` of a
+        Python list would start a Python worker per default-parallelism
+        slice."""
+        return self.spark.range(1, numPartitions=1).select(
+            F.inline(F.from_json(F.lit(json.dumps(rows)), T.ArrayType(MANIFEST_SCHEMA))))
+
     def manifest(self) -> DataFrame:
         if not self.exists(MANIFEST_TABLE):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return self._manifest_rows([])
         return self.read(MANIFEST_TABLE)
 
     def append_manifest(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [
-                (
-                    r["stage"], int(r["partition_id"]), r["status"],
-                    int(r["rows_in"]), int(r["rows_out"]), int(r["errors"]),
-                    r.get("lineage"), r["run_id"],
-                )
-                for r in rows
-            ],
-            MANIFEST_SCHEMA,
-        )
-        df.write.mode("append").parquet(self.path(MANIFEST_TABLE))
+        with _MANIFEST_APPEND:
+            self._manifest_rows(rows).write.mode("append").parquet(self.path(MANIFEST_TABLE))
 
     def completed_partitions(self, stage: str, lineage: str | None = None) -> dict[int, int]:
         """``{partition_id: rows_out}`` of the stage's completed partitions."""

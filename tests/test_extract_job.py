@@ -1,9 +1,11 @@
 """extract_job end to end through its argv interface: throughput mode scans
-the docs once; both modes print row counts taken during the writes (a
-checkpointed run and its resume count no table); the fused and checkpointed
-catalogs hold the same rows, typed as ``ocr_spark.schema`` documents them; a
-fused re-run into a populated catalog replaces rows instead of adding them;
-an empty docs table gives four empty tables."""
+the docs once and starts the derived writes only after ``extracted`` is
+written; both modes print row counts taken during the writes (a checkpointed
+run and its resume count no table, and the manifest's per-bucket counts are
+the tables'); the fused and checkpointed catalogs hold the same rows, typed
+as ``ocr_spark.schema`` documents them; a fused re-run into a populated
+catalog replaces rows instead of adding them; an empty docs table gives four
+empty tables."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import os
 import re
 import shutil
 import sys
+import time
 from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
@@ -45,24 +48,28 @@ def _run_job(docs_dir: str, catalog: str, *extra: str) -> dict[str, int]:
 @pytest.fixture(scope="module")
 def runs(spark, tmp_path_factory):
     """One fused run, with every ``Catalog.write`` recording its input
-    files, and one checkpointed run, over the same 40 generated docs."""
+    files and when it started and finished, and one checkpointed run, over
+    the same 40 generated docs."""
     root = tmp_path_factory.mktemp("extract_job")
     docs_dir = str(root / "docs")
     corpus.generate_docs(spark, 40, seed=11, heavy_pct=0.0).write.parquet(docs_dir)
     fused, ck = str(root / "fused"), str(root / "checkpointed")
-    writes = []
+    writes, finished = [], {}
     write = Catalog.write
 
     def recording_write(self, df, name, *args, **kwargs):
-        writes.append((name, [_path(f) for f in df.inputFiles()]))
-        return write(self, df, name, *args, **kwargs)
+        writes.append((name, [_path(f) for f in df.inputFiles()], time.perf_counter()))
+        try:
+            return write(self, df, name, *args, **kwargs)
+        finally:
+            finished[name] = time.perf_counter()
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(Catalog, "write", recording_write)
         fused_rows = _run_job(docs_dir, fused)
     ck_rows = _run_job(docs_dir, ck, "--checkpointed", "--n-partitions", "4")
     return {"docs": docs_dir, "fused": fused, "checkpointed": ck, "writes": writes,
-            "fused_rows": fused_rows, "ck_rows": ck_rows}
+            "finished": finished, "fused_rows": fused_rows, "ck_rows": ck_rows}
 
 
 def _path(uri: str) -> str:
@@ -70,12 +77,18 @@ def _path(uri: str) -> str:
 
 
 def test_fused_mode_reads_the_docs_once(runs):
+    """``extracted`` is written first and finishes before any derived write
+    starts; the derived writes run concurrently, so their order is free."""
     docs = runs["docs"] + os.sep
     extracted = os.path.join(runs["fused"], "extracted") + os.sep
-    assert [name for name, _ in runs["writes"]] == STAGES
-    from_docs = [name for name, files in runs["writes"] if any(f.startswith(docs) for f in files)]
+    names = [name for name, _, _ in runs["writes"]]
+    assert names[0] == "extracted"
+    assert len(names) == len(STAGES) and set(names[1:]) == set(STAGES[1:])
+    assert all(runs["finished"]["extracted"] <= start for _, _, start in runs["writes"][1:])
+    from_docs = [name for name, files, _ in runs["writes"]
+                 if any(f.startswith(docs) for f in files)]
     assert from_docs == ["extracted"]
-    for name, files in runs["writes"][1:]:
+    for name, files, _ in runs["writes"][1:]:
         assert files and all(f.startswith(extracted) for f in files), name
 
 
@@ -133,6 +146,21 @@ def test_checkpointed_rows_come_from_the_writes(spark, runs, tmp_path):
         again = _run_job(runs["docs"], catalog, "--checkpointed", "--n-partitions", "4")
     tables = {stage: spark.read.parquet(os.path.join(catalog, stage)).count() for stage in STAGES}
     assert first == again == tables == dict.fromkeys(STAGES, 40)
+
+
+def test_manifest_counts_are_the_bucket_counts(spark, runs):
+    """Every manifest ``rows_out`` of the checkpointed run is its bucket's
+    row count in the written table."""
+    catalog = runs["checkpointed"]
+    manifest = spark.read.parquet(os.path.join(catalog, "__manifest__"))
+    assert manifest.count() == len(STAGES) * 4
+    for stage in STAGES:
+        table = spark.read.parquet(os.path.join(catalog, stage))
+        counted = {r["__pid"]: r["count"] for r in table.groupBy("__pid").count().collect()}
+        recorded = {r.partition_id: r.rows_out
+                    for r in manifest.filter(F.col("stage") == stage).collect()}
+        assert sorted(recorded) == list(range(4)), stage
+        assert {p: n for p, n in recorded.items() if n} == counted, stage
 
 
 def test_fused_rerun_replaces_changed_rows(spark, runs, tmp_path):

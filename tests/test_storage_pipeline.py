@@ -1,7 +1,9 @@
 """M4 tests: crash-resume via manifest, empty buckets and empty input,
-error split, end-to-end pipeline."""
+error split, end-to-end pipeline, concurrent derived stages, lineage."""
 
 from __future__ import annotations
+
+import threading
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -9,8 +11,9 @@ import pytest
 
 from ocr_spark import corpus
 from ocr_spark.operators.extract import extract_docs
+from ocr_spark.plans import pipeline
 from ocr_spark.plans.pipeline import run_pipeline, run_pipeline_checkpointed
-from ocr_spark.schema import DOC_SCHEMA
+from ocr_spark.schema import DOC_SCHEMA, MANIFEST_SCHEMA
 from ocr_spark.storage import Catalog, run_stage
 
 from .conftest import spans_of
@@ -165,3 +168,140 @@ def test_pipeline_end_to_end(spark, catalog, tmp_path):
     assert run_pipeline_checkpointed(catalog, docs, dim=32, n_partitions=5) == rows
     assert {name: catalog.read(name).count() for name in rows} == rows
     assert catalog.manifest().count() == 12
+
+
+STAGES = ["extracted", "questions", "problems", "embeddings"]
+
+
+def _docs_files(spark, tmp_path, n: int, seed: int):
+    """``n`` generated docs, written to parquet and read back."""
+    path = str(tmp_path / f"docs-{n}-{seed}")
+    corpus.generate_docs(spark, n, seed=seed, heavy_pct=0.0).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _rows(df) -> list[str]:
+    """A table's rows as sorted strings, bucket column dropped."""
+    return sorted(map(str, df.drop("__pid").collect()))
+
+
+def test_manifest_rows_round_trip_with_the_manifest_schema(spark, catalog):
+    rows = [
+        {"stage": "s'\"x", "partition_id": p, "status": "completed", "rows_in": 2**40 + p,
+         "rows_out": p, "errors": 1, "lineage": None if p else "docs@ab", "run_id": "r"}
+        for p in range(3)
+    ]
+    assert catalog.manifest().schema.simpleString() == MANIFEST_SCHEMA.simpleString()
+    catalog.append_manifest(rows)
+    m = catalog.manifest()
+    assert m.schema.simpleString() == MANIFEST_SCHEMA.simpleString()
+    assert sorted((r.asDict() for r in m.collect()), key=lambda r: r["partition_id"]) == rows
+
+
+def test_concurrent_manifest_appends_all_land(spark, catalog):
+    """More appending threads than cores, released together: every row
+    lands once (two unserialized appends share ``_temporary``)."""
+    n_threads = 8
+    start = threading.Barrier(n_threads, timeout=60)
+    errors = []
+
+    def append(t):
+        try:
+            start.wait()
+            catalog.append_manifest([
+                {"stage": f"s{t}", "partition_id": p, "status": "completed", "rows_in": p,
+                 "rows_out": p, "errors": 0, "lineage": None, "run_id": "r"}
+                for p in range(4)
+            ])
+        except Exception as exc:  # reported below, with the thread's stage
+            errors.append((t, exc))
+
+    threads = [threading.Thread(target=append, args=(t,)) for t in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    got = sorted((r.stage, r.partition_id) for r in catalog.manifest().collect())
+    assert got == sorted((f"s{t}", p) for t in range(n_threads) for p in range(4))
+
+
+@pytest.mark.parametrize("checkpointed", [False, True], ids=["fused", "checkpointed"])
+def test_derived_stages_run_concurrently(spark, catalog, monkeypatch, checkpointed):
+    """Each derived write waits at a 3-party barrier before it starts: the
+    run completes only if the three derived stages are in flight together."""
+    docs = corpus.generate_docs(spark, 12, seed=3, heavy_pct=0.0)
+    barrier = threading.Barrier(3, timeout=60)
+
+    def gated(orig, name_at):
+        def wrapper(*args, **kwargs):
+            if args[name_at] != "extracted":
+                barrier.wait()
+            return orig(*args, **kwargs)
+        return wrapper
+
+    if checkpointed:
+        monkeypatch.setattr(pipeline, "run_stage", gated(pipeline.run_stage, 1))
+        rows = run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=2)
+    else:
+        monkeypatch.setattr(Catalog, "write", gated(Catalog.write, 2))
+        rows = run_pipeline(catalog, docs, dim=8)
+    assert list(rows) == STAGES
+    assert rows == dict.fromkeys(STAGES, 12)
+
+
+def _failing_problems(monkeypatch):
+    def fail(df):
+        raise RuntimeError("problems failed")
+
+    monkeypatch.setattr(pipeline, "extract_problems", fail)
+
+
+def test_failed_derived_stage_raises_after_the_others_are_written(spark, catalog, monkeypatch):
+    docs = corpus.generate_docs(spark, 12, seed=4, heavy_pct=0.0)
+    _failing_problems(monkeypatch)
+    with pytest.raises(RuntimeError, match="problems failed"):
+        run_pipeline(catalog, docs, dim=8)
+    assert not catalog.exists("problems")
+    for name in ("extracted", "questions", "embeddings"):
+        assert catalog.read(name).count() == 12, name
+
+
+def test_checkpointed_rerun_writes_only_the_failed_stage(spark, catalog, monkeypatch, tmp_path):
+    docs = _docs_files(spark, tmp_path, 12, seed=4)
+    with monkeypatch.context() as mp:
+        _failing_problems(mp)
+        with pytest.raises(RuntimeError, match="problems failed"):
+            run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=3, run_id="r1")
+    by_stage = {r.stage: r["count"] for r in catalog.manifest().groupBy("stage").count().collect()}
+    assert by_stage == {"extracted": 3, "questions": 3, "embeddings": 3}
+
+    assert run_pipeline_checkpointed(catalog, docs, dim=8, n_partitions=3, run_id="r2") == \
+        dict.fromkeys(STAGES, 12)
+    runs = {(r.stage, r.run_id) for r in catalog.manifest().select("stage", "run_id").collect()}
+    assert runs == {(s, "r1") for s in ("extracted", "questions", "embeddings")} | {("problems", "r2")}
+    clean = Catalog(spark, str(tmp_path / "clean"))
+    run_pipeline_checkpointed(clean, docs, dim=8, n_partitions=3)
+    for name in STAGES:
+        assert _rows(catalog.read(name)) == _rows(clean.read(name)), name
+
+
+def test_checkpointed_lineage_follows_the_docs(spark, catalog, tmp_path):
+    """Other docs files into a completed catalog rewrite every stage; the
+    same files again are a no-op."""
+    first = _docs_files(spark, tmp_path, 10, seed=1)
+    assert run_pipeline_checkpointed(catalog, first, dim=8, n_partitions=4) == \
+        dict.fromkeys(STAGES, 10)
+    second = _docs_files(spark, tmp_path, 25, seed=2)
+    assert run_pipeline_checkpointed(catalog, second, dim=8, n_partitions=4) == \
+        dict.fromkeys(STAGES, 25)
+    n_manifest = catalog.manifest().count()
+    assert run_pipeline_checkpointed(catalog, second, dim=8, n_partitions=4) == \
+        dict.fromkeys(STAGES, 25)
+    assert catalog.manifest().count() == n_manifest == 2 * 4 * 4
+    assert spans_of(catalog.read("extracted")) == spans_of(extract_docs(second))
+    fused = Catalog(spark, str(tmp_path / "fused"))
+    run_pipeline(fused, second, dim=8)
+    for name in STAGES:
+        assert _rows(catalog.read(name)) == _rows(fused.read(name)), name
